@@ -188,6 +188,11 @@ object Bench {
     // the LAST thing this process writes.
     System.err.println("[bench-full] " + full)
     System.err.flush()
+    // stop every streaming query first: a query still active at
+    // spark.stop() logs a StateStore maintenance trace after the stop
+    try spark.streams.active.foreach(_.stop())
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] stopping streams failed: ${e.getMessage}") }
     try spark.stop()
     catch { case e: Throwable =>
       System.err.println(s"[bench] spark.stop failed: ${e.getMessage}") }

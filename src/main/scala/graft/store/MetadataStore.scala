@@ -105,15 +105,8 @@ class MetadataStore(spark: SparkSession, rootDir: String,
   /** Atomic pointer swap — commit point of every mutation. Only called with
     * the root lock held and v > currentVersion (see [[claimAndCommit]]).
     */
-  private def commit(v: Long): Unit = atomicWrite(root.resolve("CURRENT"), v.toString)
-
-  private def atomicWrite(target: Path, content: String): Unit = {
-    val tmp = root.resolve(s".${target.getFileName}.tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  private def commit(v: Long): Unit =
+    graft.util.FsUtil.atomicWrite(root.resolve("CURRENT"), v.toString)
 
   /** Cross-instance critical section: a JVM-wide monitor for instances in
     * this process (java.nio FileLocks are held per-process — a second
@@ -165,6 +158,49 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     val maxSeg = (listVersions("base-") ++ listVersions("delta-")).maxOption.getOrElse(0L)
     math.max(currentVersion, maxSeg) + 1
   }
+
+  /** The optimistic stage → claim → publish loop every segment write runs
+    * through. Each attempt takes [[nextVersion]], has `stage(dir, v)` write
+    * the `kind` segment for version v into a uniquely named hidden
+    * `.staging-<kind>-<v>-<uuid8>` directory OUTSIDE the lock (the expensive
+    * part), then publishes + advances the pointer in one short critical
+    * section ([[claimAndCommit]], with `fresh(v)` re-checked under the root
+    * lock). A lost claim re-stages under a fresh version. `stage` answers
+    * `Right(result)` to commit, or `Left(result)` to return without
+    * committing (an empty batch, a failed precondition). The staging
+    * directory is removed on EVERY exit that did not commit — declined,
+    * lost claim, or an exception thrown by the stage (an executor failure,
+    * an audit rejection) — before the result or exception propagates, so
+    * no write leaves `.staging-*` debris behind.
+    */
+  @scala.annotation.tailrec
+  private def commitSegment[A](kind: String, fresh: Long => Boolean = _ => true)
+                              (stage: (Path, Long) => Either[A, A]): A = {
+    val v = nextVersion
+    val staging = root.resolve(
+      s".staging-$kind-$v-${java.util.UUID.randomUUID.toString.take(8)}")
+    var committed = false
+    val outcome =
+      try stage(staging, v) match {
+        case Left(skipped) => Some(skipped)
+        case Right(out) =>
+          committed = claimAndCommit(staging, kind, v, fresh(v))
+          if (committed) Some(out) else None
+      } finally {
+        if (!committed) graft.util.FsUtil.deleteRecursively(staging)
+      }
+    outcome match {
+      case Some(out) => out
+      case None => commitSegment(kind, fresh)(stage)
+    }
+  }
+
+  /** A long metric of an `observe()` audit (a sum over no rows is null → 0). */
+  private def observedLong(metrics: Map[String, Any], name: String): Long =
+    metrics.get(name) match {
+      case Some(n: Number) => n.longValue
+      case _ => 0L
+    }
 
   /** Publish a staged segment directory: atomic rename into its final name.
     * Combined with [[nextVersion]], a segment is either fully present under
@@ -401,28 +437,19 @@ class MetadataStore(spark: SparkSession, rootDir: String,
   def upsertIf(entry: MetadataEntry, expectedVersion: Option[Long]): Boolean =
     this.synchronized {
       val normalized = Validation.normalize(entry, clock)
-      var outcome: Option[Boolean] = None
-      while (outcome.isEmpty) {
-        if (versionOf(entry.id) != expectedVersion) outcome = Some(false)
-        else {
-          val v = nextVersion
-          val staging = root.resolve(
-            s".staging-delta-$v-${java.util.UUID.randomUUID.toString.take(8)}")
-          // driver-side stage (one entry — see writeDelta); protocol unchanged
-          DirectParquet.writeRows(spark, staging, deltaSchema,
-            Seq(deltaRow(normalized, v, "upsert")))
-          if (claimAndCommit(staging, "delta", v,
-              fresh = versionOf(entry.id) == expectedVersion))
-            outcome = Some(true)
+      // a lost claim means either the version was claimed by an unrelated
+      // writer (re-stage fresh) or this id changed underneath us (the next
+      // attempt's pre-check returns false)
+      commitSegment("delta", fresh = _ => versionOf(entry.id) == expectedVersion) {
+        (staging, v) =>
+          if (versionOf(entry.id) != expectedVersion) Left(false)
           else {
-            graft.util.FsUtil.deleteRecursively(staging)
-            // either the version was claimed by an unrelated writer
-            // (loop: re-stage fresh) or this id changed underneath us
-            // (the next pre-check returns false)
+            // driver-side stage (one entry — see writeDelta); protocol unchanged
+            DirectParquet.writeRows(spark, staging, deltaSchema,
+              Seq(deltaRow(normalized, v, "upsert")))
+            Right(true)
           }
-        }
       }
-      outcome.get
     }
 
   /** Batch upsert: validate + normalize every entry, then write ONE delta
@@ -477,39 +504,21 @@ class MetadataStore(spark: SparkSession, rootDir: String,
       .observe(audit,
         sum(when(!Validation.validColumn, 1L).otherwise(0L)).as("invalid"),
         count(lit(1)).as("rows"))
-    var committed = false
-    while (!committed) {
-      val v = nextVersion
-      val staging = root.resolve(
-        s".staging-delta-$v-${java.util.UUID.randomUUID.toString.take(8)}")
-      // Staging lifetime is bounded by the finally: ANY exit that did not
-      // commit — invalid batch, empty batch, lost CAS, or an executor/
-      // serialization failure thrown by the write or audit.get — removes the
-      // .staging-delta-* directory before the exception (or return)
-      // propagates. deleteRecursively no-ops on a missing path, so the
-      // empty-batch return path is safe to route through it too.
-      try {
-        deduped.withColumn(VersionCol, lit(v)).withColumn(OpCol, lit("upsert"))
-          .write.mode("overwrite").parquet(staging.toString)
-        // Observation latches the FIRST action's metrics — validity and count
-        // are content-based, so a CAS-retry re-write needs no re-audit. `get`
-        // blocks until the (already-finished) write's metrics are delivered.
-        val metrics = audit.get
-        def metricLong(name: String): Long = metrics.get(name) match {
-          case Some(n: Number) => n.longValue // sum over an empty batch is null
-          case _ => 0L
-        }
-        val invalid = metricLong("invalid")
-        val rows = metricLong("rows")
-        if (invalid > 0)
-          throw new IllegalArgumentException(
-            s"upsertAll batch rejected: $invalid invalid entr${if (invalid == 1) "y" else "ies"} " +
-              "(required fields empty, negative counts, or malformed targetUri) — nothing committed")
-        if (rows == 0L) return
-        committed = claimAndCommit(staging, "delta", v)
-      } finally {
-        if (!committed) graft.util.FsUtil.deleteRecursively(staging)
-      }
+    // an invalid or empty batch leaves through commitSegment's cleanup, so
+    // its staged segment never outlives the call
+    commitSegment("delta") { (staging, v) =>
+      deduped.withColumn(VersionCol, lit(v)).withColumn(OpCol, lit("upsert"))
+        .write.mode("overwrite").parquet(staging.toString)
+      // Observation latches the FIRST action's metrics — validity and count
+      // are content-based, so a CAS-retry re-write needs no re-audit. `get`
+      // blocks until the (already-finished) write's metrics are delivered.
+      val metrics = audit.get
+      val invalid = observedLong(metrics, "invalid")
+      if (invalid > 0)
+        throw new IllegalArgumentException(
+          s"upsertAll batch rejected: $invalid invalid entr${if (invalid == 1) "y" else "ies"} " +
+            "(required fields empty, negative counts, or malformed targetUri) — nothing committed")
+      if (observedLong(metrics, "rows") == 0L) Left(()) else Right(())
     }
   }
 
@@ -609,34 +618,20 @@ class MetadataStore(spark: SparkSession, rootDir: String,
         sum(when(col(OpCol) === "upsert" && !Validation.validColumn, 1L)
           .otherwise(0L)).as("invalid"))
     try {
-      var committed = false
-      var stats: MetadataStore.MergeStats = null
-      while (!committed) {
-        val v = nextVersion
-        val staging = root.resolve(
-          s".staging-delta-$v-${java.util.UUID.randomUUID.toString.take(8)}")
-        try {
-          all.drop("_arm").withColumn(VersionCol, lit(v))
-            .write.mode("overwrite").parquet(staging.toString)
-          // metrics latch on the FIRST action; a CAS-retry re-write (only
-          // the version literal changes) needs no re-audit
-          val m = audit.get
-          def mLong(name: String): Long = m.get(name) match {
-            case Some(n: Number) => n.longValue
-            case _ => 0L
-          }
-          val invalid = mLong("invalid")
-          require(invalid == 0L,
-            s"merge rejected: $invalid invalid merged row(s) — nothing committed")
-          stats = MetadataStore.MergeStats(
-            mLong("inserted"), mLong("updated"), mLong("deleted"))
-          if (stats.inserted + stats.updated + stats.deleted == 0L) return stats
-          committed = claimAndCommit(staging, "delta", v)
-        } finally {
-          if (!committed) graft.util.FsUtil.deleteRecursively(staging)
-        }
+      commitSegment("delta") { (staging, v) =>
+        all.drop("_arm").withColumn(VersionCol, lit(v))
+          .write.mode("overwrite").parquet(staging.toString)
+        // metrics latch on the FIRST action; a CAS-retry re-write (only
+        // the version literal changes) needs no re-audit
+        val m = audit.get
+        val invalid = observedLong(m, "invalid")
+        require(invalid == 0L,
+          s"merge rejected: $invalid invalid merged row(s) — nothing committed")
+        val stats = MetadataStore.MergeStats(observedLong(m, "inserted"),
+          observedLong(m, "updated"), observedLong(m, "deleted"))
+        if (stats.inserted + stats.updated + stats.deleted == 0L) Left(stats)
+        else Right(stats)
       }
-      stats
     } finally {
       // release the eager checkpoint's block-manager storage
       j.queryExecution.analyzed match {
@@ -703,15 +698,10 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * rows, so an incremental CDC replay across it would diverge).
     */
   def drop(): Unit = this.synchronized {
-    var committed = false
-    while (!committed) {
-      val v = nextVersion
-      val staging = root.resolve(
-        s".staging-base-$v-${java.util.UUID.randomUUID.toString.take(8)}")
+    commitSegment("base") { (staging, _) =>
       current.limit(0).toDF().write.mode("overwrite").parquet(staging.toString)
       Files.writeString(staging.resolve(TruncateMarker), "truncated")
-      committed = claimAndCommit(staging, "base", v)
-      if (!committed) graft.util.FsUtil.deleteRecursively(staging)
+      Right(())
     }
   }
 
@@ -857,7 +847,7 @@ class MetadataStore(spark: SparkSession, rootDir: String,
             graft.util.FsUtil.deleteRecursively(root.resolve(name))
           }
           if (anchor > retentionFloor)
-            atomicWrite(root.resolve(VacuumFloorFile), anchor.toString)
+            graft.util.FsUtil.atomicWrite(root.resolve(VacuumFloorFile), anchor.toString)
           doomed.map(_._2).sorted
       }
     }
@@ -987,21 +977,16 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * just requires one recompaction).
     */
   def compact(): Unit = this.synchronized {
-    var committed = false
-    while (!committed) {
-      // A base SHADOWS every older segment, so — unlike a delta — it may
-      // only commit if NOTHING landed after its snapshot: true compare-and-
-      // swap. The snapshot folds in every published segment (committed or
-      // not: a published-but-unpointed orphan from a crashed writer is
-      // complete data — publication is the durability point, the pointer the
-      // visibility point — and our commit would adopt it into the read
-      // window, so shadowing it without folding it would lose the write).
-      val snapV = math.max(currentVersion,
-        (listVersions("base-") ++ listVersions("delta-")).maxOption.getOrElse(0L))
-      val v = snapV + 1
-      val snap = resolved(None, None, Some(snapV))
-      val staging = root.resolve(
-        s".staging-base-$v-${java.util.UUID.randomUUID.toString.take(8)}")
+    // A base SHADOWS every older segment, so — unlike a delta — it may
+    // only commit if NOTHING landed after its snapshot: true compare-and-
+    // swap. The snapshot at v − 1 (= nextVersion − 1) folds in every
+    // published segment (committed or not: a published-but-unpointed orphan
+    // from a crashed writer is complete data — publication is the
+    // durability point, the pointer the visibility point — and our commit
+    // would adopt it into the read window, so shadowing it without folding
+    // it would lose the write).
+    commitSegment("base", fresh = v => nextVersion <= v) { (staging, v) =>
+      val snap = resolved(None, None, Some(v - 1))
       if (numBuckets > 0) {
         snap.withColumn(BucketCol, pmod(xxhash64(col("id")), lit(numBuckets.toLong)).cast("int"))
           .write.partitionBy(BucketCol).mode("overwrite").parquet(staging.toString)
@@ -1010,12 +995,8 @@ class MetadataStore(spark: SparkSession, rootDir: String,
         // reads prune with the WRITTEN bucket count, whatever this store is
         // constructed with later
         Files.writeString(staging.resolve(BucketCountFile), numBuckets.toString)
-        ()
       } else snap.write.mode("overwrite").parquet(staging.toString)
-      committed = claimAndCommit(staging, "base", v,
-        fresh = currentVersion <= snapV &&
-          (listVersions("base-") ++ listVersions("delta-")).maxOption.getOrElse(0L) <= snapV)
-      if (!committed) graft.util.FsUtil.deleteRecursively(staging)
+      Right(())
     }
   }
 
@@ -1039,41 +1020,25 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * the Dataset [[upsertAll]], [[merge]]).
     */
   private def writeDelta(entries: Seq[MetadataEntry], op: String): Unit = this.synchronized {
-    var committed = false
-    while (!committed) {
-      val v = nextVersion
-      val staging = root.resolve(
-        s".staging-delta-$v-${java.util.UUID.randomUUID.toString.take(8)}")
-      try {
-        DirectParquet.writeRows(spark, staging, deltaSchema,
-          entries.map(deltaRow(_, v, op)))
-        committed = claimAndCommit(staging, "delta", v)
-      } finally {
-        if (!committed) graft.util.FsUtil.deleteRecursively(staging)
-      }
+    commitSegment("delta") { (staging, v) =>
+      DirectParquet.writeRows(spark, staging, deltaSchema, entries.map(deltaRow(_, v, op)))
+      Right(())
     }
   }
 
   /** Executor-side delta write — bulk loads never pass through the driver.
     *
-    * Optimistic cross-instance concurrency: the delta stages under a unique
-    * name OUTSIDE the lock (the expensive part), then publish + pointer
-    * advance run as one short critical section ([[claimAndCommit]]). If
-    * another store instance on the same root claimed the version first, the
-    * stage is discarded and re-written under a fresh version — concurrent
+    * Optimistic cross-instance concurrency ([[commitSegment]]): if another
+    * store instance on the same root claimed the version first, the stage
+    * is discarded and re-written under a fresh version — concurrent
     * writers all succeed (the reference tolerates concurrent index
     * creation, app.py:101-109) and no mutation is ever silently lost.
     */
   private def writeDeltaDF(df: DataFrame, op: String): Unit = this.synchronized {
-    var committed = false
-    while (!committed) {
-      val v = nextVersion
-      val staging = root.resolve(
-        s".staging-delta-$v-${java.util.UUID.randomUUID.toString.take(8)}")
+    commitSegment("delta") { (staging, v) =>
       df.withColumn(VersionCol, lit(v)).withColumn(OpCol, lit(op))
         .write.mode("overwrite").parquet(staging.toString)
-      committed = claimAndCommit(staging, "delta", v)
-      if (!committed) graft.util.FsUtil.deleteRecursively(staging)
+      Right(())
     }
   }
 }

@@ -70,13 +70,8 @@ object PairCommit {
   }
 
   /** Atomic manifest swap — the commit point of the pair. */
-  private def swapManifest(root: String, m: Manifest): Unit = {
-    val tmp = Paths.get(root, ".MANIFEST.tmp")
-    Files.writeString(tmp, s"${m.storeVersion} ${m.histGen}")
-    Files.move(tmp, manifestPath(root), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    ()
-  }
+  private def swapManifest(root: String, m: Manifest): Unit =
+    graft.util.FsUtil.atomicWrite(manifestPath(root), s"${m.storeVersion} ${m.histGen}")
 
   /** Stage a directory's final rename — the publish half of the two-rename
     * discipline. */

@@ -1031,57 +1031,14 @@ object EventStream {
     * compact segment plus every batch in `(horizon, upToBatch]` into ONE
     * `batch=-1` segment by the plain (day, key) re-sum — exact longs, so
     * the compacted fold hash-matches the uncompacted fold and a fresh
-    * recompute (oracle-gated in e21) — then advance the horizon marker
-    * and sweep the folded directories (stale sub-horizon replays are
-    * swept without re-folding). Same crash rule: the folded segment
-    * stages OUTSIDE `batches/`; a crash before the deletes leaves the log
-    * untouched, after them the staging copy is the recovery source.
-    * Single-writer; `upToBatch` must lie below the stream's committed
-    * checkpoint offset. Returns directories folded or swept.
+    * recompute (oracle-gated in e21). Lifecycle, crash rule and
+    * `upToBatch` contract: [[compactBatchLog]]. Returns directories
+    * folded or swept.
     */
   def compactTopKCountLog(spark: SparkSession, logDir: String,
-                          upToBatch: Long): Int = {
-    val horizon = idfCompactionHorizon(logDir)
-    val batchesDir = java.nio.file.Paths.get(logDir, "batches")
-    def batchId(p: java.nio.file.Path): Option[Long] = {
-      val n = p.getFileName.toString
-      if (n.startsWith("batch=")) scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-      else None
-    }
-    val dirs = graft.util.FsUtil.listDir(batchesDir)(
-      _.flatMap(p => batchId(p).map(p -> _)).toSeq)
-    val stale = dirs.filter { case (_, id) => id >= 0 && id <= horizon }
-    val fold = dirs.filter { case (_, id) => id > horizon && id <= upToBatch }
-    if (fold.isEmpty && stale.isEmpty) return 0
-    val staging = s"$logDir/compact-stage"
-    if (fold.nonEmpty) {
-      spark.read.parquet(s"$logDir/batches")
-        .where((col("batch") > horizon && col("batch") <= upToBatch) ||
-          col("batch") === -1L)
-        .groupBy("day", "key").agg(sum(col("cnt")).as("cnt"))
-        .coalesce(1)
-        .write.mode("overwrite").parquet(staging)
-    }
-    (stale ++ fold).foreach { case (p, _) =>
-      graft.util.FsUtil.deleteRecursively(p)
-    }
-    if (fold.nonEmpty) {
-      graft.util.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(s"$logDir/batches/batch=-1"))
-      // the staged fold IS the new segment — promote it with one atomic
-      // rename (r18) instead of a second read-and-rewrite job; the staging
-      // dir was fully written before any delete, so the crash windows are
-      // unchanged (single-writer maintenance contract)
-      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-        java.nio.file.Paths.get(s"$logDir/batches/batch=-1"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(logDir, "_compacted_up_to"),
-        math.max(horizon, upToBatch).toString)
-    }
-    spark.catalog.refreshByPath(s"$logDir/batches")
-    stale.length + fold.length
-  }
+                          upToBatch: Long): Int =
+    compactBatchLog(spark, s"$logDir/batches", logDir, s"$logDir/compact-stage", upToBatch)(
+      _.groupBy("day", "key").agg(sum(col("cnt")).as("cnt")))
 
   /** Streaming IDF-delta maintenance — the q8 scoring statistic kept
     * current by an APPEND-ONLY ingest stream, the way ES's IDF tracks
@@ -1265,6 +1222,68 @@ object EventStream {
     else -1L
   }
 
+  /** The compaction lifecycle every `batch=<id>` log shares
+    * ([[compactIdfDeltaLog]], [[compactTopKCountLog]], [[compactSumLog]],
+    * [[compactSignatureIndexLog]]); each supplies only its paths and its
+    * `fold`, which maps the slice — the `batch=-1` segment plus every batch
+    * in `(horizon, upToBatch]` — to the new segment's rows. In order: read
+    * the horizon marker under `markerDir`; list the `batch=` directories of
+    * `batchesDir`, splitting stale sub-horizon replays (swept without
+    * re-folding) from the batches to fold; stage the fold OUTSIDE
+    * `batchesDir`; delete the stale and folded directories and the old
+    * segment; promote the staging dir to `batch=-1`; advance the marker;
+    * refresh the path's file-status cache.
+    *
+    * Crash discipline (the ivfCompactSmallFiles rule): the folded segment
+    * is fully staged before any delete, so a crash before the deletes
+    * leaves the log untouched, and a crash after them leaves the staging
+    * copy as the recovery source (re-run the final move). The marker is
+    * replaced atomically, so no crash leaves it empty or truncated.
+    * Single-writer maintenance op; `upToBatch` must lie BELOW the stream's
+    * committed checkpoint offset — the replay protection is the horizon
+    * filter plus the checkpoint's guarantee that a replayed batch id
+    * re-receives its original content. Returns the number of batch
+    * directories folded or swept.
+    */
+  private def compactBatchLog(spark: SparkSession, batchesDir: String, markerDir: String,
+                              staging: String, upToBatch: Long)
+                             (fold: DataFrame => DataFrame): Int = {
+    val horizon = idfCompactionHorizon(markerDir)
+    def batchId(p: java.nio.file.Path): Option[Long] = {
+      val n = p.getFileName.toString
+      if (n.startsWith("batch=")) scala.util.Try(n.stripPrefix("batch=").toLong).toOption
+      else None
+    }
+    val dirs = graft.util.FsUtil.listDir(java.nio.file.Paths.get(batchesDir))(
+      _.flatMap(p => batchId(p).map(p -> _)).toSeq)
+    val stale = dirs.filter { case (_, id) => id >= 0 && id <= horizon }
+    val folded = dirs.filter { case (_, id) => id > horizon && id <= upToBatch }
+    if (folded.isEmpty && stale.isEmpty) return 0
+    if (folded.nonEmpty) {
+      fold(spark.read.parquet(batchesDir)
+          .where((col("batch") > horizon && col("batch") <= upToBatch) ||
+            col("batch") === -1L))
+        .coalesce(1).write.mode("overwrite").parquet(staging)
+    }
+    (stale ++ folded).foreach { case (p, _) =>
+      graft.util.FsUtil.deleteRecursively(p)
+    }
+    if (folded.nonEmpty) {
+      val segment = java.nio.file.Paths.get(batchesDir, "batch=-1")
+      graft.util.FsUtil.deleteRecursively(segment)
+      // the staged fold IS the new segment — promote it with one atomic
+      // rename (r18) instead of a second read-and-rewrite job; the staging
+      // dir was fully written before any delete, so the crash windows are
+      // unchanged (single-writer maintenance contract)
+      java.nio.file.Files.move(java.nio.file.Paths.get(staging), segment,
+        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+      graft.util.FsUtil.atomicWrite(java.nio.file.Paths.get(markerDir, "_compacted_up_to"),
+        math.max(horizon, upToBatch).toString)
+    }
+    spark.catalog.refreshByPath(batchesDir)
+    stale.length + folded.length
+  }
+
   /** Compact the IDF delta log — v18's small-file discipline applied to
     * the stats log: [[streamIdfDeltaFold]] accretes one `batch=<id>/`
     * directory per micro-batch forever, and though the fold is order-free
@@ -1273,125 +1292,39 @@ object EventStream {
     * segment plus every batch in `(horizon, upToBatch]` into ONE
     * `batch=-1` segment — per-term `d_df` sums plus the summed row-count
     * contribution, both exact longs, so the compacted fold hash-matches
-    * the uncompacted fold and a fresh recompute (oracle-gated in e16) —
-    * then advances the horizon marker and deletes the folded directories
-    * (stale sub-horizon replays are swept without re-folding).
-    *
-    * Crash discipline (the ivfCompactSmallFiles rule): the folded segment
-    * stages OUTSIDE `batches/` first; a crash before the deletes leaves
-    * the log untouched, and a crash after them leaves the staging copy as
-    * the recovery source (re-run the final move). Single-writer
-    * maintenance op. `upToBatch` must lie BELOW the stream's committed
-    * checkpoint offset — the replay protection is the horizon filter plus
-    * the checkpoint's guarantee that a replayed batch id re-receives its
-    * original content. Returns the number of batch directories folded or
-    * swept.
+    * the uncompacted fold and a fresh recompute (oracle-gated in e16).
+    * Lifecycle, crash rule and `upToBatch` contract: [[compactBatchLog]].
+    * Returns the number of batch directories folded or swept.
     */
   def compactIdfDeltaLog(spark: SparkSession, deltaDir: String,
-                         upToBatch: Long): Int = {
-    val horizon = idfCompactionHorizon(deltaDir)
-    val batchesDir = java.nio.file.Paths.get(deltaDir, "batches")
-    def batchId(p: java.nio.file.Path): Option[Long] = {
-      val n = p.getFileName.toString
-      if (n.startsWith("batch=")) scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-      else None
-    }
-    val dirs = graft.util.FsUtil.listDir(batchesDir)(
-      _.flatMap(p => batchId(p).map(p -> _)).toSeq)
-    val stale = dirs.filter { case (_, id) => id >= 0 && id <= horizon }
-    val fold = dirs.filter { case (_, id) => id > horizon && id <= upToBatch }
-    if (fold.isEmpty && stale.isEmpty) return 0
-    val staging = s"$deltaDir/compact-stage"
-    if (fold.nonEmpty) {
-      val slice = spark.read.parquet(s"$deltaDir/batches")
-        .where((col("batch") > horizon && col("batch") <= upToBatch) ||
-          col("batch") === -1L)
+                         upToBatch: Long): Int =
+    compactBatchLog(spark, s"$deltaDir/batches", deltaDir, s"$deltaDir/compact-stage",
+        upToBatch) { slice =>
       // per-term membership sums; ONE row-count contribution per source
       // batch (d_n rides every term row of its batch — the batch axis
       // dedupes it), re-attached to every folded term row
       val dDf = slice.groupBy("term").agg(sum("d_df").as("d_df"))
       val dN = slice.select(col("batch"), col("d_n")).distinct()
         .agg(coalesce(sum("d_n"), lit(0L))).head.getLong(0)
-      dDf.withColumn("d_n", lit(dN)).coalesce(1)
-        .write.mode("overwrite").parquet(staging)
+      dDf.withColumn("d_n", lit(dN))
     }
-    (stale ++ fold).foreach { case (p, _) =>
-      graft.util.FsUtil.deleteRecursively(p)
-    }
-    if (fold.nonEmpty) {
-      graft.util.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(s"$deltaDir/batches/batch=-1"))
-      // the staged fold IS the new segment — promote it with one atomic
-      // rename (r18) instead of a second read-and-rewrite job; the staging
-      // dir was fully written before any delete, so the crash windows are
-      // unchanged (single-writer maintenance contract)
-      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-        java.nio.file.Paths.get(s"$deltaDir/batches/batch=-1"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(deltaDir, "_compacted_up_to"),
-        math.max(horizon, upToBatch).toString)
-    }
-    spark.catalog.refreshByPath(s"$deltaDir/batches")
-    stale.length + fold.length
-  }
 
   /** Compact a GENERIC per-key sum log — the e16 lifecycle for any delta
     * log whose rows are (keys..., sums...) with no per-batch scalar (the
     * classifier count log's (token, pc, nc) shape): fold the compact
     * segment plus every batch in `(horizon, upToBatch]` into ONE
     * `batch=-1` segment by groupBy(keys).sum(sums) — exact longs, so the
-    * compacted fold hash-matches the uncompacted fold — then advance the
-    * horizon marker and sweep folded and stale directories. Same staging
-    * crash rule, single-writer contract, and below-checkpoint `upToBatch`
-    * requirement as [[compactIdfDeltaLog]] (which stays bespoke for its
-    * per-batch `d_n` scalar, as does [[compactTopKCountLog]] for its
-    * pruning semantics). Returns directories folded or swept.
+    * compacted fold hash-matches the uncompacted fold. The lifecycle is
+    * [[compactBatchLog]]'s, shared with [[compactIdfDeltaLog]] (whose fold
+    * re-attaches its per-batch `d_n` scalar) and [[compactTopKCountLog]]
+    * (a fixed (day, key) re-sum). Returns directories folded or swept.
     */
   def compactSumLog(spark: SparkSession, deltaDir: String, upToBatch: Long,
-                    keyCols: Seq[String], sumCols: Seq[String]): Int = {
-    val horizon = idfCompactionHorizon(deltaDir)
-    val batchesDir = java.nio.file.Paths.get(deltaDir, "batches")
-    def batchId(p: java.nio.file.Path): Option[Long] = {
-      val n = p.getFileName.toString
-      if (n.startsWith("batch=")) scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-      else None
-    }
-    val dirs = graft.util.FsUtil.listDir(batchesDir)(
-      _.flatMap(p => batchId(p).map(p -> _)).toSeq)
-    val stale = dirs.filter { case (_, id) => id >= 0 && id <= horizon }
-    val fold = dirs.filter { case (_, id) => id > horizon && id <= upToBatch }
-    if (fold.isEmpty && stale.isEmpty) return 0
-    val staging = s"$deltaDir/compact-stage"
-    if (fold.nonEmpty) {
-      spark.read.parquet(s"$deltaDir/batches")
-        .where((col("batch") > horizon && col("batch") <= upToBatch) ||
-          col("batch") === -1L)
-        .groupBy(keyCols.map(col): _*)
-        .agg(sum(sumCols.head).as(sumCols.head),
-          sumCols.tail.map(c => sum(c).as(c)): _*)
-        .coalesce(1).write.mode("overwrite").parquet(staging)
-    }
-    (stale ++ fold).foreach { case (p, _) =>
-      graft.util.FsUtil.deleteRecursively(p)
-    }
-    if (fold.nonEmpty) {
-      graft.util.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(s"$deltaDir/batches/batch=-1"))
-      // the staged fold IS the new segment — promote it with one atomic
-      // rename (r18) instead of a second read-and-rewrite job; the staging
-      // dir was fully written before any delete, so the crash windows are
-      // unchanged (single-writer maintenance contract)
-      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-        java.nio.file.Paths.get(s"$deltaDir/batches/batch=-1"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(deltaDir, "_compacted_up_to"),
-        math.max(horizon, upToBatch).toString)
-    }
-    spark.catalog.refreshByPath(s"$deltaDir/batches")
-    stale.length + fold.length
-  }
+                    keyCols: Seq[String], sumCols: Seq[String]): Int =
+    compactBatchLog(spark, s"$deltaDir/batches", deltaDir, s"$deltaDir/compact-stage",
+        upToBatch)(
+      _.groupBy(keyCols.map(col): _*)
+        .agg(sum(sumCols.head).as(sumCols.head), sumCols.tail.map(c => sum(c).as(c)): _*))
 
   /** Horizon-aware read of a streamed signature index ([[streamSignatureIngest]]'s
     * layout: `batch=<id>/` dirs directly under the index root, base and
@@ -1412,54 +1345,15 @@ object EventStream {
     * UNION (rows, not sums — concatenation is trivially order-free, so
     * compaction is optional by algebra and purely physical). Rewrites the
     * base segment plus every batch in `(horizon, upToBatch]` into ONE
-    * `batch=-1` segment (row-identical by construction), advances the
-    * horizon marker, sweeps folded and stale directories. Same staging
-    * crash rule and single-writer contract as [[compactIdfDeltaLog]];
-    * `upToBatch` must lie below the stream's committed checkpoint offset.
+    * `batch=-1` segment (row-identical by construction). The staging dir
+    * sits beside the index root, since the batches live directly under it.
+    * Lifecycle, crash rule and `upToBatch` contract: [[compactBatchLog]].
     * Returns the number of directories folded or swept.
     */
   def compactSignatureIndexLog(spark: SparkSession, indexDir: String,
-                               upToBatch: Long): Int = {
-    val horizon = idfCompactionHorizon(indexDir)
-    val root = java.nio.file.Paths.get(indexDir)
-    def batchId(p: java.nio.file.Path): Option[Long] = {
-      val n = p.getFileName.toString
-      if (n.startsWith("batch=")) scala.util.Try(n.stripPrefix("batch=").toLong).toOption
-      else None
-    }
-    val dirs = graft.util.FsUtil.listDir(root)(
-      _.flatMap(p => batchId(p).map(p -> _)).toSeq)
-    val stale = dirs.filter { case (_, id) => id >= 0 && id <= horizon }
-    val fold = dirs.filter { case (_, id) => id > horizon && id <= upToBatch }
-    if (fold.isEmpty && stale.isEmpty) return 0
-    val staging = s"$indexDir-compact-stage"
-    if (fold.nonEmpty) {
-      spark.read.parquet(indexDir)
-        .where((col("batch") > horizon && col("batch") <= upToBatch) ||
-          col("batch") === -1L)
-        .select("doc_id", "sig")
-        .coalesce(1).write.mode("overwrite").parquet(staging)
-    }
-    (stale ++ fold).foreach { case (p, _) =>
-      graft.util.FsUtil.deleteRecursively(p)
-    }
-    if (fold.nonEmpty) {
-      graft.util.FsUtil.deleteRecursively(
-        java.nio.file.Paths.get(s"$indexDir/batch=-1"))
-      // the staged fold IS the new segment — promote it with one atomic
-      // rename (r18) instead of a second read-and-rewrite job; the staging
-      // dir was fully written before any delete, so the crash windows are
-      // unchanged (single-writer maintenance contract)
-      java.nio.file.Files.move(java.nio.file.Paths.get(staging),
-        java.nio.file.Paths.get(s"$indexDir/batch=-1"),
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      java.nio.file.Files.writeString(
-        java.nio.file.Paths.get(indexDir, "_compacted_up_to"),
-        math.max(horizon, upToBatch).toString)
-    }
-    spark.catalog.refreshByPath(indexDir)
-    stale.length + fold.length
-  }
+                               upToBatch: Long): Int =
+    compactBatchLog(spark, indexDir, indexDir, s"$indexDir-compact-stage", upToBatch)(
+      _.select("doc_id", "sig"))
 
   /** STREAMING drift-alarm maintenance — the PSI statistic (c8) kept
     * current BY INGEST: each arriving document micro-batch lands its own
@@ -1980,14 +1874,18 @@ object EventStream {
       .option("checkpointLocation", s"$indexDir/_checkpoint")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // REBALANCE before the segment write (guide §6 output sizing): the
-        // signature pass itself runs core-wide behind signatureIndex's
-        // explicit spread, but writing FROM those compute partitions lands
-        // one near-empty file per task (32 tiny files per micro-batch at
+        // signature pass is narrow, so it runs in the micro-batch's own
+        // source partitions, and writing FROM those partitions lands one
+        // near-empty file per task (32 tiny files per micro-batch at
         // bench scale — and the index is read back per probe, so the file
         // count taxes every later scan). The narrow (doc_id, sig) rows
         // re-shuffle once more so AQE sizes the segment's files by BYTES
         // (advisoryPartitionSizeInBytes) — scale-adaptive: a kB batch folds
         // to one file, a 100 TB-ingest batch still writes ~64 MB files.
+        // The byte sizing needs AQE (spark.sql.adaptive.enabled, on by
+        // default): with AQE off the hint is a plain shuffle at
+        // spark.sql.shuffle.partitions width, which brings the tiny files
+        // back and adds a shuffle.
         graft.operators.Dedup.signatureIndex(batch)
           .hint("rebalance")
           .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")

@@ -18,6 +18,11 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
 
   private val e0 = Fixtures.corpus.head
 
+  /** Hidden `.staging-*` directories left under a store root. */
+  private def stagingDebris(root: java.nio.file.Path): Set[String] =
+    graft.util.FsUtil.listDir(root)(_.map(_.getFileName.toString)
+      .filter(_.startsWith(".staging-")).toSet)
+
   test("pair commit: a crash between generation publish and manifest swap is invisible, " +
     "heals as one orphan, and the redone advance converges on the batch history") {
     import graft.store.PairCommit
@@ -510,6 +515,22 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     graft.util.FsUtil.listDir(dir)(_.map(_.getFileName.toString).toSet -- Set("LOCK")) shouldBe empty
   }
 
+  test("bulkLoad: a write that throws propagates and leaves no staging debris, nothing committed") {
+    val dir = Files.createTempDirectory("graft-store-bulkthrow")
+    val st = new MetadataStore(spark, dir.toString, fixedClock)
+    st.upsert(e0) // v1
+    val poison = Fixtures.corpus(2).id
+    val batch = spark.createDataset(Fixtures.corpus.take(5)).map { e =>
+      if (e.id == poison) throw new IllegalStateException("poisoned row") else e
+    }
+    val thrown = intercept[Exception](st.bulkLoad(batch))
+    Iterator.iterate[Throwable](thrown)(_.getCause).takeWhile(_ != null)
+      .exists(t => Option(t.getMessage).exists(_.contains("poisoned row"))) shouldBe true
+    stagingDebris(dir) shouldBe empty
+    st.committedVersion shouldBe 1L
+    st.current.collect().toSeq shouldBe Seq(e0)
+  }
+
   test("dataset upsertAll: empty batch is a no-op (no version burned, no segment)") {
     val st = freshStore()
     st.upsertAll(spark.emptyDataset[graft.model.MetadataEntry])
@@ -617,6 +638,8 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     vs shouldBe vs.sorted
     vs.distinct.size shouldBe vs.size
     vs.size shouldBe 9
+    // every lost claim discarded its staged segment
+    stagingDebris(java.nio.file.Paths.get(dir)) shouldBe empty
   }
 
   test("compact CAS: a racing compaction never shadows concurrent mutations") {
@@ -637,6 +660,8 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     b.compact() // fold whatever remains — every upsert must still resolve
     new MetadataStore(spark, dir, fixedClock).current.collect().toSet shouldBe
       Fixtures.corpus.take(7).toSet
+    // every stale base the freshness CAS rejected was discarded
+    stagingDebris(java.nio.file.Paths.get(dir)) shouldBe empty
   }
 
   test("vacuum: disk shrinks, retained window resolves unchanged, below-floor reads throw") {
