@@ -92,24 +92,25 @@ object Bench {
     val varianceHit = results.exists(r =>
       r.passes.size > 1 && r.passes.max > 1.0 && r.passes.max / r.passes.min.max(1e-9) > 5.0)
     // Floors only apply when the envelope was recorded under the SAME sf and
-    // core count ("_sf"/"_nproc" header keys) — a bench at a different SF or
-    // on a different host shape would otherwise be marked contended by
-    // floors that never described it (masking real regressions as load).
+    // local[N] width ("_sf"/"_cpus" header keys, compared with `cpus`, not
+    // the host's processor count) — a bench at a different SF or width would
+    // otherwise be marked contended by floors that never described it
+    // (masking real regressions as load).
     val envelope: Map[String, Double] =
       try {
         val txt = java.nio.file.Files.readString(
           java.nio.file.Paths.get("BENCH_ENVELOPE.json"))
         val envSf = """"_sf"\s*:\s*"([^"]+)"""".r.findFirstMatchIn(txt).map(_.group(1))
-        val envNproc = """"_nproc"\s*:\s*([0-9]+)""".r.findFirstMatchIn(txt)
-          .map(_.group(1).toInt)
+        val envCpus = """"_cpus"\s*:\s*([0-9]+)""".r.findFirstMatchIn(txt)
+          .map(_.group(1))
         val sfName = java.nio.file.Paths.get(sfDir).getFileName.toString
-        if (envSf.contains(sfName) && envNproc.contains(nproc))
+        if (envSf.contains(sfName) && envCpus.contains(cpus))
           """"([A-Za-z0-9][A-Za-z0-9_]*)"\s*:\s*([0-9.]+)""".r.findAllMatchIn(txt)
             .map(m => m.group(1) -> m.group(2).toDouble).toMap
         else {
           System.err.println(s"[bench] envelope not applied: recorded for " +
-            s"sf=${envSf.getOrElse("?")}/nproc=${envNproc.getOrElse(-1)}, " +
-            s"this run is sf=$sfName/nproc=$nproc")
+            s"sf=${envSf.getOrElse("?")}/cpus=${envCpus.getOrElse("?")}, " +
+            s"this run is sf=$sfName/cpus=$cpus")
           Map.empty
         }
       } catch { case _: Throwable => Map.empty }

@@ -87,10 +87,12 @@ object SearchExecutor {
 
   /** Full search → SearchResult (reference response shape, search.py:121-135).
     *
-    * Three jobs, not four: `total` rides the hits job as an `observe()`
-    * metric — a CollectMetrics node between the post filter and the
-    * TakeOrdered sees every post-filtered row exactly once (the top-k runs
-    * above it), so the count is exact and costs no extra pass. The
+    * Two actions, not three: the hits collect and the facets collect.
+    * `total` rides the hits action as an `observe()` metric — a
+    * CollectMetrics node between the post filter and the TakeOrdered sees
+    * every post-filtered row exactly once (the top-k runs above it), so the
+    * count is exact and costs no extra pass. (AQE may split each action into
+    * several stage jobs; the action count is what this code controls.) The
     * `size == 0` degenerate case falls back to a count: a `limit(0)` plan
     * folds to an empty relation, the metrics node never executes, and the
     * observation would block forever.

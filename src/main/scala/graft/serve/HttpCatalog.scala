@@ -101,7 +101,11 @@ final class HttpCatalog(service: CatalogService,
       case e: Auth.ForbiddenException => respondError(ex, 403, e.getMessage)
       case e: InvalidQueryException => respondError(ex, 400, e.getMessage)
       case e: IllegalArgumentException => respondError(ex, 400, e.getMessage)
-      case e: Throwable => respondError(ex, 500, String.valueOf(e.getMessage))
+      case e: Throwable =>
+        System.err.println(
+          s"[catalog] 500 on ${ex.getRequestMethod} ${ex.getRequestURI.getPath}")
+        e.printStackTrace()
+        respondError(ex, 500, String.valueOf(e.getMessage))
     } finally ex.close()
 
   private object EntryPath {

@@ -22,7 +22,12 @@ import scala.jdk.CollectionConverters._
   *
   * Read path (merge-on-read): newest base ≤ CURRENT, plus every delta in
   * (baseVersion, CURRENT], latest row per id wins
-  * (row_number over id / _version desc), tombstones drop out. Mutations are
+  * (row_number over id / _version desc), tombstones drop out. Every writer
+  * keeps one invariant: a segment holds at most ONE row per id (rows of a
+  * segment share `_version`, so the window could not break a tie). A window
+  * of exactly one segment — the state right after a bulk load or a
+  * compaction — is therefore read as it is: tombstones filtered, no window,
+  * no exchange. Mutations are
   * O(delta) writes — never a snapshot rewrite — and the atomic pointer swap
   * gives the same read-your-writes guarantee the reference buys with an
   * explicit ES index flush (reference: bases.py:81-82). Periodic `compact()`
@@ -325,6 +330,15 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * only the row groups whose id-range matches instead of windowing the
     * whole log (the round-2 scale-killer). `lookupId` additionally prunes a
     * hash-bucketed base down to ONE partition directory (see [[compact]]).
+    *
+    * A window of ONE segment skips the latest-wins window altogether: every
+    * writer commits at most one row per id per segment (the class-level
+    * invariant — [[bulkLoad]] and the Dataset [[upsertAll]] dedupe through
+    * [[latestPerId]], [[merge]] refuses duplicate ids, the Seq writers
+    * dedupe on the driver, [[compact]] writes a resolved snapshot), so the
+    * segment already IS the table once its tombstones are dropped — a scan
+    * and a filter, no hash exchange. Two or more segments take the union +
+    * `row_number` plan.
     */
   private def resolved(prune: Option[org.apache.spark.sql.Column],
                        lookupId: Option[String] = None,
@@ -339,12 +353,17 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     val deltaVs = listVersions("delta-").filter(d => d <= v && d > baseV.getOrElse(0L))
     val base = baseV.map(readBase(_, lookupId))
     val deltas = deltaVs.map(d => spark.read.schema(deltaSchema).parquet(root.resolve(s"delta-$d").toString))
-    val logAll = (base.toSeq ++ deltas).reduceOption(_ unionByName _).getOrElse(emptyLog)
-    val log = prune.fold(logAll)(logAll.where)
-    val latest = Window.partitionBy(col("id")).orderBy(col(VersionCol).desc)
-    val cur = log.withColumn("_rn", row_number().over(latest))
-      .where(col("_rn") === 1 && col(OpCol) =!= "delete")
-      .drop("_rn", OpCol)
+    val cur = base.toSeq ++ deltas match {
+      case Seq(only) =>
+        prune.fold(only)(only.where).where(col(OpCol) =!= "delete").drop(OpCol)
+      case segments =>
+        val logAll = segments.reduceOption(_ unionByName _).getOrElse(emptyLog)
+        val log = prune.fold(logAll)(logAll.where)
+        val latest = Window.partitionBy(col("id")).orderBy(col(VersionCol).desc)
+        log.withColumn("_rn", row_number().over(latest))
+          .where(col("_rn") === 1 && col(OpCol) =!= "delete")
+          .drop("_rn", OpCol)
+    }
     if (keepVersion) cur else cur.drop(VersionCol)
   }
 
@@ -491,16 +510,9 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * not break the tie later).
     */
   def upsertAll(batch: Dataset[MetadataEntry]): Unit = this.synchronized {
-    val now = clock()
-    val latestFirst = Window.partitionBy(col("id")).orderBy(
-      col("creationTime").desc,
-      xxhash64(struct(entryCols.map(col): _*)).desc)
     val audit = org.apache.spark.sql.Observation(
       s"graft-upsert-audit-${java.util.UUID.randomUUID.toString.take(8)}")
-    val deduped = batch.toDF()
-      .withColumn("creationTime", coalesce(col("creationTime"), lit(now)))
-      .withColumn("_rn", row_number().over(latestFirst))
-      .where(col("_rn") === 1).drop("_rn")
+    val deduped = latestPerId(batch.toDF())
       .observe(audit,
         sum(when(!Validation.validColumn, 1L).otherwise(0L)).as("invalid"),
         count(lit(1)).as("rows"))
@@ -674,21 +686,30 @@ class MetadataStore(spark: SparkSession, rootDir: String,
 
   /** S6 bulk load: validate each row, load the good ones, return the bad ones
     * (per-row error isolation — a bad row never fails the job,
-    * reference: elastic_admin.py:54-83 logs and continues).
+    * reference: elastic_admin.py:54-83 logs and continues). Duplicate ids
+    * among the good rows resolve by the Dataset [[upsertAll]]'s rule
+    * ([[latestPerId]]), so the loaded segment keeps one row per id. The
+    * returned rejects are a lazy filter over `entries`: nothing is cached,
+    * so a caller that collects them re-reads the input.
     */
   def bulkLoad(entries: Dataset[MetadataEntry]): Dataset[MetadataEntry] = {
-    val withValid = entries.withColumn("_valid", Validation.validColumn)
-    withValid.cache()
-    try {
-      // Normalization as Columns (not a closure over `this`): the only
-      // normalize step validColumn doesn't already guarantee is the
-      // creationTime default-now (reference: metadata_entry.py:88-94).
-      val now = clock()
-      val valid = withValid.where(col("_valid")).drop("_valid")
-        .withColumn("creationTime", coalesce(col("creationTime"), lit(now)))
-      writeDeltaDF(valid, "upsert")
-      withValid.where(!col("_valid")).drop("_valid").as[MetadataEntry]
-    } finally { withValid.unpersist(); () }
+    writeDeltaDF(latestPerId(entries.toDF().where(Validation.validColumn)), "upsert")
+    entries.where(!Validation.validColumn)
+  }
+
+  /** The one-row-per-id rule of the executor-side batch writers: default
+    * creationTime to the clock (reference: metadata_entry.py:88-94), then
+    * keep each id's newest creationTime, ties broken by content hash — a
+    * deterministic winner whatever the input order. Rows of one segment
+    * share `_version`, so the tie must be broken here, before the write.
+    */
+  private def latestPerId(df: DataFrame): DataFrame = {
+    val latestFirst = Window.partitionBy(col("id")).orderBy(
+      col("creationTime").desc,
+      xxhash64(struct(entryCols.map(col): _*)).desc)
+    df.withColumn("creationTime", coalesce(col("creationTime"), lit(clock())))
+      .withColumn("_rn", row_number().over(latestFirst))
+      .where(col("_rn") === 1).drop("_rn")
   }
 
   /** S7 drop: empty the table (reference deletes the whole index,
@@ -1386,16 +1407,19 @@ object Validation {
 
   /** Column form of the row validity check, for distributed bulk loads:
     * required strings non-empty, counts non-negative, targetUri shaped
-    * `scheme://…/non-trivial-path`.
+    * `scheme://…/non-trivial-path`. Never NULL: a null count (possible in a
+    * DataFrame read through `.as[MetadataEntry]`) would make the check NULL,
+    * which both `where(valid)` and `where(!valid)` drop — so a null check
+    * counts as invalid.
     */
   def validColumn: org.apache.spark.sql.Column = {
     val requiredNonEmpty = Seq("category", "dataSample", "format", "orgUUID",
       "sourceUri", "targetUri", "title")
       .map(f => col(f).isNotNull && length(col(f)) > 0)
       .reduce(_ && _)
-    requiredNonEmpty &&
+    coalesce(requiredNonEmpty &&
       col("recordCount") >= 0 && col("size") >= 0 &&
-      col("targetUri").rlike("^[A-Za-z][A-Za-z0-9+.-]*://[^/]*/.+")
+      col("targetUri").rlike("^[A-Za-z][A-Za-z0-9+.-]*://[^/]*/.+"), lit(false))
   }
 
   /** Driver-side validation + creationTime default-now (clock injectable for

@@ -235,6 +235,36 @@ class HttpCatalogSpec extends AnyFunSuite with Matchers with SparkSupport
     } finally http2.stop()
   }
 
+  test("a route that throws answers 500 with the message and logs the stack trace to stderr") {
+    val broken = new MetadataStore(spark,
+      Files.createTempDirectory("graft-http-broken").toString,
+      () => java.sql.Timestamp.valueOf("2020-01-01 00:00:00")) {
+      override def current: org.apache.spark.sql.Dataset[graft.model.MetadataEntry] =
+        throw new IllegalStateException("store unavailable")
+    }
+    val http2 = new HttpCatalog(
+      new CatalogService(spark, broken, new RecordingNotifier, new RecordingCascadeDeleter),
+      verifier, p => memberships(p.userId))
+    val port2 = http2.start()
+    val captured = new java.io.ByteArrayOutputStream()
+    val stderr = System.err
+    System.setErr(new java.io.PrintStream(captured, true, "UTF-8"))
+    val r = try {
+      client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port2/rest/datasets/count"))
+        .header("Authorization", "bearer tok-admin").GET().build(),
+        HttpResponse.BodyHandlers.ofString())
+    } finally {
+      System.setErr(stderr)
+      http2.stop()
+    }
+    r.statusCode() shouldBe 500
+    json(r).get("message").asText shouldBe "store unavailable"
+    val log = captured.toString("UTF-8")
+    log should include("GET /rest/datasets/count")
+    log should include("java.lang.IllegalStateException: store unavailable")
+    log should include("at graft.serve.CatalogService.count")
+  }
+
   test("DELETE: 200 with cascade status, then 404; foreign org 403") {
     req("DELETE", "/rest/datasets/5", token = Some("tok-org01")).statusCode() shouldBe 403
     val r = req("DELETE", "/rest/datasets/h1", token = Some("tok-org01"))

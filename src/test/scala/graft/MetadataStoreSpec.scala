@@ -1,7 +1,9 @@
 package graft
 
+import graft.model.MetadataEntry
 import graft.store.{MetadataStore, Validation}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, lit}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -463,6 +465,60 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     val rejected = st.bulkLoad(spark.createDataset(Fixtures.corpus :+ bad))
     rejected.collect().map(_.id).toSeq shouldBe Seq("bad")
     st.current.count() shouldBe 10
+  }
+
+  test("bulkLoad: duplicate ids land as ONE row per id in the committed delta; newest creationTime wins") {
+    val dir = Files.createTempDirectory("graft-store-bulkdup")
+    val st = new MetadataStore(spark, dir.toString, fixedClock)
+    val older = Fixtures.corpus(2).copy(title = "older",
+      creationTime = Timestamp.valueOf("2019-01-01 00:00:00"))
+    val newer = Fixtures.corpus(2).copy(title = "newer",
+      creationTime = Timestamp.valueOf("2019-06-01 00:00:00"))
+    st.bulkLoad(spark.createDataset(Seq(newer, Fixtures.corpus(0), older)))
+      .count() shouldBe 0L
+    // the segment itself, read straight from disk — not through the resolve
+    val seg = spark.read.parquet(dir.resolve("delta-1").toString)
+    seg.count() shouldBe 2L
+    seg.select("id").distinct().count() shouldBe 2L
+    seg.where(col("id") === Fixtures.corpus(2).id).select("title").as[String]
+      .collect().toSeq shouldBe Seq("newer")
+    st.get(Fixtures.corpus(2).id).get.title shouldBe "newer"
+  }
+
+  /** `entries` with one extra row, id `nullcount`, whose recordCount is NULL
+    * (reachable through `.as[MetadataEntry]` over a DataFrame).
+    */
+  private def withNullCount(entries: Seq[MetadataEntry]): DataFrame =
+    spark.createDataset(entries).toDF().unionByName(
+      spark.createDataset(Seq(e0.copy(id = "nullcount"))).toDF()
+        .withColumn("recordCount", lit(null).cast("long")))
+
+  test("bulkLoad: a row with a NULL recordCount is rejected, not silently lost") {
+    val st = freshStore()
+    val rejected = st.bulkLoad(withNullCount(Fixtures.corpus.take(3)).as[MetadataEntry])
+    // ids via the DataFrame: deserializing the null Long would throw
+    rejected.toDF().select("id").as[String].collect().toSeq shouldBe Seq("nullcount")
+    st.current.count() shouldBe 3L
+  }
+
+  test("dataset upsertAll: a row with a NULL recordCount aborts the batch") {
+    val st = freshStore()
+    val e = intercept[IllegalArgumentException] {
+      st.upsertAll(withNullCount(Fixtures.corpus.take(2)).as[MetadataEntry])
+    }
+    e.getMessage should include("nothing committed")
+    st.versionHistory() shouldBe empty
+  }
+
+  test("merge: an inserted row with a NULL recordCount aborts the merge") {
+    val st = freshStore()
+    st.upsert(Fixtures.corpus(1)) // v1
+    val e = intercept[IllegalArgumentException] {
+      st.merge(withNullCount(Seq(Fixtures.corpus(1).copy(title = "patched"))))
+    }
+    e.getMessage should include("nothing committed")
+    st.committedVersion shouldBe 1L
+    st.get(Fixtures.corpus(1).id).get.title shouldBe Fixtures.corpus(1).title
   }
 
   test("S7 drop empties the table; subsequent upserts work") {

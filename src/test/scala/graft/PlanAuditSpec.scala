@@ -178,6 +178,33 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
     plan should include regex """PushedFilters: \[[^\]]*EqualTo\(id,000005\)"""
   }
 
+  test("one-segment store: current and the point lookup read the segment as it is — " +
+    "no Exchange, no Window — after a bulk load and after a compaction") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-oneseg").toString
+    val st = new graft.store.MetadataStore(spark, dir,
+      () => java.sql.Timestamp.valueOf("2020-01-01 00:00:00"))
+    val entries = Corpus.metadata(spark, "/root/testdata/sf0.001")
+      .where($"id".between("000001", "000020"))
+      .as(org.apache.spark.sql.Encoders.product[graft.model.MetadataEntry])
+    def assertShuffleFree(when: String): Unit =
+      Seq("current" -> st.current.queryExecution.executedPlan.toString,
+        "lookup" -> st.lookup("000005").queryExecution.executedPlan.toString)
+        .foreach { case (what, plan) =>
+          withClue(s"$when, $what: ") {
+            plan should not include "Exchange"
+            plan should not include "Window"
+          }
+        }
+    st.bulkLoad(entries) // delta-1 only
+    assertShuffleFree("bulk-loaded")
+    st.lookup("000005").count() shouldBe 1L
+    st.delete("000005") // a second segment: the window plan
+    st.compact() // base-3 only
+    assertShuffleFree("compacted")
+    st.current.count() shouldBe entries.count() - 1
+    st.lookup("000005").count() shouldBe 0L
+  }
+
   test("persisted-history refresh: the keep-slice scan prunes STATICALLY to the " +
     "touched buckets — a literal bucket IN partition filter, cold dirs never listed") {
     val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-hist").toString

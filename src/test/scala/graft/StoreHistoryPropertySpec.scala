@@ -102,6 +102,66 @@ class StoreHistoryPropertySpec extends AnyFunSuite with Matchers with SparkSuppo
     }
   }
 
+  test("property: every writer keeps one row per id per segment; currentAt(v) equals the model at every v") {
+    for (seed <- 21 to 22) {
+      val rnd = new scala.util.Random(seed)
+      val dir = Files.createTempDirectory(s"graft-seg-prop-$seed")
+      val st = new MetadataStore(spark, dir.toString, fixedClock)
+      val ids = (0 until 6).map(i => s"id$i")
+      def stamped(id: String, title: String, month: Int): MetadataEntry =
+        entry(id, title).copy(creationTime = Timestamp.valueOf(f"2019-$month%02d-01 00:00:00"))
+      /** A batch of fresh rows plus a second, differently-dated row for some
+        * ids: the newest creationTime is the model's winner.
+        */
+      def dupBatch(op: Int): Seq[MetadataEntry] =
+        rnd.shuffle(ids).take(1 + rnd.nextInt(3)).flatMap { id =>
+          val months = rnd.shuffle((1 to 12).toList).take(1 + rnd.nextInt(2))
+          months.map(m => stamped(id, s"t$op-m$m", m))
+        }
+      def newest(batch: Seq[MetadataEntry]): Map[String, MetadataEntry] =
+        batch.groupBy(_.id).map { case (id, rows) => id -> rows.maxBy(_.creationTime.getTime) }
+      var model = Map.empty[String, MetadataEntry]
+      val states = scala.collection.mutable.Map(0L -> model)
+      for (op <- 1 to 24) {
+        val id = ids(rnd.nextInt(ids.size))
+        rnd.nextInt(7) match {
+          case 0 =>
+            val e = entry(id, s"t$op"); st.upsert(e); model += id -> e
+          case 1 => // Seq batch: the LAST duplicate wins
+            val batch = Seq(entry(id, s"t$op-a"), entry(ids(rnd.nextInt(ids.size)), s"t$op-b"),
+              entry(id, s"t$op-c"))
+            st.upsertAll(batch); model ++= batch.map(e => e.id -> e)
+          case 2 =>
+            val batch = dupBatch(op); st.upsertAll(spark.createDataset(batch)); model ++= newest(batch)
+          case 3 => // bulk load with duplicates and one invalid row
+            val batch = dupBatch(op)
+            val bad = entry("bad", s"t$op").copy(targetUri = "some_path")
+            st.bulkLoad(spark.createDataset(batch :+ bad)).collect().map(_.id).toSeq shouldBe Seq("bad")
+            model ++= newest(batch)
+          case 4 =>
+            st.delete(id) shouldBe model.contains(id); model -= id
+          case 5 =>
+            st.partialUpdate(id, Map("title" -> s"p$op")) shouldBe model.contains(id)
+            model.get(id).foreach(e => model += id -> e.copy(title = s"p$op"))
+          case _ => st.compact()
+        }
+        states(st.committedVersion) = model
+      }
+      // the invariant the one-segment resolve relies on, read off disk
+      graft.util.FsUtil.listDir(dir)(_.map(_.getFileName.toString)
+          .filter(n => n.startsWith("delta-") || n.startsWith("base-")).toSeq)
+        .foreach { seg =>
+          val ids = spark.read.schema(graft.model.MetadataSchema.structType)
+            .parquet(dir.resolve(seg).toString).select("id").as[String].collect().toSeq
+          withClue(s"seed $seed $seg: ") { ids.distinct.size shouldBe ids.size }
+        }
+      // no-op deletes/updates commit nothing, so every version is one op's
+      for (v <- 1L to st.committedVersion) withClue(s"seed $seed v$v: ") {
+        st.currentAt(v).collect().sortBy(_.id).toSeq shouldBe states(v).values.toSeq.sortBy(_.id)
+      }
+    }
+  }
+
   test("property: versionDiff between random checkpoints equals the simulated state diff") {
     for (seed <- 11 to 13) {
       val rnd = new scala.util.Random(seed)
