@@ -33,7 +33,8 @@ import scala.jdk.CollectionConverters._
   * 403 on a foreign body orgUUID (:155-157), POST/DELETE 403 on a foreign
   * stored orgUUID after the 404 existence check (:191-198, :234-235).
   * Status taxonomy: 201 created / 200 updated (:178-181), 400 invalid entry
-  * or DSL or unknown update field, 404 absent id, 405 unknown verb.
+  * or DSL or unknown update field or a body that is not JSON (checked after
+  * auth, so a bad token stays 401), 404 absent id, 405 unknown verb.
   * Entry GET defaults to the flat entry object; `?envelope=es` returns the
   * reference's raw ES get-envelope (`_source` + `_id`,
   * metadata_entry.py:138-141). Remaining deviation: error bodies are
@@ -50,7 +51,7 @@ final class HttpCatalog(service: CatalogService,
 
   /** Bind on an ephemeral (or given) loopback port; returns the bound port. */
   def start(port: Int = 0): Int = synchronized {
-    val s = HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
+    val s = HttpCatalog.newServer(new InetSocketAddress("127.0.0.1", port))
     s.createContext("/", (ex: HttpExchange) => handle(ex))
     val p = java.util.concurrent.Executors.newFixedThreadPool(4)
     s.setExecutor(p)
@@ -79,14 +80,23 @@ final class HttpCatalog(service: CatalogService,
       val rawBody = new String(ex.getRequestBody.readAllBytes(), StandardCharsets.UTF_8)
       if (path == "/api-docs") respondJson(ex, 200, apiDocs())
       else {
-        val body: Option[JsonNode] =
-          if (rawBody.nonEmpty) scala.util.Try(mapper.readTree(rawBody)).toOption else None
+        val parsed: Option[scala.util.Try[JsonNode]] =
+          Option.when(rawBody.nonEmpty)(scala.util.Try(mapper.readTree(rawBody)))
+        val body = parsed.flatMap(_.toOption)
         val bodyOrg = body.flatMap(n => Option(n.get("orgUUID")))
           .filter(v => v.isTextual).map(_.asText)
         val acl = Auth.authenticate(
           Option(ex.getRequestHeaders.getFirst("Authorization")), verifier,
           Auth.requestedOrgs(method, params.get("orgs"), bodyOrg),
           userOrgsOf, filteringOf(params))
+        // after auth, so a bad token is still a 401 whatever its body
+        parsed.flatMap(_.failed.toOption).foreach { e =>
+          val msg = e match {
+            case j: com.fasterxml.jackson.core.JsonProcessingException => j.getOriginalMessage
+            case other => other.getMessage
+          }
+          throw new IllegalArgumentException(s"Malformed JSON body: $msg")
+        }
         (method, path) match {
           case ("GET", p) if p == basePath => search(ex, params, acl)
           case ("GET", p) if p == s"$basePath/count" =>
@@ -418,4 +428,20 @@ final class HttpCatalog(service: CatalogService,
     ex.getResponseBody.write(bytes)
     ex.getResponseBody.close()
   }
+}
+
+object HttpCatalog {
+  // TCP_NODELAY on every accepted socket. The JDK server writes a response's
+  // headers and its body as two segments; with Nagle's algorithm on, the body
+  // waits for the client's delayed ACK of the headers — a 40 ms stall per
+  // response on Linux loopback. The server reads this property ONCE, when its
+  // config class loads with the first `HttpServer.create` in the JVM, so it
+  // is set here, before any server of this codebase is created.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
+
+  /** A JDK `HttpServer` bound to `addr`, created after the nodelay property
+    * is set. Every JDK server in this codebase (and its tests) is created
+    * through here, so none of them can load the server config first.
+    */
+  def newServer(addr: InetSocketAddress): HttpServer = HttpServer.create(addr, 0)
 }

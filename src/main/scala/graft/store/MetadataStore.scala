@@ -2,6 +2,8 @@ package graft.store
 
 import graft.model.{MetadataEntry, MetadataSchema}
 import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,7 +29,11 @@ import scala.jdk.CollectionConverters._
   * segment share `_version`, so the window could not break a tie). A window
   * of exactly one segment — the state right after a bulk load or a
   * compaction — is therefore read as it is: tombstones filtered, no window,
-  * no exchange. Mutations are
+  * no exchange. The point reads ([[get]], [[versionOf]]) build no plan and
+  * start no job: the same invariant makes latest-wins for ONE id "the
+  * first segment, newest first, that holds it", which the driver finds by
+  * reading parquet footers and decoding only the row groups whose id
+  * statistics admit the id ([[DirectParquet.rowsWhere]]). Mutations are
   * O(delta) writes — never a snapshot rewrite — and the atomic pointer swap
   * gives the same read-your-writes guarantee the reference buys with an
   * explicit ES index flush (reference: bases.py:81-82). Periodic `compact()`
@@ -349,8 +355,7 @@ class MetadataStore(spark: SparkSession, rootDir: String,
       val e = emptyLog.select((entryCols :+ VersionCol).map(col): _*)
       if (keepVersion) e else e.drop(VersionCol)
     }
-    val baseV = listVersions("base-").filter(_ <= v).lastOption
-    val deltaVs = listVersions("delta-").filter(d => d <= v && d > baseV.getOrElse(0L))
+    val (baseV, deltaVs) = readWindow(v)
     val base = baseV.map(readBase(_, lookupId))
     val deltas = deltaVs.map(d => spark.read.schema(deltaSchema).parquet(root.resolve(s"delta-$d").toString))
     val cur = base.toSeq ++ deltas match {
@@ -365,6 +370,15 @@ class MetadataStore(spark: SparkSession, rootDir: String,
           .drop("_rn", OpCol)
     }
     if (keepVersion) cur else cur.drop(VersionCol)
+  }
+
+  /** The segments a read at version v merges: the newest base ≤ v and the
+    * deltas in (base, v], oldest first. Segments above v (a published but
+    * uncommitted orphan) and hidden `.staging-*` dirs are outside it.
+    */
+  private def readWindow(v: Long): (Option[Long], Seq[Long]) = {
+    val baseV = listVersions("base-").filter(_ <= v).lastOption
+    (baseV, listVersions("delta-").filter(d => d <= v && d > baseV.getOrElse(0L)))
   }
 
   /** One base segment as log rows (entry columns + _version/_op=upsert),
@@ -393,10 +407,8 @@ class MetadataStore(spark: SparkSession, rootDir: String,
       MetadataSchema.structType
         .add(VersionCol, "long").add(OpCol, "string"))
 
-  /** S2 point lookup; None = the reference's 404
-    * (reference: metadata_entry.py:127-147, bases.py:51-63).
-    */
-  /** The id-pruned lookup plan (exposed for plan-shape assertions). On a
+  /** The id-pruned lookup as a DataFrame: the relational definition of
+    * [[get]] (and its test oracle), exposed for plan-shape assertions. On a
     * bucketed store the base scan additionally prunes to the id's single
     * `_bucket=` partition directory.
     */
@@ -404,18 +416,69 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     resolved(Some(col("id") === id), Some(id))
       .select(entryCols.map(col): _*)
 
-  def get(id: String): Option[MetadataEntry] =
-    lookup(id).as[MetadataEntry].limit(1).collect().headOption
+  /** The DataFrame form of [[versionOf]]: the id-pruned resolve with the
+    * version column kept through the latest-wins window.
+    */
+  private[graft] def lookupVersion(id: String): DataFrame =
+    resolved(Some(col("id") === id), Some(id), keepVersion = true).select(col(VersionCol))
+
+  /** S2 point lookup; None = the reference's 404
+    * (reference: metadata_entry.py:127-147, bases.py:51-63). Read on the
+    * driver, newest segment first ([[newestRow]]): no plan, no job.
+    */
+  def get(id: String): Option[MetadataEntry] = newestRow(id).map { case (_, r) => entryOf(r) }
 
   /** Committed version of an id's CURRENT row — the precondition token of
-    * [[upsertIf]]. None when the id is absent or deleted (for CAS purposes
-    * a tombstone is absence: re-creating a deleted id is an
-    * expected-absent write). Same id-pruned plan as [[lookup]], with the
-    * version column retained through the latest-wins window.
+    * [[upsertIf]]: the version of the newest segment holding the id. None
+    * when the id is absent or deleted (for CAS purposes a tombstone is
+    * absence: re-creating a deleted id is an expected-absent write). The
+    * same driver read as [[get]].
     */
-  def versionOf(id: String): Option[Long] =
-    resolved(Some(col("id") === id), Some(id), keepVersion = true)
-      .select(col(VersionCol)).limit(1).collect().headOption.map(_.getLong(0))
+  def versionOf(id: String): Option[Long] = newestRow(id).map(_._1)
+
+  /** The id's live row and the version of the segment holding it, read on
+    * the driver: read CURRENT once, walk [[readWindow]] NEWEST first, and
+    * stop at the first segment that holds the id — a segment holds at most
+    * one row per id (the class invariant), so that row is the one the
+    * latest-wins window keeps. A delete row there means absent. Each
+    * segment is read by [[DirectParquet.rowsWhere]] with an `id = <id>`
+    * predicate: a bucketed base reads only the id's `_bucket=` dir when its
+    * sidecar names the modulus (every bucket dir otherwise, as
+    * [[readBase]]).
+    *
+    * Scale contract: one read opens the footers of at most the compaction
+    * threshold's deltas plus one base bucket dir, and decodes only the row
+    * groups whose id statistics admit the id — metadata-scale at any store
+    * size. Nothing is cached: every call reads the committed files.
+    */
+  private def newestRow(id: String): Option[(Long, InternalRow)] = {
+    val (baseV, deltaVs) = readWindow(currentVersion)
+    val rowsOf = DirectParquet.rowsWhere(spark, "id", id)
+    val opIdx = deltaSchema.fieldIndex(OpCol)
+    // per segment, newest first: Some(live) when it holds the id, where
+    // live is None for a tombstone
+    val deltaHits = deltaVs.reverseIterator.map(d =>
+      rowsOf(root.resolve(s"delta-$d"), deltaSchema).headOption.map(r =>
+        Option.unless(r.getUTF8String(opIdx).toString == "delete")(d -> r)))
+    val baseHit = baseV.iterator.map { b =>
+      val dir = root.resolve(s"base-$b")
+      val bucketDir = baseBucketCount(dir).fold(dir)(n => dir.resolve(s"$BucketCol=${bucketOf(id, n)}"))
+      rowsOf(bucketDir, baseSchema).headOption.map(r => Option(b -> r))
+    }
+    (deltaHits ++ baseHit).collectFirst { case Some(live) => live }.flatten
+  }
+
+  /** A row read by [[newestRow]] as an entry (its leading columns are the
+    * entry's, in [[MetadataSchema]] order), decoded as `.as[MetadataEntry]`
+    * decodes it.
+    */
+  private def entryOf(r: InternalRow): MetadataEntry = {
+    def str(i: Int): String = if (r.isNullAt(i)) null else r.getUTF8String(i).toString
+    MetadataEntry(str(0), str(1),
+      if (r.isNullAt(2)) null else DateTimeUtils.toJavaTimestamp(r.getLong(2)),
+      str(3), str(4), r.getBoolean(5), str(6), r.getLong(7), r.getLong(8),
+      str(9), str(10), str(11), Option(str(12)))
+  }
 
   // -------------------------------------------------------------- mutations
 
@@ -449,9 +512,9 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * reports false rather than silently overwriting the racer's write.
     * A version-claim collision with an UNRELATED writer simply re-stages
     * (the normal optimistic loop) — only a change to THIS id rejects.
-    * The in-lock re-check is one id-pruned point read — the same
-    * bucket-and-row-group-pruned plan as [[get]], metadata-scale at any
-    * store size.
+    * The in-lock re-check is one driver-side point read ([[versionOf]]:
+    * footers plus the row groups that admit the id, no Spark job), so the
+    * root lock is held for milliseconds at any store size.
     */
   def upsertIf(entry: MetadataEntry, expectedVersion: Option[Long]): Boolean =
     this.synchronized {
@@ -982,10 +1045,7 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * a compaction ran.
     */
   def maybeCompact(threshold: Int = 16): Boolean = this.synchronized {
-    val v = currentVersion
-    val baseV = listVersions("base-").filter(_ <= v).lastOption.getOrElse(0L)
-    val deltas = listVersions("delta-").count(d => d <= v && d > baseV)
-    if (deltas >= threshold) { compact(); true } else false
+    if (readWindow(currentVersion)._2.size >= threshold) { compact(); true } else false
   }
 
   /** Fold the delta log into a new base snapshot. With `numBuckets` > 0 the

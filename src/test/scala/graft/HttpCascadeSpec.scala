@@ -24,7 +24,7 @@ class HttpCascadeSpec extends AnyFunSuite with Matchers with BeforeAndAfterAll {
   private var port = 0
 
   override def beforeAll(): Unit = {
-    server = HttpServer.create(new InetSocketAddress("127.0.0.1", 0), 0)
+    server = graft.serve.HttpCatalog.newServer(new InetSocketAddress("127.0.0.1", 0))
     server.createContext("/", (ex: HttpExchange) => {
       recorded.synchronized {
         recorded += Recorded(

@@ -273,4 +273,46 @@ class HttpCatalogSpec extends AnyFunSuite with Matchers with SparkSupport
     req("DELETE", "/rest/datasets/h1", token = Some("tok-org01")).statusCode() shouldBe 404
     req("GET", "/rest/datasets/h1").statusCode() shouldBe 404
   }
+
+  test("responses do not stall on a delayed ACK: median GET round trip under 20 ms") {
+    // the JDK server flushes headers and body as two segments; without
+    // TCP_NODELAY the body waits ~40 ms for the client's delayed ACK
+    (1 to 3).foreach(_ => req("GET", "/api-docs", token = None).statusCode() shouldBe 200)
+    val ms = (1 to 20).map { _ =>
+      val t0 = System.nanoTime()
+      req("GET", "/api-docs", token = None).statusCode() shouldBe 200
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    withClue(s"round trips (ms): ${ms.map(m => f"$m%.1f").mkString(" ")}: ") {
+      ms(ms.size / 2) should be < 20.0
+    }
+  }
+
+  private def malformed(r: HttpResponse[String]): Unit = {
+    r.statusCode() shouldBe 400
+    json(r).get("message").asText should startWith("Malformed JSON body: ")
+  }
+
+  test("malformed JSON body: PUT entry answers 400 with the parser's message") {
+    val r = req("PUT", "/rest/datasets/m1", token = Some("tok-org01"), body = Some("{bad"))
+    malformed(r)
+    json(r).get("message").asText should include("Unexpected character")
+    req("GET", "/rest/datasets/m1").statusCode() shouldBe 404
+  }
+
+  test("malformed JSON body: POST entry answers 400, the entry is unchanged") {
+    val before = req("GET", "/rest/datasets/0").body()
+    malformed(req("POST", "/rest/datasets/0", body = Some("""{"title": "x",""")))
+    req("GET", "/rest/datasets/0").body() shouldBe before
+  }
+
+  test("malformed JSON body: admin PUT answers 400, not the generic malformed-data message") {
+    malformed(req("PUT", "/rest/datasets/admin/elastic", body = Some("[{\"id\": }]")))
+  }
+
+  test("malformed JSON body: a bad token is still 401") {
+    req("PUT", "/rest/datasets/m2", token = Some("forged"), body = Some("{bad"))
+      .statusCode() shouldBe 401
+    req("PUT", "/rest/datasets/m2", token = None, body = Some("{bad")).statusCode() shouldBe 401
+  }
 }

@@ -1007,4 +1007,99 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     java.nio.file.Files.isDirectory(d9) shouldBe true
     st.get(e(1).id).get.title shouldBe "r9"
   }
+
+  /** Spark jobs that `f` starts on this thread. The listener bus delivers
+    * asynchronously but in order, so a fence job run after `f` under the
+    * same job group bounds the count: once the fence's start is seen, every
+    * job `f` started has been seen. Jobs of other threads carry no group.
+    */
+  private def jobsStartedBy[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"graft-jobs-${java.util.UUID.randomUUID}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty("spark.jobGroup.id") == group)
+          .foreach(p => seen.add(Option(p.getProperty("spark.job.description")).getOrElse("")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "")
+      val out = try f finally sc.setJobDescription("fence")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (!seen.contains("fence") && System.nanoTime() < deadline) Thread.sleep(10)
+      import scala.jdk.CollectionConverters._
+      seen.contains("fence") shouldBe true
+      (out, seen.asScala.count(_ != "fence"))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("point reads start no Spark job: get and versionOf on a multi-segment store") {
+    val st = freshStore()
+    st.bulkLoad(spark.createDataset(Fixtures.corpus)) // v1
+    st.compact() // v2: a base
+    st.partialUpdate(e0.id, Map("title" -> "patched")) // v3
+    st.delete(Fixtures.corpus(1).id) // v4
+    st.upsert(Fixtures.corpus(2).copy(title = "rewritten")) // v5
+    val ids = Seq(e0.id, Fixtures.corpus(1).id, Fixtures.corpus(2).id, Fixtures.corpus(3).id, "nope")
+    val (got, jobs) = jobsStartedBy(ids.map(id => (st.get(id), st.versionOf(id))))
+    jobs shouldBe 0
+    got shouldBe Seq(
+      (Some(e0.copy(title = "patched")), Some(3L)),
+      (None, None),
+      (Some(Fixtures.corpus(2).copy(title = "rewritten")), Some(5L)),
+      (Some(Fixtures.corpus(3)), Some(2L)),
+      (None, None))
+    // the counter itself sees the relational form's job(s)
+    jobsStartedBy(st.lookup(e0.id).collect())._2 should be > 0
+  }
+
+  test("point reads: creationTime round-trips exactly through an INT96 base, a driver-written " +
+    "delta and a bucketed base without its sidecar") {
+    val dir = Files.createTempDirectory("graft-store-ts")
+    val st = new MetadataStore(spark, dir.toString, fixedClock)
+    val stamps = Seq("2019-03-04 05:06:07.123456", "1970-01-01 00:00:00.000001",
+      "1969-12-31 23:59:59.999999").map(Timestamp.valueOf)
+    val es = stamps.zip(Fixtures.corpus).map { case (t, e) => e.copy(creationTime = t) }
+    def check(label: String): Unit = es.foreach { e =>
+      withClue(s"$label ${e.id}: ") {
+        st.get(e.id) shouldBe Some(e)
+        st.get(e.id) shouldBe st.lookup(e.id).as[MetadataEntry].collect().headOption
+        st.versionOf(e.id) shouldBe st.lookupVersion(e.id).as[Long].collect().headOption
+      }
+    }
+    st.upsertAll(es) // v1: one delta written on the driver
+    check("driver delta")
+    st.compact() // v2: an executor-written base
+    val baseFile = graft.util.FsUtil.listDir(dir.resolve("base-2"))(
+      _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq).head
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(baseFile.toUri), new org.apache.hadoop.conf.Configuration()))
+    try reader.getFooter.getFileMetaData.getSchema.getColumnDescription(Array("creationTime"))
+      .getPrimitiveType.getPrimitiveTypeName.name shouldBe "INT96"
+    finally reader.close()
+    check("executor base")
+    new MetadataStore(spark, dir.toString, fixedClock, numBuckets = 4).compact() // v3
+    Files.delete(dir.resolve("base-3").resolve("_nbuckets"))
+    check("bucketed base, no sidecar")
+  }
+
+  test("point reads: a published-but-uncommitted segment and a staging dir stay invisible to get") {
+    val dir = Files.createTempDirectory("graft-store-orphan")
+    val st = new MetadataStore(spark, dir.toString, fixedClock)
+    val e1 = Fixtures.corpus(1)
+    st.upsert(e0) // v1
+    st.upsert(e0.copy(title = "orphaned")) // v2
+    st.upsert(e1) // v3
+    // v2 stays published but uncommitted; v3 goes back to a staging dir
+    Files.move(dir.resolve("delta-3"), dir.resolve(".staging-delta-3-0badc0de"))
+    Files.writeString(dir.resolve("CURRENT"), "1")
+    st.get(e0.id) shouldBe Some(e0)
+    st.versionOf(e0.id) shouldBe Some(1L)
+    st.get(e1.id) shouldBe None
+    st.versionOf(e1.id) shouldBe None
+    st.get(e0.id) shouldBe st.lookup(e0.id).as[MetadataEntry].collect().headOption
+  }
 }

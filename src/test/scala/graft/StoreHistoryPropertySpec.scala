@@ -5,6 +5,8 @@ import graft.store.MetadataStore
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import org.apache.spark.sql.functions.{col, lit}
+
 import java.nio.file.Files
 import java.sql.Timestamp
 
@@ -199,6 +201,66 @@ class StoreHistoryPropertySpec extends AnyFunSuite with Matchers with SparkSuppo
         val got = st.versionDiff(vA, vB)
           .as[(String, String, String)].collect().toSeq
         withClue(s"seed $seed diff v$vA -> v$vB: ") { got shouldBe want }
+      }
+    }
+  }
+
+  test("property: after every random op, get and versionOf equal the Spark window's answer for every id") {
+    for (seed <- 31 to 32) {
+      val rnd = new scala.util.Random(seed)
+      val dir = Files.createTempDirectory(s"graft-point-prop-$seed").toString
+      val st = new MetadataStore(spark, dir, fixedClock)
+      val bucketed = new MetadataStore(spark, dir, fixedClock, numBuckets = 4)
+      val ids = (0 until 5).map(i => s"id$i")
+      val probe = ids :+ "never-seen"
+      def stamped(id: String, title: String, month: Int): MetadataEntry =
+        entry(id, title).copy(creationTime = Timestamp.valueOf(f"2019-$month%02d-01 00:00:00"))
+      def dupBatch(op: Int): Seq[MetadataEntry] =
+        rnd.shuffle(ids).take(1 + rnd.nextInt(3)).flatMap { id =>
+          rnd.shuffle((1 to 12).toList).take(1 + rnd.nextInt(2)).map(m => stamped(id, s"t$op-m$m", m))
+        }
+      def newest(batch: Seq[MetadataEntry]): Map[String, MetadataEntry] =
+        batch.groupBy(_.id).map { case (id, rows) => id -> rows.maxBy(_.creationTime.getTime) }
+      var model = Map.empty[String, MetadataEntry]
+      for (op <- 1 to 18) {
+        val id = ids(rnd.nextInt(ids.size))
+        val name = rnd.nextInt(10) match {
+          case 0 =>
+            val e = entry(id, s"t$op"); st.upsert(e); model += id -> e; "upsert"
+          case 1 =>
+            val batch = Seq(entry(id, s"t$op-a"), entry(ids(rnd.nextInt(ids.size)), s"t$op-b"),
+              entry(id, s"t$op-c"))
+            st.upsertAll(batch); model ++= batch.map(e => e.id -> e); "upsertAll(Seq)"
+          case 2 =>
+            val batch = dupBatch(op); st.upsertAll(spark.createDataset(batch))
+            model ++= newest(batch); "upsertAll(Dataset)"
+          case 3 =>
+            val batch = dupBatch(op); st.bulkLoad(spark.createDataset(batch)).count()
+            model ++= newest(batch); "bulkLoad"
+          case 4 | 5 => // delete, or re-create what a delete removed
+            if (model.contains(id)) { st.delete(id) shouldBe true; model -= id; "delete" }
+            else { val e = entry(id, s"re$op"); st.upsert(e); model += id -> e; "re-create" }
+          case 6 =>
+            st.partialUpdate(id, Map("title" -> s"p$op")) shouldBe model.contains(id)
+            model.get(id).foreach(e => model += id -> e.copy(title = s"p$op")); "partialUpdate"
+          case 7 => st.compact(); "compact"
+          case 8 => bucketed.compact(); "compact(numBuckets = 4)"
+          case _ =>
+            if (rnd.nextInt(3) == 0) { st.drop(); model = Map.empty; "drop" }
+            else { st.compact(); "compact" }
+        }
+        // the relational oracle: one job per answer kind over every probe id
+        val wantEntry = probe.map(st.lookup).reduce(_ unionByName _).as[MetadataEntry]
+          .collect().map(e => e.id -> e).toMap
+        val wantVersion = probe.map(p => st.lookupVersion(p).select(lit(p).as("id"), col("_version")))
+          .reduce(_ unionByName _).as[(String, Long)].collect().toMap
+        for (p <- probe) withClue(s"seed $seed op $op ($name) id $p: ") {
+          val got = st.get(p)
+          got shouldBe wantEntry.get(p)
+          got shouldBe model.get(p)
+          st.versionOf(p) shouldBe wantVersion.get(p)
+          bucketed.versionOf(p) shouldBe wantVersion.get(p)
+        }
       }
     }
   }
