@@ -1,5 +1,6 @@
 package graft
 
+import graft.GraftSession.scratch
 import graft.operators.{Dedup, Pipeline, Similarity, TextAnalysis}
 import graft.streaming.EventStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -58,23 +59,6 @@ object ScaleProbe {
     val r = f
     (r, (System.nanoTime() - t0) / 1e9)
   }
-
-  /** Per-process scratch root for the multi-GB synthesized corpora — the
-    * same overwrite-reuse pattern the bench entries use: fixed names under
-    * one pid-keyed root (repeated probe runs in one JVM overwrite instead
-    * of accreting), removed by a shutdown hook so nothing outlives the
-    * process. Fixes the createTempDirectory-per-run leak the r9 verdict
-    * flagged.
-    */
-  private lazy val scratchRoot: String = {
-    val root = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft-scaleprobe-${ProcessHandle.current().pid()}")
-    java.nio.file.Files.createDirectories(root)
-    sys.addShutdownHook(graft.util.FsUtil.deleteRecursively(root))
-    root.toString
-  }
-
-  private def scratch(name: String): String = s"$scratchRoot/$name"
 
   /** 10 disjoint embedding shards: shard c offsets vec_id by c·stride and
     * sign-flips dimension (c mod 64), so every shard keeps the organic
@@ -972,344 +956,273 @@ object ScaleProbe {
   }
 
   def main(args: Array[String]): Unit = {
+    val spark = GraftSession.local(GraftSession.envCpus)
+    try probe(spark, args) finally GraftSession.stop(spark)
+  }
+
+  private def probe(spark: SparkSession, args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-
-    // optional section arg: "keys" runs ONLY the key-cardinality stress
-    // (the cheap new-axis probe, re-runnable without the decade suite)
-    if (args.headOption.contains("keys")) {
-      val ev1 = EventStream.withEventTime(spark.read.parquet(s"$sfDir/events.parquet"))
-      println(profileKeyCardinality(spark, "keys-1x", ev1))
-      println(profileKeyCardinality(spark, "keys-10x", synthesizeKeyRich(ev1)))
-      spark.stop()
-      return
-    }
-
-    // optional section arg: "classifier" runs ONLY the classifier /
-    // weighted-sample scaling probe (1× vs SPARK_GRAFT_SCALE_SHARDS×
-    // documents, default a decade)
-    if (args.headOption.contains("classifier")) {
-      val shards = sys.env.getOrElse("SPARK_GRAFT_SCALE_SHARDS", "10").toInt
-      val organicC = spark.read.parquet(s"$sfDir/documents.parquet")
-      val dirC = scratch("decade-cls/documents")
-      synthesizeDecade(organicC, shards).write.mode("overwrite").parquet(dirC)
-      println(profileClassifier(spark, "cls-1x", organicC))
-      println(profileClassifier(spark, s"cls-${shards}x", spark.read.parquet(dirC)))
-      spark.stop()
-      return
-    }
-
-    // optional section arg: "dsir" runs ONLY the DSIR selection probe —
-    // 1× vs 10× documents, the synthetic vocabulary growing with the
-    // corpus (decade tokens are shard-suffixed), lang re-attached
-    // deterministically at both scales so the target slice is the same
-    // SHARE of each corpus
-    if (args.headOption.contains("dsir")) {
-      def withLang(df: DataFrame): DataFrame = df
-        .select(col("doc_id"), col("text"))
-        .withColumn("lang",
-          element_at(typedLit(Seq("en", "de", "es", "fr", "zh")),
-            pmod(col("doc_id"), lit(5L)).cast("int") + 1))
-      val organicD = withLang(spark.read.parquet(s"$sfDir/documents.parquet"))
-      val dirD = scratch("decade-dsir/documents")
-      withLang(synthesizeDecade(spark.read.parquet(s"$sfDir/documents.parquet"), 10))
-        .write.mode("overwrite").parquet(dirD)
-      // warm-up: JIT/codegen for the whole chain before timing
-      Pipeline.dsirTopK(organicD, organicD.where(col("lang") === "en"), 50).count()
-      println(profileDsir(spark, "dsir-1x", organicD))
-      println(profileDsir(spark, "dsir-10x", spark.read.parquet(dirD)))
-      spark.stop()
-      return
-    }
-
-    // optional section arg: "cooc" runs ONLY the co-occurrence probe —
-    // 1× vs 10× USERS (the decade event synthesis strides user ids with
-    // items fixed), the axis the per-user cap must keep linear
-    if (args.headOption.contains("cooc")) {
-      val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
-      val dirC2 = scratch("decade-cooc/events")
-      synthesizeDecadeEvents(ev1).write.mode("overwrite").parquet(dirC2)
-      graft.operators.EventAnalytics.itemNeighbors(ev1,
-        regexp_extract(col("props"), "(\\d+)", 1)).count() // warm-up
-      println(profileCooc(spark, "cooc-1x", ev1))
-      println(profileCooc(spark, "cooc-10x", spark.read.parquet(dirC2)))
-      spark.stop()
-      return
-    }
-
-    // optional section arg: "graph" runs ONLY the PageRank probe — the
-    // two claims that make the operator 100 TB-shaped: the edge table is
-    // BOUNDED by distinct-items² however many users feed it (10× users,
-    // items fixed → edges saturate, never grow 10×), and doubling the
-    // supersteps costs ~2× wall (edges persisted once; each superstep
-    // one co-partitioned join + aggregate, no per-iteration rebuild)
-    if (args.headOption.contains("graph")) {
-      val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
-      val dirG = scratch("decade-graph/events")
-      synthesizeDecadeEvents(ev1).write.mode("overwrite").parquet(dirG)
-      graft.operators.Graph.pageRank(
-        graft.operators.Graph.coviewEdges(ev1,
-          regexp_extract(col("props"), "(\\d+)", 1)), iters = 2).count() // warm-up
-      println(profileGraph(spark, "graph-1x", ev1))
-      println(profileGraph(spark, "graph-10x", spark.read.parquet(dirG)))
-      spark.stop()
-      return
-    }
-
-    // optional section arg: "pack" runs ONLY the p22 FFD probe — 10×
-    // documents on both shard axes (fixed = worst case, scaled = design)
-    if (args.headOption.contains("pack")) {
-      val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
-      val dirP = scratch("decade-pack/documents")
-      synthesizeDecade(docs1, 10).write.mode("overwrite").parquet(dirP)
-      val docs10 = spark.read.parquet(dirP)
-      graft.operators.Pipeline.packFirstFitDecreasing(docs1).count() // warm-up
-      println(profilePack("pack-1x", docs1, 32))
-      println(profilePack("pack-10x-fixed-shards", docs10, 32))
-      println(profilePack("pack-10x-scaled-shards", docs10, 320))
-      spark.stop()
-      return
-    }
-
-    // optional section arg: "comm" runs ONLY the g6 community probe on
-    // the disjoint-copies axis (communities must scale exactly 10×, the
-    // superstep count must not grow)
-    if (args.headOption.contains("comm")) {
-      val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
-      val dirM = scratch("decade-comm/events")
-      synthesizeDecadeGraphEvents(ev1).write.mode("overwrite").parquet(dirM)
-      println(profileComm("comm-1x", ev1))
-      println(profileComm("comm-10x", spark.read.parquet(dirM)))
-      spark.stop()
-      return
-    }
-
-    // optional section arg: "sssp" runs ONLY the g9 probe on the
-    // disjoint-copies axis (reached set and distances must be IDENTICAL
-    // at 10× edges — seeds live in copy 0 only; supersteps constant)
-    if (args.headOption.contains("sssp")) {
-      val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
-      val dirS9 = scratch("decade-sssp/events")
-      synthesizeDecadeGraphEvents(ev1).write.mode("overwrite").parquet(dirS9)
-      println(profileSssp("sssp-1x", ev1))
-      println(profileSssp("sssp-10x", spark.read.parquet(dirS9)))
-      spark.stop()
-      return
-    }
-
-    // g11 on ten disjoint copies: membership exactly 10x, rounds constant
-    if (args.headOption.contains("kcore")) {
-      val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
-      val dirK = scratch("decade-kcore/events")
-      synthesizeDecadeGraphEvents(ev1).write.mode("overwrite").parquet(dirK)
-      println(profileKcore("kcore-1x", ev1))
-      println(profileKcore("kcore-10x", spark.read.parquet(dirK)))
-      spark.stop()
-      return
-    }
-
-    // g10 on ten disjoint copies: global-max normalization is per-copy
-    // invariant — the authority table replicates exactly; iters constant
-    if (args.headOption.contains("hits")) {
-      val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
-      val dirH = scratch("decade-hits/events")
-      synthesizeDecadeGraphEvents(ev1).write.mode("overwrite").parquet(dirH)
-      println(profileHits("hits-1x", ev1))
-      println(profileHits("hits-10x", spark.read.parquet(dirH)))
-      spark.stop()
-      return
-    }
-
-    // t31 on the shard-suffixed decade: type tables grow ~10×, copies of
-    // a doc must score identical xent3 (KN is vocab-permutation-invariant)
-    if (args.headOption.contains("kn")) {
-      val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
-        .select(col("doc_id"), col("text"))
-      val stride = 1L + docs1.agg(max("doc_id")).head.getLong(0)
-      val dirKn = scratch("decade-kn/documents")
-      synthesizeDecade(docs1, 10).write.mode("overwrite").parquet(dirKn)
-      TextAnalysis.trigramLmKN(docs1.limit(50)).count() // warm-up JIT/codegen
-      println(profileKn("kn-1x", docs1, stride))
-      println(profileKn("kn-10x", spark.read.parquet(dirKn), stride))
-      spark.stop()
-      return
-    }
-
-    // o35 on ten disjoint order copies: report values replication-invariant
-    if (args.headOption.contains("basket")) {
-      profileBasket(spark.read.parquet(s"$sfDir/lineitem.parquet"),
-        spark.read.parquet(s"$sfDir/part.parquet")).foreach(println)
-      spark.stop()
-      return
-    }
-
-    if (args.headOption.contains("tri")) {
-      val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
-      val dirT = scratch("decade-tri/events")
-      synthesizeDecadeGraphEvents(ev1).write.mode("overwrite").parquet(dirT)
-      graft.operators.Graph.triangleStats(
-        graft.operators.Graph.coviewEdges(ev1,
-          regexp_extract(col("props"), "(\\d+)", 1))).count() // warm-up
-      println(profileTri("tri-1x", ev1))
-      println(profileTri("tri-10x", spark.read.parquet(dirT)))
-      spark.stop()
-      return
-    }
-
-    // optional section arg: "search" runs ONLY the phrase/BM25 scoring
-    // probe — 1× vs 10× documents mapped to (id, dataSample), including
-    // the kernel-vs-interpreted-HOF wall comparison
-    if (args.headOption.contains("search")) {
-      def asEntries(df: DataFrame): DataFrame = df
-        .select(col("doc_id").cast("string").as("id"), col("text").as("dataSample"))
-      val organicS = spark.read.parquet(s"$sfDir/documents.parquet")
-      val dirS = scratch("decade-search/documents")
-      synthesizeDecade(organicS, 10).write.mode("overwrite").parquet(dirS)
-      // warm-up: JIT/codegen for both paths
-      graft.exec.SearchExecutor.phraseSearch(asEntries(organicS), "table hash").count()
-      println(profileSearch(spark, "search-1x", asEntries(organicS)))
-      println(profileSearch(spark, "search-10x",
-        asEntries(spark.read.parquet(dirS))))
-      spark.stop()
-      return
-    }
-
-    // optional section arg: "history" runs ONLY the persisted-SCD2
-    // refresh stress — same change window, 10× history rows, bucket
-    // count scaled so per-bucket bytes hold constant
-    if (args.headOption.contains("history")) {
-      val ordH = spark.read.parquet(s"$sfDir/orders.parquet")
-      val (_, ordH10) = synthesizeDecadeFacts(
-        spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1), ordH)
-      println(profileHistoryRefresh(spark, "hist-1x", ordH, nBuckets = 32))
-      println(profileHistoryRefresh(spark, "hist-10x", ordH10, nBuckets = 320))
-      spark.stop()
-      return
-    }
-
-    // optional section arg: "takedown" runs ONLY the delivered-corpus
-    // purge stress — same 3-id batch + same source revocation at 1× and
-    // 10× corpus rows, shard count scaled with the data
-    if (args.headOption.contains("takedown")) {
-      // the decade synthesis keeps (doc_id, text) only — attach the SAME
-      // deterministic source at both scales so the predicate arm revokes
-      // the same 1/3 SHARE and its wall comparison is share-for-share
-      def withSrc(df: DataFrame): DataFrame = df
-        .select(col("doc_id"), col("text"))
-        .withColumn("source",
-          concat(lit("src"), pmod(col("doc_id"), lit(3L)).cast("string")))
-      val organicT = withSrc(spark.read.parquet(s"$sfDir/documents.parquet"))
-      val dirT = scratch("decade-takedown/documents")
-      withSrc(synthesizeDecade(spark.read.parquet(s"$sfDir/documents.parquet"), 10))
-        .write.mode("overwrite").parquet(dirT)
-      println(profileTakedown(spark, "take-1x", organicT, shards = 32))
-      println(profileTakedown(spark, "take-10x",
-        spark.read.parquet(dirT), shards = 320))
-      spark.stop()
-      return
-    }
-
-    // optional section arg: "view" runs ONLY the persisted-view refresh
-    // stress — same change window, 10× view rows, bucket count scaled so
-    // per-bucket bytes hold constant
-    if (args.headOption.contains("view")) {
-      val ordV = spark.read.parquet(s"$sfDir/orders.parquet")
-      val custV = spark.read.parquet(s"$sfDir/customer.parquet")
-      val (_, ord10) = synthesizeDecadeFacts(
-        spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1), ordV)
-      println(profileViewRefresh(spark, "view-1x", ordV, custV, nBuckets = 32))
-      println(profileViewRefresh(spark, "view-10x", ord10, custV, nBuckets = 320))
-      spark.stop()
-      return
-    }
-
     // SPARK_GRAFT_SCALE_SHARDS widens the document synthesis (default 10 =
-    // one decade; 100 = two decades) — the ANN/streaming probes below stay
-    // at the decade, where their state dimensions are already the story
+    // one decade; 100 = two decades) — the ANN/streaming probes stay at the
+    // decade, where their state dimensions are already the story
     val nShards = sys.env.getOrElse("SPARK_GRAFT_SCALE_SHARDS", "10").toInt
-    val organic = spark.read.parquet(s"$sfDir/documents.parquet")
-    // materialize the scaled corpus to parquet so every op reads it the way
-    // it reads the driver corpus (scan-rooted plans, no recompute of synth)
-    val dir = scratch("decade/documents")
-    synthesizeDecade(organic, nShards).write.mode("overwrite").parquet(dir)
-    val decade = spark.read.parquet(dir)
+    // materialize a scaled corpus to parquet so every op reads it the way it
+    // reads the sf corpus (scan-rooted plans, no recompute of synth)
+    def persisted(name: String, synth: DataFrame): DataFrame = {
+      synth.write.mode("overwrite").parquet(scratch(name))
+      spark.read.parquet(scratch(name))
+    }
+    args.headOption match {
+      // optional section arg: "keys" runs ONLY the key-cardinality stress
+      // (the cheap new-axis probe, re-runnable without the decade suite)
+      case Some("keys") =>
+        val ev1 = EventStream.withEventTime(spark.read.parquet(s"$sfDir/events.parquet"))
+        println(profileKeyCardinality(spark, "keys-1x", ev1))
+        println(profileKeyCardinality(spark, "keys-10x", synthesizeKeyRich(ev1)))
 
-    // warm-up: JIT/codegen on the small corpus
-    Dedup.jaccardPairs(organic).count()
-    println(profile("sf0.1", organic))
-    println(profile(s"sf0.1x$nShards", decade))
+      // optional section arg: "classifier" runs ONLY the classifier /
+      // weighted-sample scaling probe (1× vs SPARK_GRAFT_SCALE_SHARDS×
+      // documents, default a decade)
+      case Some("classifier") =>
+        val organicC = spark.read.parquet(s"$sfDir/documents.parquet")
+        val decadeC = persisted("decade-cls/documents", synthesizeDecade(organicC, nShards))
+        println(profileClassifier(spark, "cls-1x", organicC))
+        println(profileClassifier(spark, s"cls-${nShards}x", decadeC))
 
-    // trainer-facing shard export at 1× and 10×
-    println(profileExport(spark, "export-1x", organic))
-    println(profileExport(spark, "export-10x", decade))
+      // optional section arg: "dsir" runs ONLY the DSIR selection probe —
+      // 1× vs 10× documents, the synthetic vocabulary growing with the
+      // corpus (decade tokens are shard-suffixed), lang re-attached
+      // deterministically at both scales so the target slice is the same
+      // SHARE of each corpus
+      case Some("dsir") =>
+        def withLang(df: DataFrame): DataFrame = df
+          .select(col("doc_id"), col("text"))
+          .withColumn("lang",
+            element_at(typedLit(Seq("en", "de", "es", "fr", "zh")),
+              pmod(col("doc_id"), lit(5L)).cast("int") + 1))
+        val organicD = withLang(spark.read.parquet(s"$sfDir/documents.parquet"))
+        val decadeD = persisted("decade-dsir/documents",
+          withLang(synthesizeDecade(spark.read.parquet(s"$sfDir/documents.parquet"), 10)))
+        // warm-up: JIT/codegen for the whole chain before timing
+        Pipeline.dsirTopK(organicD, organicD.where(col("lang") === "en"), 50).count()
+        println(profileDsir(spark, "dsir-1x", organicD))
+        println(profileDsir(spark, "dsir-10x", decadeD))
 
-    // ANN index path at 1× and 10× (probe pruning must hold at scale)
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-      .select(col("vec_id"), col("embedding"))
-    val embDir = scratch("decade-emb/embeddings")
-    synthesizeDecadeEmb(emb).write.mode("overwrite").parquet(embDir)
-    println(profileAnn(spark, "emb-1x", emb))
-    println(profileAnn(spark, "emb-10x", spark.read.parquet(embDir)))
-    // deletion lifecycle: tombstone + masked read + touched-cell compaction
-    println(profileDelete(spark, "del-1x", emb))
-    println(profileDelete(spark, "del-10x", spark.read.parquet(embDir)))
-    // cross-corpus cell join: candidates per A-row bounded by occupancy
-    println(profileCross(spark, "cross-1x", emb))
-    println(profileCross(spark, "cross-10x", spark.read.parquet(embDir)))
-    // like-for-like compression baselines: the 1x raw copy carries exactly
-    // the columns the index is built from (the source table's extra label
-    // column would inflate the denominator)
-    val rawDir1x = scratch("raw-emb/embeddings")
-    emb.write.mode("overwrite").parquet(rawDir1x)
-    println(profileIvfPq(spark, "ivfpq-1x", emb, rawDir1x))
-    println(profileIvfPq(spark, "ivfpq-10x", spark.read.parquet(embDir), embDir))
+      // optional section arg: "cooc" runs ONLY the co-occurrence probe —
+      // 1× vs 10× USERS (the decade event synthesis strides user ids with
+      // items fixed), the axis the per-user cap must keep linear
+      case Some("cooc") =>
+        val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
+        val ev10 = persisted("decade-cooc/events", synthesizeDecadeEvents(ev1))
+        graft.operators.EventAnalytics.itemNeighbors(ev1,
+          regexp_extract(col("props"), "(\\d+)", 1)).count() // warm-up
+        println(profileCooc(spark, "cooc-1x", ev1))
+        println(profileCooc(spark, "cooc-10x", ev10))
 
-    // relational OLAP at 1× and 10× fact rows (dims stay 1×)
-    val li1 = spark.read.parquet(s"$sfDir/lineitem.parquet")
-    val ord1 = spark.read.parquet(s"$sfDir/orders.parquet")
-    val cust1 = spark.read.parquet(s"$sfDir/customer.parquet")
-    val nat1 = spark.read.parquet(s"$sfDir/nation.parquet")
-    val (li10raw, ord10raw) = synthesizeDecadeFacts(li1, ord1)
-    val liDir = scratch("decade-li/lineitem"); val ordDir = scratch("decade-ord/orders")
-    li10raw.write.mode("overwrite").parquet(liDir)
-    ord10raw.write.mode("overwrite").parquet(ordDir)
-    val sup1 = spark.read.parquet(s"$sfDir/supplier.parquet")
-    val reg1 = spark.read.parquet(s"$sfDir/region.parquet")
-    println(profileOlap(spark, "olap-1x", li1, ord1, cust1, nat1, sup1, reg1))
-    println(profileOlap(spark, "olap-10x",
-      spark.read.parquet(liDir), spark.read.parquet(ordDir), cust1, nat1, sup1, reg1))
+      // optional section arg: "graph" runs ONLY the PageRank probe — the
+      // two claims that make the operator 100 TB-shaped: the edge table is
+      // BOUNDED by distinct-items² however many users feed it (10× users,
+      // items fixed → edges saturate, never grow 10×), and doubling the
+      // supersteps costs ~2× wall (edges persisted once; each superstep
+      // one co-partitioned join + aggregate, no per-iteration rebuild)
+      case Some("graph") =>
+        val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
+        val ev10 = persisted("decade-graph/events", synthesizeDecadeEvents(ev1))
+        graft.operators.Graph.pageRank(
+          graft.operators.Graph.coviewEdges(ev1,
+            regexp_extract(col("props"), "(\\d+)", 1)), iters = 2).count() // warm-up
+        println(profileGraph(spark, "graph-1x", ev1))
+        println(profileGraph(spark, "graph-10x", ev10))
 
-    // streaming backfills at 1× and 10× users/events
-    val evDir = scratch("decade-ev/events")
-    synthesizeDecadeEvents(spark.read.parquet(s"$sfDir/events.parquet"))
-      .write.mode("overwrite").parquet(evDir)
-    println(profileStream(spark, "events-1x", s"$sfDir/events.parquet"))
-    println(profileStream(spark, "events-10x", evDir))
+      // optional section arg: "pack" runs ONLY the p22 FFD probe — 10×
+      // documents on both shard axes (fixed = worst case, scaled = design)
+      case Some("pack") =>
+        val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
+        val docs10 = persisted("decade-pack/documents", synthesizeDecade(docs1, 10))
+        graft.operators.Pipeline.packFirstFitDecreasing(docs1).count() // warm-up
+        println(profilePack("pack-1x", docs1, 32))
+        println(profilePack("pack-10x-fixed-shards", docs10, 32))
+        println(profilePack("pack-10x-scaled-shards", docs10, 320))
 
-    // storage-layout pruning at 1× and 10× (overlap fractions must hold)
-    println(profileLayout(spark, "layout-1x", spark.read.parquet(s"$sfDir/events.parquet")))
-    println(profileLayout(spark, "layout-10x", spark.read.parquet(evDir)))
+      // optional section arg: "comm" runs ONLY the g6 community probe on
+      // the disjoint-copies axis (communities must scale exactly 10×, the
+      // superstep count must not grow)
+      case Some("comm") =>
+        val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
+        val ev10 = persisted("decade-comm/events", synthesizeDecadeGraphEvents(ev1))
+        println(profileComm("comm-1x", ev1))
+        println(profileComm("comm-10x", ev10))
 
-    // quality audits, sketch rollups and snapshot diff at 1× and 10×:
-    // folds/audits grow linearly, range queries must stay flat
-    println(profileQuality(spark, "quality-1x",
-      EventStream.withEventTime(spark.read.parquet(s"$sfDir/events.parquet")), organic))
-    println(profileQuality(spark, "quality-10x",
-      EventStream.withEventTime(spark.read.parquet(evDir)), decade))
+      // optional section arg: "sssp" runs ONLY the g9 probe on the
+      // disjoint-copies axis (reached set and distances must be IDENTICAL
+      // at 10× edges — seeds live in copy 0 only; supersteps constant)
+      case Some("sssp") =>
+        val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
+        val ev10 = persisted("decade-sssp/events", synthesizeDecadeGraphEvents(ev1))
+        println(profileSssp("sssp-1x", ev1))
+        println(profileSssp("sssp-10x", ev10))
 
-    // key-cardinality stress: rows HELD, distinct keys ×10 — the axis the
-    // decade tables don't cover (the round-11 c4 straggler axis)
-    val ev1 = EventStream.withEventTime(spark.read.parquet(s"$sfDir/events.parquet"))
-    println(profileKeyCardinality(spark, "keys-1x", ev1))
-    println(profileKeyCardinality(spark, "keys-10x", synthesizeKeyRich(ev1)))
-    spark.stop()
+      // g11 on ten disjoint copies: membership exactly 10x, rounds constant
+      case Some("kcore") =>
+        val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
+        val ev10 = persisted("decade-kcore/events", synthesizeDecadeGraphEvents(ev1))
+        println(profileKcore("kcore-1x", ev1))
+        println(profileKcore("kcore-10x", ev10))
+
+      // g10 on ten disjoint copies: global-max normalization is per-copy
+      // invariant — the authority table replicates exactly; iters constant
+      case Some("hits") =>
+        val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
+        val ev10 = persisted("decade-hits/events", synthesizeDecadeGraphEvents(ev1))
+        println(profileHits("hits-1x", ev1))
+        println(profileHits("hits-10x", ev10))
+
+      // t31 on the shard-suffixed decade: type tables grow ~10×, copies of
+      // a doc must score identical xent3 (KN is vocab-permutation-invariant)
+      case Some("kn") =>
+        val docs1 = spark.read.parquet(s"$sfDir/documents.parquet")
+          .select(col("doc_id"), col("text"))
+        val stride = 1L + docs1.agg(max("doc_id")).head.getLong(0)
+        val docs10 = persisted("decade-kn/documents", synthesizeDecade(docs1, 10))
+        TextAnalysis.trigramLmKN(docs1.limit(50)).count() // warm-up JIT/codegen
+        println(profileKn("kn-1x", docs1, stride))
+        println(profileKn("kn-10x", docs10, stride))
+
+      // o35 on ten disjoint order copies: report values replication-invariant
+      case Some("basket") =>
+        profileBasket(spark.read.parquet(s"$sfDir/lineitem.parquet"),
+          spark.read.parquet(s"$sfDir/part.parquet")).foreach(println)
+
+      case Some("tri") =>
+        val ev1 = spark.read.parquet(s"$sfDir/events.parquet")
+        val ev10 = persisted("decade-tri/events", synthesizeDecadeGraphEvents(ev1))
+        graft.operators.Graph.triangleStats(
+          graft.operators.Graph.coviewEdges(ev1,
+            regexp_extract(col("props"), "(\\d+)", 1))).count() // warm-up
+        println(profileTri("tri-1x", ev1))
+        println(profileTri("tri-10x", ev10))
+
+      // optional section arg: "search" runs ONLY the phrase/BM25 scoring
+      // probe — 1× vs 10× documents mapped to (id, dataSample), including
+      // the kernel-vs-interpreted-HOF wall comparison
+      case Some("search") =>
+        def asEntries(df: DataFrame): DataFrame = df
+          .select(col("doc_id").cast("string").as("id"), col("text").as("dataSample"))
+        val organicS = spark.read.parquet(s"$sfDir/documents.parquet")
+        val decadeS = persisted("decade-search/documents", synthesizeDecade(organicS, 10))
+        // warm-up: JIT/codegen for both paths
+        graft.exec.SearchExecutor.phraseSearch(asEntries(organicS), "table hash").count()
+        println(profileSearch(spark, "search-1x", asEntries(organicS)))
+        println(profileSearch(spark, "search-10x", asEntries(decadeS)))
+
+      // optional section arg: "history" runs ONLY the persisted-SCD2
+      // refresh stress — same change window, 10× history rows, bucket
+      // count scaled so per-bucket bytes hold constant
+      case Some("history") =>
+        val ordH = spark.read.parquet(s"$sfDir/orders.parquet")
+        val (_, ordH10) = synthesizeDecadeFacts(
+          spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1), ordH)
+        println(profileHistoryRefresh(spark, "hist-1x", ordH, nBuckets = 32))
+        println(profileHistoryRefresh(spark, "hist-10x", ordH10, nBuckets = 320))
+
+      // optional section arg: "takedown" runs ONLY the delivered-corpus
+      // purge stress — same 3-id batch + same source revocation at 1× and
+      // 10× corpus rows, shard count scaled with the data
+      case Some("takedown") =>
+        // the decade synthesis keeps (doc_id, text) only — attach the SAME
+        // deterministic source at both scales so the predicate arm revokes
+        // the same 1/3 SHARE and its wall comparison is share-for-share
+        def withSrc(df: DataFrame): DataFrame = df
+          .select(col("doc_id"), col("text"))
+          .withColumn("source",
+            concat(lit("src"), pmod(col("doc_id"), lit(3L)).cast("string")))
+        val organicT = withSrc(spark.read.parquet(s"$sfDir/documents.parquet"))
+        val decadeT = persisted("decade-takedown/documents",
+          withSrc(synthesizeDecade(spark.read.parquet(s"$sfDir/documents.parquet"), 10)))
+        println(profileTakedown(spark, "take-1x", organicT, shards = 32))
+        println(profileTakedown(spark, "take-10x", decadeT, shards = 320))
+
+      // optional section arg: "view" runs ONLY the persisted-view refresh
+      // stress — same change window, 10× view rows, bucket count scaled so
+      // per-bucket bytes hold constant
+      case Some("view") =>
+        val ordV = spark.read.parquet(s"$sfDir/orders.parquet")
+        val custV = spark.read.parquet(s"$sfDir/customer.parquet")
+        val (_, ord10) = synthesizeDecadeFacts(
+          spark.read.parquet(s"$sfDir/lineitem.parquet").limit(1), ordV)
+        println(profileViewRefresh(spark, "view-1x", ordV, custV, nBuckets = 32))
+        println(profileViewRefresh(spark, "view-10x", ord10, custV, nBuckets = 320))
+
+      case _ =>
+        val organic = spark.read.parquet(s"$sfDir/documents.parquet")
+        val decade = persisted("decade/documents", synthesizeDecade(organic, nShards))
+
+        // warm-up: JIT/codegen on the small corpus
+        Dedup.jaccardPairs(organic).count()
+        println(profile("sf0.1", organic))
+        println(profile(s"sf0.1x$nShards", decade))
+
+        // trainer-facing shard export at 1× and 10×
+        println(profileExport(spark, "export-1x", organic))
+        println(profileExport(spark, "export-10x", decade))
+
+        // ANN index path at 1× and 10× (probe pruning must hold at scale)
+        val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
+          .select(col("vec_id"), col("embedding"))
+        val emb10 = persisted("decade-emb/embeddings", synthesizeDecadeEmb(emb))
+        println(profileAnn(spark, "emb-1x", emb))
+        println(profileAnn(spark, "emb-10x", emb10))
+        // deletion lifecycle: tombstone + masked read + touched-cell compaction
+        println(profileDelete(spark, "del-1x", emb))
+        println(profileDelete(spark, "del-10x", emb10))
+        // cross-corpus cell join: candidates per A-row bounded by occupancy
+        println(profileCross(spark, "cross-1x", emb))
+        println(profileCross(spark, "cross-10x", emb10))
+        // like-for-like compression baselines: the 1x raw copy carries exactly
+        // the columns the index is built from (the source table's extra label
+        // column would inflate the denominator)
+        val rawDir1x = scratch("raw-emb/embeddings")
+        emb.write.mode("overwrite").parquet(rawDir1x)
+        println(profileIvfPq(spark, "ivfpq-1x", emb, rawDir1x))
+        println(profileIvfPq(spark, "ivfpq-10x", emb10, scratch("decade-emb/embeddings")))
+
+        // relational OLAP at 1× and 10× fact rows (dims stay 1×)
+        val li1 = spark.read.parquet(s"$sfDir/lineitem.parquet")
+        val ord1 = spark.read.parquet(s"$sfDir/orders.parquet")
+        val cust1 = spark.read.parquet(s"$sfDir/customer.parquet")
+        val nat1 = spark.read.parquet(s"$sfDir/nation.parquet")
+        val (li10raw, ord10raw) = synthesizeDecadeFacts(li1, ord1)
+        val li10 = persisted("decade-li/lineitem", li10raw)
+        val ord10 = persisted("decade-ord/orders", ord10raw)
+        val sup1 = spark.read.parquet(s"$sfDir/supplier.parquet")
+        val reg1 = spark.read.parquet(s"$sfDir/region.parquet")
+        println(profileOlap(spark, "olap-1x", li1, ord1, cust1, nat1, sup1, reg1))
+        println(profileOlap(spark, "olap-10x",
+          li10, ord10, cust1, nat1, sup1, reg1))
+
+        // streaming backfills at 1× and 10× users/events
+        val evDir = scratch("decade-ev/events")
+        synthesizeDecadeEvents(spark.read.parquet(s"$sfDir/events.parquet"))
+          .write.mode("overwrite").parquet(evDir)
+        println(profileStream(spark, "events-1x", s"$sfDir/events.parquet"))
+        println(profileStream(spark, "events-10x", evDir))
+
+        // storage-layout pruning at 1× and 10× (overlap fractions must hold)
+        println(profileLayout(spark, "layout-1x", spark.read.parquet(s"$sfDir/events.parquet")))
+        println(profileLayout(spark, "layout-10x", spark.read.parquet(evDir)))
+
+        // quality audits, sketch rollups and snapshot diff at 1× and 10×:
+        // folds/audits grow linearly, range queries must stay flat
+        println(profileQuality(spark, "quality-1x",
+          EventStream.withEventTime(spark.read.parquet(s"$sfDir/events.parquet")), organic))
+        println(profileQuality(spark, "quality-10x",
+          EventStream.withEventTime(spark.read.parquet(evDir)), decade))
+
+        // key-cardinality stress: rows HELD, distinct keys ×10 — the axis the
+        // decade tables don't cover (the round-11 c4 straggler axis)
+        val ev1 = EventStream.withEventTime(spark.read.parquet(s"$sfDir/events.parquet"))
+        println(profileKeyCardinality(spark, "keys-1x", ev1))
+        println(profileKeyCardinality(spark, "keys-10x", synthesizeKeyRich(ev1)))
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import graft.GraftSession.scratch
 import graft.compile.QueryCompiler
 import graft.exec.SearchExecutor
 import graft.model.{AclContext, DataSetFiltering, InvalidQueryException, MetadataEntry}
@@ -51,25 +52,6 @@ object SparkEntry {
 
   private def docs(s: SparkSession, d: String): DataFrame =
     s.read.parquet(s"$d/documents.parquet")
-
-  /** Per-process scratch root for REUSABLE harness artifacts (d9 signature
-    * index, v7 IVF index, x5/x6 layouts, x7 quarantine dir). Fixed WITHIN a
-    * process — the harness invokes each entry several times (bench warm-up +
-    * passes, verify) and a fresh full-copy per call would leak disk, so
-    * entries overwrite-and-reuse — but suffixed with the PID so two
-    * concurrent harness processes cannot overwrite each other's artifacts
-    * mid-read. A shutdown hook removes the whole root, so nothing outlives
-    * the process either.
-    */
-  private lazy val scratchRoot: String = {
-    val root = java.nio.file.Paths.get(
-      sys.props("java.io.tmpdir"), s"graft-run-${ProcessHandle.current().pid()}")
-    java.nio.file.Files.createDirectories(root)
-    sys.addShutdownHook(graft.util.FsUtil.deleteRecursively(root))
-    root.toString
-  }
-
-  private def scratch(name: String): String = s"$scratchRoot/$name"
 
   /** Store-op harness: fixed clock (determinism) + fresh temp-dir store. */
   private val storeClock: () => java.sql.Timestamp =

@@ -67,10 +67,6 @@ object Analyzers {
     filter(split(lower(c), "[^\\p{L}]+"),
       t => length(t) > 0 && !t.isInCollection(UriStopwords))
 
-  /** Tokens minus English stopwords. */
-  def contentTokens(c: Column): Column =
-    array_except(standardTokens(c), lit(EnglishStopwords.toArray))
-
   // ---- plain Scala variants (driver-side: query-string analysis) ----
 
   def standardTokensScala(s: String): Seq[String] =

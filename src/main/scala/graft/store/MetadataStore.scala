@@ -1044,7 +1044,7 @@ class MetadataStore(spark: SparkSession, rootDir: String,
     * fan-in — bounded without manual compaction scheduling. Returns whether
     * a compaction ran.
     */
-  def maybeCompact(threshold: Int = 16): Boolean = this.synchronized {
+  def maybeCompact(threshold: Int): Boolean = this.synchronized {
     if (readWindow(currentVersion)._2.size >= threshold) { compact(); true } else false
   }
 

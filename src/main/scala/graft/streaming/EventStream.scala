@@ -1866,6 +1866,9 @@ object EventStream {
     */
   def streamSignatureIngest(spark: SparkSession, landingDir: String,
                             indexDir: String): Unit = {
+    require(spark.conf.get("spark.sql.adaptive.enabled").toBoolean,
+      "streamSignatureIngest needs spark.sql.adaptive.enabled: its rebalance " +
+        "hint sizes the index files by bytes only under AQE")
     val docs = spark.readStream
       .schema(spark.read.parquet(landingDir).schema)
       .option("maxFilesPerTrigger", 1)
@@ -1882,10 +1885,9 @@ object EventStream {
         // re-shuffle once more so AQE sizes the segment's files by BYTES
         // (advisoryPartitionSizeInBytes) — scale-adaptive: a kB batch folds
         // to one file, a 100 TB-ingest batch still writes ~64 MB files.
-        // The byte sizing needs AQE (spark.sql.adaptive.enabled, on by
-        // default): with AQE off the hint is a plain shuffle at
-        // spark.sql.shuffle.partitions width, which brings the tiny files
-        // back and adds a shuffle.
+        // The byte sizing needs AQE (required above): with AQE off the hint
+        // is a plain shuffle at spark.sql.shuffle.partitions width, which
+        // brings the tiny files back and adds a shuffle.
         graft.operators.Dedup.signatureIndex(batch)
           .hint("rebalance")
           .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")

@@ -156,12 +156,19 @@ class HttpCatalogSpec extends AnyFunSuite with Matchers with SparkSupport
       token = Some("tok-org01")).body() shouldBe "6"
   }
 
+  private val entry =
+    """{"category":"health","dataSample":"A,B","format":"csv","isPublic":false,
+      |"orgUUID":"org01","recordCount":5,"size":10,
+      |"sourceUri":"http://x.example.com/s",
+      |"targetUri":"hdfs://nameservice1/org/db42/x","title":"via http"}""".stripMargin
+
+  /** Creates an org01-private entry under a test's own id, so no test
+    * depends on another having run first. */
+  private def putEntry(id: String): Unit =
+    req("PUT", s"/rest/datasets/$id", token = Some("tok-org01"), body = Some(entry))
+      .statusCode() shouldBe 201
+
   test("PUT: 201 created / 200 updated / 400 invalid / 403 foreign org") {
-    val entry =
-      """{"category":"health","dataSample":"A,B","format":"csv","isPublic":false,
-        |"orgUUID":"org01","recordCount":5,"size":10,
-        |"sourceUri":"http://x.example.com/s",
-        |"targetUri":"hdfs://nameservice1/org/db42/x","title":"via http"}""".stripMargin
     req("PUT", "/rest/datasets/h1", token = Some("tok-org01"), body = Some(entry))
       .statusCode() shouldBe 201
     req("PUT", "/rest/datasets/h1", token = Some("tok-org01"), body = Some(entry))
@@ -179,15 +186,16 @@ class HttpCatalogSpec extends AnyFunSuite with Matchers with SparkSupport
   }
 
   test("POST: 200 partial update / 400 unknown field / 404 missing / 403 foreign") {
-    req("POST", "/rest/datasets/h1", token = Some("tok-org01"),
+    putEntry("p1")
+    req("POST", "/rest/datasets/p1", token = Some("tok-org01"),
       body = Some("""{"title":"patched over http","recordCount":77}""")).statusCode() shouldBe 200
-    val got = json(req("GET", "/rest/datasets/h1"))
+    val got = json(req("GET", "/rest/datasets/p1"))
     got.get("title").asText shouldBe "patched over http"
     got.get("recordCount").asLong shouldBe 77L
-    req("POST", "/rest/datasets/h1", token = Some("tok-org01"),
+    req("POST", "/rest/datasets/p1", token = Some("tok-org01"),
       body = Some("""{"bogus":"x"}""")).statusCode() shouldBe 400
     req("POST", "/rest/datasets/ghost", body = Some("""{"title":"x"}""")).statusCode() shouldBe 404
-    req("POST", "/rest/datasets/h1", token = Some("tok-org03"),
+    req("POST", "/rest/datasets/p1", token = Some("tok-org03"),
       body = Some("""{"title":"x"}""")).statusCode() shouldBe 403
   }
 
@@ -266,12 +274,13 @@ class HttpCatalogSpec extends AnyFunSuite with Matchers with SparkSupport
   }
 
   test("DELETE: 200 with cascade status, then 404; foreign org 403") {
+    putEntry("d1")
     req("DELETE", "/rest/datasets/5", token = Some("tok-org01")).statusCode() shouldBe 403
-    val r = req("DELETE", "/rest/datasets/h1", token = Some("tok-org01"))
+    val r = req("DELETE", "/rest/datasets/d1", token = Some("tok-org01"))
     r.statusCode() shouldBe 200
     json(r).get("deletedFromDownloader").asBoolean shouldBe true
-    req("DELETE", "/rest/datasets/h1", token = Some("tok-org01")).statusCode() shouldBe 404
-    req("GET", "/rest/datasets/h1").statusCode() shouldBe 404
+    req("DELETE", "/rest/datasets/d1", token = Some("tok-org01")).statusCode() shouldBe 404
+    req("GET", "/rest/datasets/d1").statusCode() shouldBe 404
   }
 
   test("responses do not stall on a delayed ACK: median GET round trip under 20 ms") {

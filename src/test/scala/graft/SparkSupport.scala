@@ -4,15 +4,12 @@ import org.apache.spark.sql.SparkSession
 
 /** One SparkSession per test JVM, shared by every suite. */
 object SharedSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // the driver's parquet encodes ns timestamps; read them as long nanos
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = {
+    val s = GraftSession.local(4)
+    // keep the suite's log4j2.properties level, not the mains' WARN
+    s.sparkContext.setLogLevel("ERROR")
+    s
+  }
 }
 
 trait SparkSupport {

@@ -845,6 +845,16 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
     pairs2() shouldBe viaIndex
   }
 
+  test("streaming signature ingest refuses a session with AQE off; the shared session is untouched") {
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    val root = java.nio.file.Files.createTempDirectory("graft-sig-noaqe").toString
+    val e = the[IllegalArgumentException] thrownBy
+      EventStream.streamSignatureIngest(noAqe, s"$root/landing", s"$root/idx")
+    e.getMessage should include("spark.sql.adaptive.enabled")
+    spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true"
+  }
+
   test("generic sum-log compaction: classifier counts fold-invariant, stale replay ignored, second pass a no-op") {
     import graft.streaming.EventStream
     import graft.operators.TextAnalysis
