@@ -26,6 +26,23 @@ object GraftSession {
     spark
   }
 
+  /** An isolated clone of `spark`: a new session on the same SparkContext,
+    * with its own SQL conf and catalog. It inherits every settable session
+    * conf of the caller, so it plans under the caller's semantics
+    * (timezone, legacy parquet nanos, AQE flags), and then applies
+    * `overrides`. The caller's session is never mutated, so concurrent
+    * queries on it keep planning with their own conf.
+    */
+  def isolated(spark: SparkSession, overrides: (String, String)*): SparkSession = {
+    val clone = spark.newSession()
+    spark.conf.getAll.foreach { case (k, v) =>
+      try clone.conf.set(k, v)
+      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
+    }
+    overrides.foreach { case (k, v) => clone.conf.set(k, v) }
+    clone
+  }
+
   /** Per-process scratch root for reusable harness artifacts (signature
     * and IVF indexes, layouts, synthesized corpora). Fixed within a process
     * — the harness invokes each entry several times (bench warm-up +

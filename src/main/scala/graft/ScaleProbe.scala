@@ -281,7 +281,7 @@ object ScaleProbe {
     * data — the scan aggregate is partial-agg bound, the join is one
     * co-keyed shuffle whose dims stay broadcast at any fact scale.
     */
-  private def profileOlap(spark: SparkSession, label: String, li: DataFrame,
+  private def profileOlap(label: String, li: DataFrame,
                           ord: DataFrame, cust: DataFrame, nat: DataFrame,
                           sup: DataFrame, reg: DataFrame): String = {
     val n = li.count()
@@ -314,7 +314,7 @@ object ScaleProbe {
     * with |B| only as the per-cell occupancy does, and the top-1 recall of
     * the planted source must hold at both scales.
     */
-  private def profileCross(spark: SparkSession, label: String, emb: DataFrame): String = {
+  private def profileCross(label: String, emb: DataFrame): String = {
     val b = emb.select(col("vec_id"), col("embedding"))
     val nB = b.count()
     val a = b.where(col("vec_id") < 500)
@@ -610,7 +610,7 @@ object ScaleProbe {
     * also carries ~10× the vocabulary — the weight table is pinned to the
     * top-256 cut either way, which is exactly the claim under test.
     */
-  private def profileClassifier(spark: SparkSession, label: String,
+  private def profileClassifier(label: String,
                                 docs: DataFrame): String = {
     val nDocs = docs.count()
     val wts = TextAnalysis.trainQualityClassifier(docs).cache()
@@ -632,7 +632,7 @@ object ScaleProbe {
     * applied to p19). Measures the vocab pass, the full weight scan, the
     * top-50 cut, and the hashed-space twin.
     */
-  private def profileDsir(spark: SparkSession, label: String, docs: DataFrame): String = {
+  private def profileDsir(label: String, docs: DataFrame): String = {
     val nDocs = docs.count()
     val target = docs.where(col("lang") === "en")
     // force the SCORES, not just cardinality: a bare count() lets the
@@ -654,7 +654,7 @@ object ScaleProbe {
     * corpus rows. Everything here should track the scan; the
     * kernel-vs-HOF ratio is the number that justifies PhraseCountExpr.
     */
-  private def profileSearch(spark: SparkSession, label: String,
+  private def profileSearch(label: String,
                             entries: DataFrame): String = {
     import org.apache.spark.sql.functions._
     val nDocs = entries.count()
@@ -683,7 +683,7 @@ object ScaleProbe {
     * fixed), so 10× users ⇒ ~10× candidate pair rows and a wall that
     * tracks them — never an item×item or user×user blow-up.
     */
-  private def profileCooc(spark: SparkSession, label: String, ev: DataFrame): String = {
+  private def profileCooc(label: String, ev: DataFrame): String = {
     val item = regexp_extract(col("props"), "(\\d+)", 1)
     val ui = ev.where(col("event_type") === "view")
       .select(col("user_id"), item.cast("int").as("item"))
@@ -701,7 +701,7 @@ object ScaleProbe {
       f""""cand_sec":$tCand%.2f,"neighbors_rows":$nOut,"top_sec":$tTop%.2f}"""
   }
 
-  private def profileGraph(spark: SparkSession, label: String,
+  private def profileGraph(label: String,
                            ev: DataFrame): String = {
     val item = regexp_extract(col("props"), "(\\d+)", 1)
     val (edges, tEdges) = timed {
@@ -986,8 +986,8 @@ object ScaleProbe {
       case Some("classifier") =>
         val organicC = spark.read.parquet(s"$sfDir/documents.parquet")
         val decadeC = persisted("decade-cls/documents", synthesizeDecade(organicC, nShards))
-        println(profileClassifier(spark, "cls-1x", organicC))
-        println(profileClassifier(spark, s"cls-${nShards}x", decadeC))
+        println(profileClassifier("cls-1x", organicC))
+        println(profileClassifier(s"cls-${nShards}x", decadeC))
 
       // optional section arg: "dsir" runs ONLY the DSIR selection probe —
       // 1× vs 10× documents, the synthetic vocabulary growing with the
@@ -1005,8 +1005,8 @@ object ScaleProbe {
           withLang(synthesizeDecade(spark.read.parquet(s"$sfDir/documents.parquet"), 10)))
         // warm-up: JIT/codegen for the whole chain before timing
         Pipeline.dsirTopK(organicD, organicD.where(col("lang") === "en"), 50).count()
-        println(profileDsir(spark, "dsir-1x", organicD))
-        println(profileDsir(spark, "dsir-10x", decadeD))
+        println(profileDsir("dsir-1x", organicD))
+        println(profileDsir("dsir-10x", decadeD))
 
       // optional section arg: "cooc" runs ONLY the co-occurrence probe —
       // 1× vs 10× USERS (the decade event synthesis strides user ids with
@@ -1016,8 +1016,8 @@ object ScaleProbe {
         val ev10 = persisted("decade-cooc/events", synthesizeDecadeEvents(ev1))
         graft.operators.EventAnalytics.itemNeighbors(ev1,
           regexp_extract(col("props"), "(\\d+)", 1)).count() // warm-up
-        println(profileCooc(spark, "cooc-1x", ev1))
-        println(profileCooc(spark, "cooc-10x", ev10))
+        println(profileCooc("cooc-1x", ev1))
+        println(profileCooc("cooc-10x", ev10))
 
       // optional section arg: "graph" runs ONLY the PageRank probe — the
       // two claims that make the operator 100 TB-shaped: the edge table is
@@ -1031,8 +1031,8 @@ object ScaleProbe {
         graft.operators.Graph.pageRank(
           graft.operators.Graph.coviewEdges(ev1,
             regexp_extract(col("props"), "(\\d+)", 1)), iters = 2).count() // warm-up
-        println(profileGraph(spark, "graph-1x", ev1))
-        println(profileGraph(spark, "graph-10x", ev10))
+        println(profileGraph("graph-1x", ev1))
+        println(profileGraph("graph-10x", ev10))
 
       // optional section arg: "pack" runs ONLY the p22 FFD probe — 10×
       // documents on both shard axes (fixed = worst case, scaled = design)
@@ -1112,8 +1112,8 @@ object ScaleProbe {
         val decadeS = persisted("decade-search/documents", synthesizeDecade(organicS, 10))
         // warm-up: JIT/codegen for both paths
         graft.exec.SearchExecutor.phraseSearch(asEntries(organicS), "table hash").count()
-        println(profileSearch(spark, "search-1x", asEntries(organicS)))
-        println(profileSearch(spark, "search-10x", asEntries(decadeS)))
+        println(profileSearch("search-1x", asEntries(organicS)))
+        println(profileSearch("search-10x", asEntries(decadeS)))
 
       // optional section arg: "history" runs ONLY the persisted-SCD2
       // refresh stress — same change window, 10× history rows, bucket
@@ -1176,8 +1176,8 @@ object ScaleProbe {
         println(profileDelete(spark, "del-1x", emb))
         println(profileDelete(spark, "del-10x", emb10))
         // cross-corpus cell join: candidates per A-row bounded by occupancy
-        println(profileCross(spark, "cross-1x", emb))
-        println(profileCross(spark, "cross-10x", emb10))
+        println(profileCross("cross-1x", emb))
+        println(profileCross("cross-10x", emb10))
         // like-for-like compression baselines: the 1x raw copy carries exactly
         // the columns the index is built from (the source table's extra label
         // column would inflate the denominator)
@@ -1196,8 +1196,8 @@ object ScaleProbe {
         val ord10 = persisted("decade-ord/orders", ord10raw)
         val sup1 = spark.read.parquet(s"$sfDir/supplier.parquet")
         val reg1 = spark.read.parquet(s"$sfDir/region.parquet")
-        println(profileOlap(spark, "olap-1x", li1, ord1, cust1, nat1, sup1, reg1))
-        println(profileOlap(spark, "olap-10x",
+        println(profileOlap("olap-1x", li1, ord1, cust1, nat1, sup1, reg1))
+        println(profileOlap("olap-10x",
           li10, ord10, cust1, nat1, sup1, reg1))
 
         // streaming backfills at 1× and 10× users/events

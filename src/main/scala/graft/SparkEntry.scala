@@ -1601,7 +1601,7 @@ object SparkEntry {
       val root = scratch("s26-pair")
       graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(root))
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-      val m1 = PairCommit.init(s, root, st, 8)
+      val m1 = PairCommit.init(root, st, 8)
       require(m1 == PairCommit.Manifest(1L, 1L), s"unexpected init manifest: $m1")
       st.partialUpdate("000010", Map("title" -> "rev-b"))  // v2
       // CRASH injected between generation publish and manifest swap
@@ -1675,7 +1675,7 @@ object SparkEntry {
       val root = scratch("s27-pair")
       graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(root))
       java.nio.file.Files.createDirectories(java.nio.file.Paths.get(root))
-      PairCommit.init(s, root, st, 8)                      // gen-1
+      PairCommit.init(root, st, 8)                      // gen-1
       st.partialUpdate("000010", Map("title" -> "rev-b"))  // v2
       PairCommit.advance(s, root, st, 8)                   // gen-2
       st.delete("000020")                                  // v3

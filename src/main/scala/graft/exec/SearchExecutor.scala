@@ -134,7 +134,7 @@ object SearchExecutor {
 
   /** Count endpoint: an empty search's total (reference: dataset_count.py:39-48).
     */
-  def count(spark: SparkSession, ds: Dataset[MetadataEntry], acl: AclContext): Long = {
+  def count(ds: Dataset[MetadataEntry], acl: AclContext): Long = {
     val cq = QueryCompiler.compile(CatalogQuery(), acl)
     baseBranch(ds.toDF(), cq).where(cq.postFilter).count()
   }

@@ -449,18 +449,12 @@ object Joins {
     * being modeled. The caller's session is never mutated.
     */
   def withRuntimeBloomJoin[T](spark: org.apache.spark.sql.SparkSession)(
-      f: org.apache.spark.sql.SparkSession => T): T = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
-    }
-    bf.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    bf.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "10GB")
-    bf.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    bf.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    f(bf)
-  }
+      f: org.apache.spark.sql.SparkSession => T): T =
+    f(graft.GraftSession.isolated(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "10GB",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1"))
 
   /** The selective-dim ⋈ fact shape [[withRuntimeBloomJoin]] exists for:
     * fact rows join a dimension subset, aggregate by a dim attribute.

@@ -167,7 +167,7 @@ final class CatalogService(spark: SparkSession, store: MetadataStore,
 
   /** GET /rest/datasets/count (reference: dataset_count.py:39-48). */
   def count(acl: AclContext): Long =
-    SearchExecutor.count(spark, store.current, acl)
+    SearchExecutor.count(store.current, acl)
 
   /** PUT /rest/datasets/admin/elastic — bulk (re)load with per-row error
     * isolation, corrupted rows omitted (reference: elastic_admin.py:54-83).

@@ -94,8 +94,7 @@ object PairCommit {
 
   /** Initialize the pair: full history snapshot as `gen-1`, manifest at
     * `(store.committedVersion, 1)`. */
-  def init(spark: SparkSession, root: String, store: MetadataStore,
-           nBuckets: Int): Manifest = {
+  def init(root: String, store: MetadataStore, nBuckets: Int): Manifest = {
     Files.createDirectories(histDir(root))
     val v = store.committedVersion
     val staging = histDir(root).resolve(".gen-1.staging")

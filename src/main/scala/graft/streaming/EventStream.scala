@@ -577,10 +577,15 @@ object EventStream {
   /** File stream with the schema inferred from a batch read of the same
     * files (the driver's parquet encodes ts as nanosecond INT64, read as
     * long nanos under spark.sql.legacy.parquet.nanosAsLong — a hand-declared
-    * TimestampType would mis-read it).
+    * TimestampType would mis-read it). `oneFilePerTrigger` caps each
+    * micro-batch at one file, so a landing dir of n files runs the real
+    * n-batch path, not one AvailableNow gulp.
     */
-  private def fileStream(spark: SparkSession, dir: String): DataFrame =
-    spark.readStream.schema(spark.read.parquet(dir).schema).parquet(dir)
+  private def fileStream(spark: SparkSession, dir: String,
+                         oneFilePerTrigger: Boolean = false): DataFrame = {
+    val reader = spark.readStream.schema(spark.read.parquet(dir).schema)
+    (if (oneFilePerTrigger) reader.option("maxFilesPerTrigger", 1) else reader).parquet(dir)
+  }
 
   /** State-store partition count for bounded backfills. A streaming query
     * instantiates (and checkpoints) one state store per shuffle partition
@@ -594,20 +599,36 @@ object EventStream {
     */
   val BackfillStatePartitions = 8
 
-  /** Run a streaming frame to completion (Trigger.AvailableNow) into a
-    * uniquely-named memory sink and return the sink table — the shared
-    * deterministic-backfill harness of every operator here. The stream is
-    * BUILT AND RUN on an isolated clone of the caller's session
-    * (`newSession()`: same SparkContext, private SQL conf + catalog) with
-    * `spark.sql.shuffle.partitions` lowered to [[BackfillStatePartitions]]
-    * there — the caller's session is never mutated, so concurrent queries
-    * on it keep planning with their own conf and concurrent backfills
-    * cannot interleave restores (the earlier save/restore-on-the-shared-
-    * session design had both hazards). The clone inherits every settable
-    * session conf first, so the backfill plans under the caller's semantics
-    * (timezone, legacy parquet nanos, AQE flags) apart from the one
-    * deliberate override.
+  /** [[graft.GraftSession.isolated]] clone of the caller's session with
+    * `spark.sql.shuffle.partitions` lowered to [[BackfillStatePartitions]].
     */
+  private def backfillSession(spark: SparkSession): SparkSession =
+    graft.GraftSession.isolated(spark,
+      "spark.sql.shuffle.partitions" -> BackfillStatePartitions.toString)
+
+  /** Drain the files in `srcDir` on `session`, one file per micro-batch
+    * (Trigger.AvailableNow), handing each batch and its id to `each`. The
+    * checkpoint at `checkpoint` records the committed files, so a re-run
+    * processes only files that arrived since. A batch that throws stops
+    * the query: the error propagates out of this call, and the batches
+    * before it stay committed.
+    */
+  private def drainFiles(session: SparkSession, srcDir: String, checkpoint: String)(
+      each: (DataFrame, Long) => Unit): Unit =
+    fileStream(session, srcDir, oneFilePerTrigger = true).writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(each)
+      .trigger(Trigger.AvailableNow()).start()
+      .awaitTermination()
+
+  /** A micro-batch sink that writes `fold` of the batch to `dir/batch=<id>`
+    * with overwrite: a replayed batch rewrites its previous attempt instead
+    * of appending duplicates. This is the idempotent layout
+    * [[readDeltaLog]] and [[compactBatchLog]] read.
+    */
+  private def batchLog(dir: String)(fold: DataFrame => DataFrame): (DataFrame, Long) => Unit =
+    (batch, batchId) => fold(batch).write.mode("overwrite").parquet(s"$dir/batch=$batchId")
+
   /** Peak state-operator footprint across a backfill's micro-batches — the
     * evidence that streaming state is bounded by the watermark, not by
     * input volume: `rows` is the max total rows held in any state store
@@ -628,14 +649,23 @@ object EventStream {
       mk: SparkSession => DataFrame): DataFrame =
     runToMemoryTableWithPeak(spark, mode)(mk)._1
 
+  /** Run a streaming frame to completion (Trigger.AvailableNow) into a
+    * uniquely-named memory sink and return the sink table — the shared
+    * deterministic-backfill harness of every operator here. The stream is
+    * BUILT AND RUN on an isolated clone of the caller's session
+    * (`newSession()`: same SparkContext, private SQL conf + catalog) with
+    * `spark.sql.shuffle.partitions` lowered to [[BackfillStatePartitions]]
+    * there — the caller's session is never mutated, so concurrent queries
+    * on it keep planning with their own conf and concurrent backfills
+    * cannot interleave restores (the earlier save/restore-on-the-shared-
+    * session design had both hazards). The clone inherits every settable
+    * session conf first, so the backfill plans under the caller's semantics
+    * (timezone, legacy parquet nanos, AQE flags) apart from the one
+    * deliberate override.
+    */
   private def runToMemoryTableWithPeak(spark: SparkSession, mode: String)(
       mk: SparkSession => DataFrame): (DataFrame, StatePeak) = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
-    }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
+    val bf = backfillSession(spark)
     val name = "graft_bf_" + java.util.UUID.randomUUID().toString.replace("-", "")
     val q = mk(bf).writeStream.format("memory").queryName(name)
       .outputMode(mode).trigger(Trigger.AvailableNow())
@@ -734,13 +764,7 @@ object EventStream {
     */
   def incrementalIngest(spark: SparkSession, srcDir: String, sinkDir: String,
                         checkpointDir: String): Long = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
-    }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
-    val q = withEventTime(fileStream(bf, srcDir))
+    val q = withEventTime(fileStream(backfillSession(spark), srcDir))
       .writeStream.format("parquet")
       .option("path", sinkDir)
       .option("checkpointLocation", checkpointDir)
@@ -814,28 +838,13 @@ object EventStream {
   def streamHistoryMaintenance(spark: SparkSession, srcDir: String,
                                store: graft.store.MetadataStore,
                                histPath: String, nBuckets: Int)(
-      netEntries: DataFrame => Dataset[graft.model.MetadataEntry]): Unit = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
+      netEntries: DataFrame => Dataset[graft.model.MetadataEntry]): Unit =
+    drainFiles(backfillSession(spark), srcDir, s"$histPath/_checkpoint") { (batch, _) =>
+      val v0 = store.versionHistory().map(_.version).maxOption.getOrElse(0L)
+      store.upsertAll(netEntries(batch))
+      graft.store.MetadataStore.refreshHistoryPartitions(
+        spark, histPath, store.changesBetween(v0), nBuckets)
     }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
-    val src = bf.readStream
-      .schema(bf.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$histPath/_checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val v0 = store.versionHistory().map(_.version).maxOption.getOrElse(0L)
-        store.upsertAll(netEntries(batch))
-        graft.store.MetadataStore.refreshHistoryPartitions(
-          spark, histPath, store.changesBetween(v0), nBuckets)
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
 
   /** STREAMING takedown queue — compliance notices drained continuously
     * against a DELIVERED [[graft.operators.Pipeline.shardExport]] corpus:
@@ -852,51 +861,17 @@ object EventStream {
     */
   def streamTakedownQueue(spark: SparkSession, noticeDir: String,
                           exportDir: String, shards: Int): Long = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
-    }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
     val removed = new java.util.concurrent.atomic.AtomicLong(0L)
-    val src = bf.readStream
-      .schema(bf.read.parquet(noticeDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(noticeDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$exportDir/_takedown_checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    drainFiles(backfillSession(spark), noticeDir, s"$exportDir/_takedown_checkpoint") {
+      (batch, _) =>
         val ids = batch.select(col("doc_id")).distinct()
           .collect().map(_.getLong(0)).toSeq
         removed.addAndGet(
           graft.operators.Pipeline.purgeShardExport(spark, exportDir, ids, shards))
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    }
     removed.get()
   }
 
-  /** Streaming ANN-index ingest — the live half of the vector-index
-    * lifecycle as a STREAM: embedding rows arriving in a landing directory
-    * are appended to the persisted cell-partitioned IVF index against its
-    * FROZEN codebook, one `ivfAppend` per micro-batch (foreachBatch).
-    * Because cell assignment is a pure per-row function of
-    * (embedding, codebook), batch boundaries and arrival order CANNOT
-    * change the result — the index after the stream is row-identical to a
-    * monolithic rebuild (the v8 append ≡ rebuild contract, applied per
-    * micro-batch; the e11 oracle holds a post-stream partial-probe search
-    * to the exact-cosine answer). `maxFilesPerTrigger=1` forces one
-    * micro-batch per landed file, so the multi-batch path is what actually
-    * runs, not one AvailableNow gulp.
-    *
-    * At 100 TB: each batch touches only its own rows (one narrow
-    * assignment map + a partitioned append into existing `cell=`
-    * directories) — the standing index is never read or shuffled, and
-    * searches running concurrently see a consistent, monotonically
-    * growing index (parquet appends are whole-file-atomic per task
-    * commit).
-    */
   /** Streaming VALIDATED ingest — the [[graft.operators.Quality]]
     * constraint gate applied at the pipeline's front door: each
     * micro-batch splits on a caller-supplied violation predicate, good
@@ -915,38 +890,24 @@ object EventStream {
     * of appending duplicates — the idempotent-per-batch-directory pattern.
     * The batch is localCheckpoint-free: the predicate split recomputes the
     * batch twice (two narrow file scans), cheaper at any scale than
-    * persisting event-width rows. `maxFilesPerTrigger=1` forces the real
-    * multi-batch path under the harness (the e11 discipline).
+    * persisting event-width rows. [[drainFiles]] runs one micro-batch per
+    * file, so the real multi-batch path runs (the e11 discipline).
     */
   def validatedIngest(spark: SparkSession, srcDir: String, outDir: String,
                       bad: org.apache.spark.sql.Column): (Long, Long) = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
+    val bf = backfillSession(spark)
+    // null-safe split: a row where the violation predicate evaluates to
+    // NULL (a null value under `value < 0` — the classic dirty-data
+    // case this gate exists for) must be QUARANTINED, not lost — a
+    // plain where(!bad)/where(bad) pair excludes null-evaluating rows
+    // from BOTH sinks
+    val isBad = coalesce(bad, lit(true))
+    val good = batchLog(s"$outDir/good")(_.where(!isBad))
+    val quarantine = batchLog(s"$outDir/quarantine")(_.where(isBad))
+    drainFiles(bf, srcDir, s"$outDir/_checkpoint") { (batch, batchId) =>
+      good(batch, batchId)
+      quarantine(batch, batchId)
     }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
-    val src = bf.readStream
-      .schema(bf.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // null-safe split: a row where the violation predicate evaluates to
-        // NULL (a null value under `value < 0` — the classic dirty-data
-        // case this gate exists for) must be QUARANTINED, not lost — a
-        // plain where(!bad)/where(bad) pair excludes null-evaluating rows
-        // from BOTH sinks
-        val isBad = coalesce(bad, lit(true))
-        batch.where(!isBad).write.mode("overwrite")
-          .parquet(s"$outDir/good/batch=$batchId")
-        batch.where(isBad).write.mode("overwrite")
-          .parquet(s"$outDir/quarantine/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
     def countOf(sub: String): Long =
       try bf.read.parquet(s"$outDir/$sub").count()
       catch { case scala.util.control.NonFatal(_) => 0L } // no violating batch ever wrote
@@ -964,28 +925,10 @@ object EventStream {
     * duplicate-delivered batch changes nothing). The daily-fold shuffle
     * is per-batch-sized; the rollup stays KB/day/batch.
     */
-  def streamSketchFold(spark: SparkSession, srcDir: String, rollupDir: String): Unit = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
-    }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
-    val src = bf.readStream
-      .schema(bf.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$rollupDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.SketchRollup
-          .dailyDistinctSketches(withEventTime(batch), "ts", "user_id")
-          .write.mode("overwrite").parquet(s"$rollupDir/days/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+  def streamSketchFold(spark: SparkSession, srcDir: String, rollupDir: String): Unit =
+    drainFiles(backfillSession(spark), srcDir, s"$rollupDir/_checkpoint")(
+      batchLog(s"$rollupDir/days")(batch => graft.operators.SketchRollup
+        .dailyDistinctSketches(withEventTime(batch), "ts", "user_id")))
 
   /** Streaming heavy-hitters maintenance — the x19 rollup's statistic
     * kept current by the ingest stream: each micro-batch folds its OWN
@@ -1003,28 +946,10 @@ object EventStream {
     * statistic is order-free).
     */
   def streamTopKCountFold(spark: SparkSession, srcDir: String,
-                          logDir: String): Unit = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
-    }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
-    val src = bf.readStream
-      .schema(bf.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$logDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.SketchRollup
-          .dailyKeyCounts(withEventTime(batch), "ts", "user_id")
-          .write.mode("overwrite").parquet(s"$logDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                          logDir: String): Unit =
+    drainFiles(backfillSession(spark), srcDir, s"$logDir/_checkpoint")(
+      batchLog(s"$logDir/batches")(batch => graft.operators.SketchRollup
+        .dailyKeyCounts(withEventTime(batch), "ts", "user_id")))
 
   /** Compact the heavy-hitters count log — [[compactIdfDeltaLog]]'s
     * discipline on [[streamTopKCountFold]]'s accretion: fold the existing
@@ -1056,27 +981,9 @@ object EventStream {
     * the batch CDC path (`maintainIdfStats`, the q8 entry).
     */
   def streamIdfDeltaFold(spark: SparkSession, srcDir: String, deltaDir: String,
-                         terms: Seq[String]): Unit = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
-    }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
-    val src = bf.readStream
-      .schema(bf.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.compile.QueryCompiler.idfDeltas(batch, terms)
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                         terms: Seq[String]): Unit =
+    drainFiles(backfillSession(spark), srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(graft.compile.QueryCompiler.idfDeltas(_, terms)))
 
   /** STREAMING DSIR raw-model maintenance — the e15 discipline applied to
     * the importance-resampling statistic: the TARGET model is frozen (its
@@ -1094,37 +1001,18 @@ object EventStream {
     * folds aged batches when the directory count binds.
     */
   def streamDsirRawFold(spark: SparkSession, srcDir: String, deltaDir: String,
-                        vocabFeats: Seq[String]): Unit = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
-    }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
-    val src = bf.readStream
-      .schema(bf.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.functions.{broadcast, col}
+                        vocabFeats: Seq[String]): Unit =
+    drainFiles(backfillSession(spark), srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches") { batch =>
         val space = broadcast(batch.sparkSession
           .createDataFrame(batch.sparkSession.sparkContext
               .parallelize(vocabFeats.map(org.apache.spark.sql.Row(_)), 1),
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("feat",
-                org.apache.spark.sql.types.StringType)))))
+            StructType(Seq(StructField("feat", StringType)))))
         graft.operators.Pipeline.docTokenCounts(batch)
           .join(space, Seq("feat"), "left_semi")
           .groupBy("feat")
-          .agg(org.apache.spark.sql.functions.sum("c").as("d_rc"))
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+          .agg(sum("c").as("d_rc"))
+      })
 
   /** STREAMING classifier scoring — train offline, score ONLINE: every
     * arriving document batch is scored with a FROZEN weight map
@@ -1138,27 +1026,10 @@ object EventStream {
     * batch scan; the weight map ships once per executor.
     */
   def streamClassifierScore(spark: SparkSession, srcDir: String,
-                            outDir: String, weights: Map[String, Long]): Unit = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
-    }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
-    val src = bf.readStream
-      .schema(bf.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextAnalysis.scoreWithWeightMap(batch, weights)
-          .write.mode("overwrite").parquet(s"$outDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                            outDir: String, weights: Map[String, Long]): Unit =
+    drainFiles(backfillSession(spark), srcDir, s"$outDir/_checkpoint")(
+      batchLog(s"$outDir/batches")(
+        graft.operators.TextAnalysis.scoreWithWeightMap(_, weights)))
 
   /** STREAMING classifier-count maintenance — e15's append-only delta
     * fold applied to the training state (the symmetry t22 : q8 :: this :
@@ -1174,27 +1045,10 @@ object EventStream {
     */
   def streamClassifierDeltaFold(spark: SparkSession, srcDir: String,
                                 deltaDir: String,
-                                posMicros: Long = 500000L): Unit = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
-    }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
-    val src = bf.readStream
-      .schema(bf.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextAnalysis.classifierCounts(batch, posMicros)
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                                posMicros: Long = 500000L): Unit =
+    drainFiles(backfillSession(spark), srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(
+        graft.operators.TextAnalysis.classifierCounts(_, posMicros)))
 
   /** Read a `batch=<id>`-partitioned delta log COMPACTION-AWARE — generic
     * over the statistic (IDF deltas, heavy-hitter count deltas): the
@@ -1368,28 +1222,10 @@ object EventStream {
     * horizon-aware reader.
     */
   def streamQualityBucketFold(spark: SparkSession, srcDir: String,
-                              deltaDir: String, buckets: Int = 10): Unit = {
-    val bf = spark.newSession()
-    spark.conf.getAll.foreach { case (k, v) =>
-      try bf.conf.set(k, v)
-      catch { case scala.util.control.NonFatal(_) => () } // static confs refuse; already shared
-    }
-    bf.conf.set("spark.sql.shuffle.partitions", BackfillStatePartitions)
-    val src = bf.readStream
-      .schema(bf.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Quality.qualityBucketCounts(batch, buckets)
-          .withColumnRenamed("n", "d_n")
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                              deltaDir: String, buckets: Int = 10): Unit =
+    drainFiles(backfillSession(spark), srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(batch => graft.operators.Quality
+        .qualityBucketCounts(batch, buckets).withColumnRenamed("n", "d_n")))
 
   /** STREAMING correlation-moment maintenance — the c15 gate's per-side
     * statistics kept current by ingest, the SUM-log family extended to
@@ -1408,24 +1244,13 @@ object EventStream {
     * deltas) applies for lifecycle unchanged.
     */
   def streamMomentsFold(spark: SparkSession, srcDir: String,
-                        deltaDir: String): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+                        deltaDir: String): Unit =
+    drainFiles(spark, srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(batch =>
         graft.operators.Quality.correlationMoments(batch)
           .select(col("m").as("d_m"), col("sx").as("d_sx"),
             col("sy").as("d_sy"), col("sxy").as("d_sxy"),
-            col("sxx").as("d_sxx"), col("syy").as("d_syy"))
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+            col("sxx").as("d_sxx"), col("syy").as("d_syy"))))
 
   /** Order-free exact re-sum of a [[streamMomentsFold]] delta log back to
     * one [[graft.operators.Quality.correlationMoments]]-schema row. An
@@ -1457,22 +1282,11 @@ object EventStream {
     * write.
     */
   def streamCategoryCountFold(spark: SparkSession, srcDir: String,
-                              deltaDir: String, catCol: String): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.groupBy(col(catCol).cast("string").as("category"))
-          .agg(count(lit(1)).as("d_n"))
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                              deltaDir: String, catCol: String): Unit =
+    drainFiles(spark, srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(
+        _.groupBy(col(catCol).cast("string").as("category"))
+          .agg(count(lit(1)).as("d_n"))))
 
   /** Align two [[streamCategoryCountFold]] logs into the c17 contingency
     * table: order-free exact re-sum per side, FULL OUTER on the value,
@@ -1509,21 +1323,9 @@ object EventStream {
     * 1-row write.
     */
   def streamNormFold(spark: SparkSession, srcDir: String,
-                     deltaDir: String): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity.normPartials(batch)
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                     deltaDir: String): Unit =
+    drainFiles(spark, srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(graft.operators.Similarity.normPartials))
 
   /** STREAMING MERGE feed — a CDC row stream driving
     * [[graft.store.MetadataStore.merge]]'s three arms per micro-batch:
@@ -1541,19 +1343,10 @@ object EventStream {
     * O(|batch|) merge commit.
     */
   def streamMergeFeed(spark: SparkSession, srcDir: String,
-                      store: graft.store.MetadataStore): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$srcDir/../_merge_checkpoint")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) { store.merge(batch); () }
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                      store: graft.store.MetadataStore): Unit =
+    drainFiles(spark, srcDir, s"$srcDir/../_merge_checkpoint") { (batch, _) =>
+      if (!batch.isEmpty) store.merge(batch)
+    }
 
   /** STREAMING functional-dependency maintenance — c19's FD audit kept
     * current by ingest: each micro-batch lands its DISTINCT
@@ -1569,21 +1362,9 @@ object EventStream {
     * (det, dep) type space per FD, not the row count.
     */
   def streamFdFold(spark: SparkSession, srcDir: String, deltaDir: String,
-                   fds: Seq[(String, String)]): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Quality.fdTriples(batch, fds).distinct()
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                   fds: Seq[(String, String)]): Unit =
+    drainFiles(spark, srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(graft.operators.Quality.fdTriples(_, fds).distinct()))
 
   /** STREAMING Benford maintenance — c18's first-digit profile kept
     * current by ingest: each micro-batch lands its per-digit observed
@@ -1597,21 +1378,10 @@ object EventStream {
     * one narrow leading-char projection + a ≤9-row write.
     */
   def streamBenfordFold(spark: SparkSession, srcDir: String,
-                        deltaDir: String, valueCol: String): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Quality.benfordDigitCounts(batch, valueCol)
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                        deltaDir: String, valueCol: String): Unit =
+    drainFiles(spark, srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(
+        graft.operators.Quality.benfordDigitCounts(_, valueCol)))
 
   /** STREAMING encoding-health maintenance — t32's corpus gate kept
     * current by document ingest (the e-family twin discipline): each
@@ -1626,21 +1396,9 @@ object EventStream {
     * write.
     */
   def streamEncodingFold(spark: SparkSession, srcDir: String,
-                         deltaDir: String): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.TextAnalysis.encodingPartials(batch)
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                         deltaDir: String): Unit =
+    drainFiles(spark, srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(graft.operators.TextAnalysis.encodingPartials))
 
   /** STREAMING daily-count maintenance — the c10/c5 volume statistic kept
     * current by ingest: each micro-batch lands its per-day event counts as
@@ -1655,23 +1413,12 @@ object EventStream {
     * — the report logic is shared verbatim, so stream ≡ batch exactly.
     */
   def streamDailyCountFold(spark: SparkSession, srcDir: String,
-                           deltaDir: String): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+                           deltaDir: String): Unit =
+    drainFiles(spark, srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(batch =>
         withEventTime(batch)
           .groupBy(to_date(col("ts")).as("day"))
-          .agg(count(lit(1)).as("d_n"))
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+          .agg(count(lit(1)).as("d_n"))))
 
   /** STREAMING freshness maintenance — the c13 recency statistic kept
     * current by ingest, and the fold family's THIRD mergeable-statistic
@@ -1687,22 +1434,31 @@ object EventStream {
     */
   def streamFreshnessFold(spark: SparkSession, srcDir: String,
                           deltaDir: String, grpCol: String,
-                          tsCol: String): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.groupBy(col(grpCol).as("grp"))
-          .agg(count(lit(1)).as("d_n"), max(to_date(col(tsCol))).as("max_day"))
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+                          tsCol: String): Unit =
+    drainFiles(spark, srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(
+        _.groupBy(col(grpCol).as("grp"))
+          .agg(count(lit(1)).as("d_n"), max(to_date(col(tsCol))).as("max_day"))))
+
+  /** STREAMING (day, user) pair maintenance — the j23 stickiness substrate
+    * kept current by ingest, the SET-log family's second member beside the
+    * co-view log: each micro-batch lands its within-batch DISTINCT
+    * `(day, user_id)` pairs as an idempotent `batch=<id>/` directory.
+    * Distinct pairs are a SET — union across batches is order-free and
+    * duplicate-delivery-immune (the e31/e14 argument), so the read-side
+    * distinct-union rebuilds the exact batch pair table and the SHARED
+    * [[graft.operators.EventAnalytics.stickinessFromPairs]] report makes
+    * stream ≡ batch by construction: DAU/MAU without ever rescanning raw
+    * events. Per-batch cost: one narrow date projection + a within-batch
+    * distinct.
+    */
+  def streamDayUserFold(spark: SparkSession, srcDir: String,
+                        deltaDir: String): Unit =
+    drainFiles(spark, srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(batch =>
+        withEventTime(batch)
+          .select(to_date(col("ts")).as("day"), col("user_id"))
+          .distinct()))
 
   /** STREAMING co-view pair maintenance — the g-family's edge substrate
     * kept current by ingest: each micro-batch lands its within-batch
@@ -1717,57 +1473,15 @@ object EventStream {
     * projection + within-batch distinct — the graph is never rebuilt
     * from raw history to stay current.
     */
-  /** STREAMING (day, user) pair maintenance — the j23 stickiness substrate
-    * kept current by ingest, the SET-log family's second member beside the
-    * co-view log: each micro-batch lands its within-batch DISTINCT
-    * `(day, user_id)` pairs as an idempotent `batch=<id>/` directory.
-    * Distinct pairs are a SET — union across batches is order-free and
-    * duplicate-delivery-immune (the e31/e14 argument), so the read-side
-    * distinct-union rebuilds the exact batch pair table and the SHARED
-    * [[graft.operators.EventAnalytics.stickinessFromPairs]] report makes
-    * stream ≡ batch by construction: DAU/MAU without ever rescanning raw
-    * events. Per-batch cost: one narrow date projection + a within-batch
-    * distinct.
-    */
-  def streamDayUserFold(spark: SparkSession, srcDir: String,
-                        deltaDir: String): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        withEventTime(batch)
-          .select(to_date(col("ts")).as("day"), col("user_id"))
-          .distinct()
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
-
   def streamCoviewFold(spark: SparkSession, srcDir: String,
-                       deltaDir: String, eventType: String = "view"): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.where(col("event_type") === eventType)
+                       deltaDir: String, eventType: String = "view"): Unit =
+    drainFiles(spark, srcDir, s"$deltaDir/_checkpoint")(
+      batchLog(s"$deltaDir/batches")(
+        _.where(col("event_type") === eventType)
           .select(col("user_id"),
             regexp_extract(col("props"), "(\\d+)", 1).cast("int").as("item"))
           .where(col("item").isNotNull)
-          .distinct()
-          .write.mode("overwrite").parquet(s"$deltaDir/batches/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-  }
+          .distinct()))
 
   /** STREAMING Markov-transition maintenance — the j15 matrix kept
     * current by ingest. Each micro-batch lands TWO idempotent
@@ -1794,38 +1508,31 @@ object EventStream {
     */
   def streamTransitionFold(spark: SparkSession, srcDir: String,
                            deltaDir: String): Unit = {
-    val src = spark.readStream
-      .schema(spark.read.parquet(srcDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(srcDir)
-    val q = src.writeStream
-      .option("checkpointLocation", s"$deltaDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        import org.apache.spark.sql.expressions.Window
-        val us = unix_micros(col("ts").cast("timestamp"))
-        val e = batch.select(col("user_id"), col("event_id"),
-          col("event_type"), us.as("us"))
-        val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
-        val wd = Window.partitionBy("user_id")
-          .orderBy(col("us").desc, col("event_id").desc)
-        val ranked = e
-          .withColumn("dst", lead(col("event_type"), 1).over(w))
-          .withColumn("rn", row_number().over(w))
-          .withColumn("rx", row_number().over(wd))
-        ranked.where(col("dst").isNotNull)
-          .groupBy(col("event_type").as("src"), col("dst"))
-          .agg(count(lit(1)).as("d_n"))
-          .write.mode("overwrite").parquet(s"$deltaDir/counts/batch=$batchId")
-        ranked.groupBy("user_id")
-          .agg(max(when(col("rn") === 1, col("event_type"))).as("first_type"),
-            max(when(col("rn") === 1, col("us"))).as("first_us"),
-            max(when(col("rn") === 1, col("event_id"))).as("first_eid"),
-            max(when(col("rx") === 1, col("event_type"))).as("last_type"))
-          .write.mode("overwrite").parquet(s"$deltaDir/bounds/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    import org.apache.spark.sql.expressions.Window
+    val counts = batchLog(s"$deltaDir/counts")(
+      _.where(col("dst").isNotNull)
+        .groupBy(col("event_type").as("src"), col("dst"))
+        .agg(count(lit(1)).as("d_n")))
+    val bounds = batchLog(s"$deltaDir/bounds")(
+      _.groupBy("user_id")
+        .agg(max(when(col("rn") === 1, col("event_type"))).as("first_type"),
+          max(when(col("rn") === 1, col("us"))).as("first_us"),
+          max(when(col("rn") === 1, col("event_id"))).as("first_eid"),
+          max(when(col("rx") === 1, col("event_type"))).as("last_type")))
+    drainFiles(spark, srcDir, s"$deltaDir/_checkpoint") { (batch, batchId) =>
+      val us = unix_micros(col("ts").cast("timestamp"))
+      val e = batch.select(col("user_id"), col("event_id"),
+        col("event_type"), us.as("us"))
+      val w = Window.partitionBy("user_id").orderBy(col("us"), col("event_id"))
+      val wd = Window.partitionBy("user_id")
+        .orderBy(col("us").desc, col("event_id").desc)
+      val ranked = e
+        .withColumn("dst", lead(col("event_type"), 1).over(w))
+        .withColumn("rn", row_number().over(w))
+        .withColumn("rx", row_number().over(wd))
+      counts(ranked, batchId)
+      bounds(ranked, batchId)
+    }
   }
 
   /** The fold half of [[streamTransitionFold]]: within-batch counts
@@ -1869,13 +1576,8 @@ object EventStream {
     require(spark.conf.get("spark.sql.adaptive.enabled").toBoolean,
       "streamSignatureIngest needs spark.sql.adaptive.enabled: its rebalance " +
         "hint sizes the index files by bytes only under AQE")
-    val docs = spark.readStream
-      .schema(spark.read.parquet(landingDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
-    val q = docs.writeStream
-      .option("checkpointLocation", s"$indexDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    drainFiles(spark, landingDir, s"$indexDir/_checkpoint")(
+      batchLog(indexDir)(batch =>
         // REBALANCE before the segment write (guide §6 output sizing): the
         // signature pass is narrow, so it runs in the micro-batch's own
         // source partitions, and writing FROM those partitions lands one
@@ -1888,21 +1590,32 @@ object EventStream {
         // The byte sizing needs AQE (required above): with AQE off the hint
         // is a plain shuffle at spark.sql.shuffle.partitions width, which
         // brings the tiny files back and adds a shuffle.
-        graft.operators.Dedup.signatureIndex(batch)
-          .hint("rebalance")
-          .write.mode("overwrite").parquet(s"$indexDir/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
+        graft.operators.Dedup.signatureIndex(batch).hint("rebalance")))
   }
 
+  /** Streaming ANN-index ingest — the live half of the vector-index
+    * lifecycle as a STREAM: embedding rows arriving in a landing directory
+    * are appended to the persisted cell-partitioned IVF index against its
+    * FROZEN codebook, one `ivfAppend` per micro-batch (foreachBatch).
+    * Because cell assignment is a pure per-row function of
+    * (embedding, codebook), batch boundaries and arrival order CANNOT
+    * change the result — the index after the stream is row-identical to a
+    * monolithic rebuild (the v8 append ≡ rebuild contract, applied per
+    * micro-batch; the e11 oracle holds a post-stream partial-probe search
+    * to the exact-cosine answer). `maxFilesPerTrigger=1` forces one
+    * micro-batch per landed file, so the multi-batch path is what actually
+    * runs, not one AvailableNow gulp.
+    *
+    * At 100 TB: each batch touches only its own rows (one narrow
+    * assignment map + a partitioned append into existing `cell=`
+    * directories) — the standing index is never read or shuffled, and
+    * searches running concurrently see a consistent, monotonically
+    * growing index (parquet appends are whole-file-atomic per task
+    * commit).
+    */
   def streamIngestToIndex(spark: SparkSession, landingDir: String,
                           cents: Seq[Seq[Float]], indexDir: String): Unit = {
-    val vecs = spark.readStream
-      .schema(spark.read.parquet(landingDir).schema)
-      .option("maxFilesPerTrigger", 1)
-      .parquet(landingDir)
+    val vecs = fileStream(spark, landingDir, oneFilePerTrigger = true)
     val q = vecs.writeStream
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.operators.Similarity.ivfAppend(

@@ -31,7 +31,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     val st = freshStore()
     Fixtures.corpus.take(5).foreach(st.upsert) // v1..v5
     val root = Files.createTempDirectory("graft-pair").toString
-    val m0 = PairCommit.init(spark, root, st, 4)
+    val m0 = PairCommit.init(root, st, 4)
     m0 shouldBe PairCommit.Manifest(5L, 1L)
     val gen1Files = graft.util.FsUtil.listDir(
       java.nio.file.Paths.get(root, "hist", "gen-1"))(_.toSeq).toString
@@ -75,7 +75,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     val st = freshStore()
     Fixtures.corpus.take(5).foreach(st.upsert) // v1..v5
     val root = Files.createTempDirectory("graft-pair-rb").toString
-    PairCommit.init(spark, root, st, 4)
+    PairCommit.init(root, st, 4)
     // three advances → four generations
     st.partialUpdate(Fixtures.corpus(1).id, Map("title" -> "rev-b")) // v6
     PairCommit.advance(spark, root, st, 4)
@@ -112,7 +112,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     // returns the empty history with the full schema, not a reduce() throw
     val empty = freshStore()
     val eroot = Files.createTempDirectory("graft-pair-empty").toString
-    PairCommit.init(spark, eroot, empty, 4)
+    PairCommit.init(eroot, empty, 4)
     val eh = PairCommit.readHistory(spark, eroot)
     eh.count() shouldBe 0L
     eh.columns should contain allOf ("id", "title", "valid_from", "valid_to", "bucket")

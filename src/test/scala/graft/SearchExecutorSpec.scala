@@ -55,8 +55,8 @@ class SearchExecutorSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("A4 count endpoint = post-filtered total of an empty search") {
-    SearchExecutor.count(spark, ds, admin) shouldBe 10
-    SearchExecutor.count(spark, ds, AclContext(Seq("org01"), isAdmin = false)) shouldBe 7
+    SearchExecutor.count(ds, admin) shouldBe 10
+    SearchExecutor.count(ds, AclContext(Seq("org01"), isAdmin = false)) shouldBe 7
   }
 
   test("Q3 pagination: offset+limit with deterministic tie-break by id") {

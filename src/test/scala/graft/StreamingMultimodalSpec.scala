@@ -855,6 +855,59 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
     spark.conf.get("spark.sql.adaptive.enabled") shouldBe "true"
   }
 
+  test("GraftSession.isolated carries the caller's settable confs and the overrides; the caller is untouched") {
+    // a caller whose confs differ from what a bare newSession() would start
+    // with, so only copying can carry them into the clone
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.session.timeZone", "America/New_York")
+    caller.conf.set("spark.sql.legacy.parquet.nanosAsLong", "false")
+    val partitions = caller.conf.get("spark.sql.shuffle.partitions")
+    val aqe = caller.conf.get("spark.sql.adaptive.enabled")
+    val clone = GraftSession.isolated(caller,
+      "spark.sql.shuffle.partitions" -> "3", "spark.sql.adaptive.enabled" -> "false")
+    clone should not be theSameInstanceAs(caller)
+    clone.sparkContext should be theSameInstanceAs caller.sparkContext
+    clone.conf.get("spark.sql.session.timeZone") shouldBe "America/New_York"
+    clone.conf.get("spark.sql.legacy.parquet.nanosAsLong") shouldBe "false"
+    clone.conf.get("spark.sql.shuffle.partitions") shouldBe "3"
+    clone.conf.get("spark.sql.adaptive.enabled") shouldBe "false"
+    caller.conf.get("spark.sql.shuffle.partitions") shouldBe partitions
+    caller.conf.get("spark.sql.adaptive.enabled") shouldBe aqe
+    partitions should not be "3"
+    aqe shouldBe "true"
+  }
+
+  test("streamed merge feed: a refused micro-batch fails the feed, and the batch before it stays committed") {
+    import java.nio.file.{Files, Paths}
+    val root = Files.createTempDirectory("graft-merge-fail").toString
+    val store = new graft.store.MetadataStore(spark, s"$root/store",
+      () => Timestamp.valueOf("2020-01-01 00:00:00"))
+    val rows = spark.createDataset(Fixtures.corpus).toDF().withColumn("_delete", lit(false))
+    val first = rows.where($"id" === Fixtures.corpus(0).id)
+    val one = rows.where($"id" === Fixtures.corpus(1).id)
+    // two one-file landings with distinct modification times, so the file
+    // source drains them in this order; the second repeats an id, which the
+    // merge refuses as ambiguous
+    Files.createDirectories(Paths.get(s"$root/src"))
+    Seq(first, one.unionByName(one)).zipWithIndex.foreach { case (df, i) =>
+      df.coalesce(1).write.parquet(s"$root/stage$i")
+      val part = graft.util.FsUtil.listDir(Paths.get(s"$root/stage$i"))(
+        _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq).head
+      val landed = Files.move(part, Paths.get(s"$root/src/landed-$i.parquet"))
+      Files.setLastModifiedTime(landed,
+        java.nio.file.attribute.FileTime.fromMillis(1600000000000L + i * 60000L))
+    }
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      EventStream.streamMergeFeed(spark, s"$root/src", store)
+    }
+    val refusal = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .collectFirst { case e: IllegalArgumentException => e }
+    refusal.map(_.getMessage).getOrElse("") should include("merge refused")
+    store.versionHistory().map(_.version) shouldBe Seq(1L)
+    store.current.collect().map(_.id).toSeq shouldBe Seq(Fixtures.corpus(0).id)
+    spark.streams.active shouldBe empty
+  }
+
   test("generic sum-log compaction: classifier counts fold-invariant, stale replay ignored, second pass a no-op") {
     import graft.streaming.EventStream
     import graft.operators.TextAnalysis
