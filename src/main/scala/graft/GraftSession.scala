@@ -2,9 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The run harness: the one local SparkSession the mains (Bench, Verify,
-  * ScaleProbe) and the test suite run on, so every tool measures the same
-  * engine, and the per-process scratch root they write into.
+/** The run harness: the one local SparkSession the mains (Bench, Verify)
+  * and the test suite run on, so every tool measures the same engine, and
+  * the per-process scratch root they write into.
   */
 object GraftSession {
   /** `SPARK_GRAFT_CPUS`: the local[N] width of a main (default 4). */
@@ -61,6 +61,13 @@ object GraftSession {
   }
 
   def scratch(name: String): String = s"$scratchRoot/$name"
+
+  /** A new, uniquely named directory under the scratch root, for staging
+    * that must not be shared between calls; the root's shutdown hook
+    * deletes it with the rest.
+    */
+  def scratchDir(prefix: String): java.nio.file.Path =
+    java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get(scratchRoot), prefix)
 
   /** Stop every active streaming query, then the session: a query still
     * active at `spark.stop()` logs a StateStore maintenance trace after

@@ -59,7 +59,7 @@ object SparkEntry {
 
   private def freshStore(s: SparkSession): MetadataStore =
     new MetadataStore(s,
-      java.nio.file.Files.createTempDirectory("graft-verify-store").toString, storeClock)
+      GraftSession.scratchDir("graft-verify-store").toString, storeClock)
 
   /** Corpus rows in a zero-padded id range, as typed entries. */
   private def corpusEntries(s: SparkSession, d: String, lo: String, hi: String): Dataset[MetadataEntry] =
@@ -1420,7 +1420,7 @@ object SparkEntry {
       EventStream.streamIdfDeltaFold(s, src, deltas, Seq("red", "widget"))
       EventStream.compactIdfDeltaLog(s, deltas, upToBatch = 2L)
       QueryCompiler.idfStatsWithDeltas(stats0,
-          EventStream.readIdfDeltaLog(s, deltas))
+          EventStream.readDeltaLog(s, deltas))
         .orderBy("term")
     }),
 
@@ -1738,7 +1738,7 @@ object SparkEntry {
     "x2_export" -> ((s, d) => {
       val st = freshStore(s)
       st.bulkLoad(corpusEntries(s, d, "000001", "000100"))
-      val out = java.nio.file.Files.createTempDirectory("graft-export").toString + "/exported"
+      val out = GraftSession.scratchDir("graft-export").toString + "/exported"
       st.export(out)
       s.read.parquet(out).select(col("id"), col("category"), col("title")).orderBy("id")
     }),

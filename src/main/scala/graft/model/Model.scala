@@ -31,13 +31,6 @@ final case class MetadataEntry(
 
 object MetadataSchema {
 
-  /** Write-side required fields (reference: metadata_entry.py:41-52 — all
-    * required except creationTime, which is defaulted to the injected clock).
-    */
-  val requiredFields: Seq[String] = Seq(
-    "category", "dataSample", "format", "isPublic", "orgUUID",
-    "recordCount", "size", "sourceUri", "targetUri", "title")
-
   /** Legal filter fields = the Cerberus schema keys, NOT the mapping keys:
     * `storeType` is filterable-in-principle via the ES mapping but the
     * reference whitelists off the Cerberus schema

@@ -32,15 +32,10 @@ object Similarity {
   /** Native L2 norm ([[graft.functions.VecNormExpr]]), same contract. */
   def norm(a: Column): Column = graft.functions.VectorHash.normCol(a)
 
-  /** Cosine similarity, rounded to 6 decimals (the comparison granularity —
-    * keeps cross-engine float summation noise out of orderings).
-    */
-  def cosine(a: Column, b: Column): Column =
-    round(dot(a, b) / (norm(a) * norm(b)), 6)
-
-  /** Cosine from precomputed norms — same ops in the same order as [[cosine]]
-    * (dot / (na * nb), round 6), so results are bit-identical; callers
-    * materialize each vector's norm once instead of twice per candidate pair.
+  /** Cosine similarity from precomputed norms, dot / (na * nb), rounded to
+    * 6 decimals (the comparison granularity — keeps cross-engine float
+    * summation noise out of orderings); callers materialize each vector's
+    * norm once instead of twice per candidate pair.
     */
   def cosineWithNorms(a: Column, b: Column, na: Column, nb: Column): Column =
     round(dot(a, b) / (na * nb), 6)
@@ -826,26 +821,6 @@ object Similarity {
                                shortlistSize: Int, pred: Column): DataFrame =
     ivfPqTopKIndexed(index.where(pred), cents, books, corpus, queries, k,
       nprobe, shortlistSize)
-
-  /** One-call IVF-PQ search: build both codebooks, index, search.
-    * Default knobs are the r11-tuned point: the composed recall is
-    * COARSE-quantizer-bounded (shortlist 150→300 buys ≤2pp at any nprobe
-    * — the PQ side already recalls 0.948 standalone), so the knob that
-    * moves it is nprobe: measured recall@10 on organic sf0.01 geometry is
-    * 0.764 at nprobe=16, 0.854 at 20, 0.900 at 24 (v11_ann_recall pins
-    * 16 and 20). nprobe=20 is the default — past the 0.85 bar at 20/32
-    * of the compressed cells scanned; at production nlist (thousands of
-    * cells) the same nprobe/nlist fraction prices proportionally fewer
-    * rows.
-    */
-  def ivfPqTopK(corpus: DataFrame, queries: DataFrame, k: Int,
-                nlist: Int = 32, nprobe: Int = 20, m: Int = 8,
-                codesPerSub: Int = 64, shortlistSize: Int = 150): DataFrame = {
-    val cents = ivfCentroids(corpus, nlist)
-    val books = pqCodebooks(corpus, m, codesPerSub)
-    ivfPqTopKIndexed(ivfPqIndex(corpus, cents, books), cents, books,
-      corpus, queries, k, nprobe, shortlistSize)
-  }
 
   // ------------------------------------------------- embedding near-dup pairs
 

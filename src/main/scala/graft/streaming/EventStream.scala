@@ -52,15 +52,6 @@ final case class SessionPath(user_id: Long, session_start: java.sql.Timestamp,
   */
 object EventStream {
 
-  val EventSchema: StructType = StructType(Seq(
-    StructField("event_id", LongType),
-    StructField("ts", TimestampType),
-    StructField("user_id", LongType),
-    StructField("event_type", StringType),
-    StructField("value", DoubleType),
-    StructField("props", StringType)
-  ))
-
   /** Normalize the event-time column: long nanosecond epochs (how the
     * driver's parquet reads under nanosAsLong) become microsecond
     * timestamps; TIMESTAMP_NTZ (how a timezone-less `timestamp[us]`
@@ -691,7 +682,7 @@ object EventStream {
   private def stageDir(path: String, copies: Int = 1): String = {
     val p = java.nio.file.Paths.get(path)
     if (java.nio.file.Files.isRegularFile(p) || copies > 1) {
-      val d = java.nio.file.Files.createTempDirectory("graft-stream")
+      val d = graft.GraftSession.scratchDir("graft-stream")
       val files =
         if (java.nio.file.Files.isRegularFile(p)) Seq(p)
         else graft.util.FsUtil.listDir(p)(
@@ -730,7 +721,7 @@ object EventStream {
     */
   def backfillWindowedCountsJsonl(spark: SparkSession, path: String): DataFrame = {
     val batch = spark.read.parquet(path)
-    val staged = java.nio.file.Files.createTempDirectory("graft-jsonl-events").toString + "/events"
+    val staged = graft.GraftSession.scratchDir("graft-jsonl-events").toString + "/events"
     graft.sources.Jsonl.write(batch, staged)
     runToMemoryTable(spark, "complete")(bf =>
       windowedCounts(withEventTime(
@@ -1065,9 +1056,6 @@ object EventStream {
     spark.read.parquet(s"$logDir/batches")
       .where(col("batch") > horizon || col("batch") === -1L)
   }
-
-  def readIdfDeltaLog(spark: SparkSession, deltaDir: String): DataFrame =
-    readDeltaLog(spark, deltaDir)
 
   private def idfCompactionHorizon(deltaDir: String): Long = {
     val marker = java.nio.file.Paths.get(deltaDir, "_compacted_up_to")

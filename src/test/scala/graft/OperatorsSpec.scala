@@ -1037,8 +1037,10 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
     // vector 1 is parallel to query 0 → same nearest cell (probed first),
     // identical subspace codes (maximal ADC), survives a tight shortlist,
     // re-ranks to exact cos 1.0 at rank 1
-    val out = Similarity.ivfPqTopK(embDf, embDf.where($"vec_id" === 0), 5,
-        nlist = 8, nprobe = 2, m = 4, codesPerSub = 8, shortlistSize = 10)
+    val cents = Similarity.ivfCentroids(embDf, 8)
+    val books = Similarity.pqCodebooks(embDf, 4, 8)
+    val out = Similarity.ivfPqTopKIndexed(Similarity.ivfPqIndex(embDf, cents, books), cents,
+        books, embDf, embDf.where($"vec_id" === 0), 5, nprobe = 2, shortlistSize = 10)
       .orderBy("rank").collect()
     out.head.getLong(2) shouldBe 1L
     out.head.getDouble(3) shouldBe 1.0

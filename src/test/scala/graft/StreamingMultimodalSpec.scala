@@ -251,6 +251,18 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
     spark.streams.active shouldBe empty
   }
 
+  test("backfills stage their input under the run's scratch root, not in java.io.tmpdir") {
+    val path = "/root/testdata/sf0.001/events.parquet"
+    val staging = "graft-(stream|jsonl-events)\\d+".r
+    def staged(): Set[String] = graft.util.FsUtil.listDir(
+      java.nio.file.Paths.get(sys.props("java.io.tmpdir")))(
+      _.map(_.getFileName.toString).filter(staging.matches).toSet)
+    val before = staged()
+    EventStream.backfillWindowedCountsJsonl(spark, path).count() should be > 0L
+    EventStream.backfillWindowedCounts(spark, path).count() should be > 0L
+    staged() -- before shouldBe empty
+  }
+
   test("sessionization backfill equals the batch gaps-and-islands computation") {
     val path = "/root/testdata/sf0.001/events.parquet"
     val streamed = EventStream.backfillSessions(spark, path)
@@ -613,7 +625,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
       meta.where($"id".cast("long") % 10 >= 4), terms)
     def folded(): Seq[(String, Long, Long)] =
       QueryCompiler.idfStatsWithDeltas(stats0,
-          EventStream.readIdfDeltaLog(spark, s"$root/deltas"))
+          EventStream.readDeltaLog(spark, s"$root/deltas"))
         .orderBy("term").as[(String, Long, Long)].collect().toSeq
 
     EventStream.streamIdfDeltaFold(spark, s"$root/src", s"$root/deltas", terms)
