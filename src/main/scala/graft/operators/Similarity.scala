@@ -824,11 +824,6 @@ object Similarity {
 
   // ------------------------------------------------- embedding near-dup pairs
 
-  /** Embedding-cosine near-duplicate pairs: all pairs above a cosine
-    * threshold, blocked through the SRP signature (vectors within a small
-    * angle agree on most sign bits, so near-dups collide on ≥1 band with
-    * high probability). Never an all-pairs cross join.
-    */
   /** SemDeDup-style semantic near-duplicate pairs blocked by the IVF cell
     * structure (Abbas et al.: cluster the embedding space, dedup within
     * clusters): every vector lands in its `probes` nearest coarse cells
@@ -866,6 +861,11 @@ object Similarity {
       .where(col("cos") >= threshold)
   }
 
+  /** Embedding-cosine near-duplicate pairs: all pairs above a cosine
+    * threshold, blocked through the SRP signature (vectors within a small
+    * angle agree on most sign bits, so near-dups collide on ≥1 band with
+    * high probability). Never an all-pairs cross join.
+    */
   def cosineNearDupPairs(emb: DataFrame, threshold: Double = 0.95,
                          bits: Int = 24, bands: Int = 4): DataFrame = {
     // 6-bit band keys: 64 buckets/band cuts candidate pairs ~6× vs 4-bit

@@ -119,4 +119,23 @@ class BenchOutputSpec extends AnyFunSuite with Matchers {
     val oracle = SparkEntry.oracleSql
     keys(Verify.oracleSqlJson(oracle)) shouldBe oracle.keys.toSeq
   }
+
+  test("the registry: 330 distinct entries, each in its prefix's family, queries and oracleSql keyed alike") {
+    import graft.entries._
+    val families = Seq("f" -> Filters.entries, "q" -> Ranking.entries,
+      "a" -> Aggregations.entries, "x" -> Formats.entries, "s" -> Storage.entries,
+      "t" -> Text.entries, "d" -> Duplicates.entries, "p" -> Pretraining.entries,
+      "v" -> Vectors.entries, "o" -> Olap.entries, "e" -> Streams.entries,
+      "j" -> EventJoins.entries, "c" -> Checks.entries, "g" -> Graphs.entries,
+      "m" -> Media.entries, "r" -> Results.entries)
+    val names = SparkEntry.registry.map(_.name)
+    names.size shouldBe 330
+    names.distinct.size shouldBe 330
+    families.map(_._1).distinct.size shouldBe families.size
+    families.flatMap(_._2) should contain theSameElementsAs SparkEntry.registry
+    for ((prefix, entries) <- families; e <- entries)
+      withClue(e.name)(e.name.takeWhile(_.isLetter) shouldBe prefix)
+    SparkEntry.queries.keySet shouldBe SparkEntry.oracleSql.keySet
+    SparkEntry.queries.keySet shouldBe names.toSet
+  }
 }

@@ -39,7 +39,7 @@ class HttpCatalogSpec extends AnyFunSuite with Matchers with SparkSupport
   override def beforeAll(): Unit = {
     super.beforeAll()
     val store = new MetadataStore(spark,
-      Files.createTempDirectory("graft-http-store").toString,
+      GraftSession.scratchDir("graft-http-store").toString,
       () => java.sql.Timestamp.valueOf("2020-01-01 00:00:00"))
     import spark.implicits._
     store.bulkLoad(spark.createDataset(Fixtures.corpus))
@@ -202,7 +202,7 @@ class HttpCatalogSpec extends AnyFunSuite with Matchers with SparkSupport
   test("admin route: 403 for non-admins; PUT bulk-reloads omitting corrupted rows; DELETE drops") {
     // isolated server+store: the DELETE here wipes the whole table
     val store2 = new MetadataStore(spark,
-      Files.createTempDirectory("graft-http-admin").toString,
+      GraftSession.scratchDir("graft-http-admin").toString,
       () => java.sql.Timestamp.valueOf("2020-01-01 00:00:00"))
     val http2 = new HttpCatalog(new CatalogService(spark, store2), verifier,
       p => memberships(p.userId))
@@ -245,7 +245,7 @@ class HttpCatalogSpec extends AnyFunSuite with Matchers with SparkSupport
 
   test("a route that throws answers 500 with the message and logs the stack trace to stderr") {
     val broken = new MetadataStore(spark,
-      Files.createTempDirectory("graft-http-broken").toString,
+      GraftSession.scratchDir("graft-http-broken").toString,
       () => java.sql.Timestamp.valueOf("2020-01-01 00:00:00")) {
       override def current: org.apache.spark.sql.Dataset[graft.model.MetadataEntry] =
         throw new IllegalStateException("store unavailable")

@@ -82,7 +82,7 @@ class JoinsPropertySpec extends AnyFunSuite with Matchers with SparkSupport {
       val docs = (0 until 200).map(i =>
         (rnd.nextLong().abs % 1000000L * 1000 + i, s"body $i ${rnd.nextInt(99)}"))
         .toDF("doc_id", "text")
-      val out = java.nio.file.Files.createTempDirectory("graft-shardprop").toString + "/c"
+      val out = GraftSession.scratchDir("graft-shardprop").toString + "/c"
       graft.operators.Pipeline.shardExport(docs, out, shards)
       val back = spark.read.parquet(out)
       back.select("doc_id", "text").as[(Long, String)].collect().sorted.toSeq shouldBe

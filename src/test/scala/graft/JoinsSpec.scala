@@ -367,7 +367,7 @@ class JoinsSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("bucketed tables join exchange-free; unbucketed baseline shuffles") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-bucketspec").toString
+    val wh = GraftSession.scratchDir("graft-bucketspec").toString
     val orders = spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
     val lineitem = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
     graft.sources.Bucketed.writeTable(orders, "spec_orders", "o_orderkey", 8, s"$wh/o")
@@ -392,7 +392,7 @@ class JoinsSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("date-partitioned layout: a day filter is a partition filter and round-trips rows") {
-    val out = java.nio.file.Files.createTempDirectory("graft-bydate-spec").toString + "/ev"
+    val out = GraftSession.scratchDir("graft-bydate-spec").toString + "/ev"
     val ev = graft.streaming.EventStream.withEventTime(
       spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
     graft.sources.DatePartitioned.writeByDay(ev, "ts", out)

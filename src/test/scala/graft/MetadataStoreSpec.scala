@@ -16,7 +16,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
   private val fixedClock: () => Timestamp = () => Timestamp.valueOf("2020-01-01 00:00:00")
 
   private def freshStore(): MetadataStore =
-    new MetadataStore(spark, Files.createTempDirectory("graft-store").toString, fixedClock)
+    new MetadataStore(spark, GraftSession.scratchDir("graft-store").toString, fixedClock)
 
   private val e0 = Fixtures.corpus.head
 
@@ -30,7 +30,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     import graft.store.PairCommit
     val st = freshStore()
     Fixtures.corpus.take(5).foreach(st.upsert) // v1..v5
-    val root = Files.createTempDirectory("graft-pair").toString
+    val root = GraftSession.scratchDir("graft-pair").toString
     val m0 = PairCommit.init(root, st, 4)
     m0 shouldBe PairCommit.Manifest(5L, 1L)
     val gen1Files = graft.util.FsUtil.listDir(
@@ -74,7 +74,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     import graft.store.PairCommit
     val st = freshStore()
     Fixtures.corpus.take(5).foreach(st.upsert) // v1..v5
-    val root = Files.createTempDirectory("graft-pair-rb").toString
+    val root = GraftSession.scratchDir("graft-pair-rb").toString
     PairCommit.init(root, st, 4)
     // three advances → four generations
     st.partialUpdate(Fixtures.corpus(1).id, Map("title" -> "rev-b")) // v6
@@ -111,7 +111,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     // a pair over an EMPTY store: gen-1 has no bucket dirs — the overlay
     // returns the empty history with the full schema, not a reduce() throw
     val empty = freshStore()
-    val eroot = Files.createTempDirectory("graft-pair-empty").toString
+    val eroot = GraftSession.scratchDir("graft-pair-empty").toString
     PairCommit.init(eroot, empty, 4)
     val eh = PairCommit.readHistory(spark, eroot)
     eh.count() shouldBe 0L
@@ -178,7 +178,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
       .unionByName(nulled(e(2).id, Map.empty).withColumn("_delete", lit(true)))
       .unionByName(all.where(col("id") === e(5).id).withColumn("_delete", lit(false)))
       .unionByName(nulled(e(6).id, Map.empty).withColumn("_delete", lit(true)))
-    val root = Files.createTempDirectory("graft-smerge").toString
+    val root = GraftSession.scratchDir("graft-smerge").toString
     feed.repartition(3).write.parquet(s"$root/src")
     EventStream.streamMergeFeed(spark, s"$root/src", st)
     val after = st.current.collect().map(x => x.id -> x).toMap
@@ -350,7 +350,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
 
   test("bucketed compaction: same contents, lookups and mutations still correct") {
     val st = new MetadataStore(spark,
-      Files.createTempDirectory("graft-store-bucketed").toString, fixedClock, numBuckets = 8)
+      GraftSession.scratchDir("graft-store-bucketed").toString, fixedClock, numBuckets = 8)
     Fixtures.corpus.foreach(st.upsert)
     st.compact()
     st.current.collect().toSet shouldBe Fixtures.corpus.toSet
@@ -367,7 +367,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("bucketed layout is self-describing: reopening with a different numBuckets stays correct") {
-    val dir = Files.createTempDirectory("graft-store-rebucket").toString
+    val dir = GraftSession.scratchDir("graft-store-rebucket").toString
     val st8 = new MetadataStore(spark, dir, fixedClock, numBuckets = 8)
     Fixtures.corpus.foreach(st8.upsert)
     st8.compact()
@@ -401,7 +401,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("crash recovery: an orphan base from a failed compact never hides later mutations") {
-    val dir = Files.createTempDirectory("graft-store-crash")
+    val dir = GraftSession.scratchDir("graft-store-crash")
     val st = new MetadataStore(spark, dir.toString, fixedClock)
     st.upsert(e0) // delta-1, CURRENT=1
     st.compact() // base-2, CURRENT=2
@@ -468,7 +468,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("bulkLoad: duplicate ids land as ONE row per id in the committed delta; newest creationTime wins") {
-    val dir = Files.createTempDirectory("graft-store-bulkdup")
+    val dir = GraftSession.scratchDir("graft-store-bulkdup")
     val st = new MetadataStore(spark, dir.toString, fixedClock)
     val older = Fixtures.corpus(2).copy(title = "older",
       creationTime = Timestamp.valueOf("2019-01-01 00:00:00"))
@@ -557,7 +557,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("dataset upsertAll: an invalid row aborts the whole batch before anything commits") {
-    val dir = Files.createTempDirectory("graft-store-dsinv")
+    val dir = GraftSession.scratchDir("graft-store-dsinv")
     val st = new MetadataStore(spark, dir.toString, fixedClock)
     val bad = Fixtures.corpus(1).copy(targetUri = "some_path") // reference-invalid shape
     val e = intercept[IllegalArgumentException] {
@@ -572,7 +572,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("bulkLoad: a write that throws propagates and leaves no staging debris, nothing committed") {
-    val dir = Files.createTempDirectory("graft-store-bulkthrow")
+    val dir = GraftSession.scratchDir("graft-store-bulkthrow")
     val st = new MetadataStore(spark, dir.toString, fixedClock)
     st.upsert(e0) // v1
     val poison = Fixtures.corpus(2).id
@@ -654,7 +654,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("CAS upsert races a plain writer on a second instance: the guard catches the interleave") {
-    val root = Files.createTempDirectory("graft-store-cas").toString
+    val root = GraftSession.scratchDir("graft-store-cas").toString
     val a = new MetadataStore(spark, root, fixedClock)
     val b = new MetadataStore(spark, root, fixedClock)
     val e = Fixtures.corpus.head
@@ -670,7 +670,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("optimistic concurrency: two instances on one root, racing commits — none lost") {
-    val dir = Files.createTempDirectory("graft-store-cc").toString
+    val dir = GraftSession.scratchDir("graft-store-cc").toString
     val a = new MetadataStore(spark, dir, fixedClock)
     val b = new MetadataStore(spark, dir, fixedClock)
     // sequential interleave first: each instance commits against whatever
@@ -703,7 +703,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     // between snapshot and commit would be SHADOWED by the base unless the
     // freshness CAS rejects the stale base and re-snapshots (the lost-update
     // mode the optimistic protocol exists to prevent)
-    val dir = Files.createTempDirectory("graft-store-compactrace").toString
+    val dir = GraftSession.scratchDir("graft-store-compactrace").toString
     val a = new MetadataStore(spark, dir, fixedClock)
     val b = new MetadataStore(spark, dir, fixedClock)
     a.upsert(Fixtures.corpus(0))
@@ -721,7 +721,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("vacuum: disk shrinks, retained window resolves unchanged, below-floor reads throw") {
-    val dir = Files.createTempDirectory("graft-store-vacuum")
+    val dir = GraftSession.scratchDir("graft-store-vacuum")
     val st = new MetadataStore(spark, dir.toString, fixedClock)
     Fixtures.corpus.take(3).foreach(st.upsert) // deltas 1..3
     st.compact() // base-4
@@ -862,7 +862,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     val e = Fixtures.corpus
     // seed enough ids to populate several buckets
     (0 until 6).foreach(i => st.upsert(e(i)))          // v1..v6
-    val dir = java.nio.file.Files.createTempDirectory("graft-hist").toString + "/h"
+    val dir = GraftSession.scratchDir("graft-hist").toString + "/h"
     val nB = 8
     MetadataStore.writeHistory(st.history(), nB, dir)
 
@@ -915,7 +915,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
     val e = Fixtures.corpus
     (0 until 6).foreach(i => st.upsert(e(i)))          // v1..v6
     st.partialUpdate(e(0).id, Map("title" -> "r7"))    // v7: e0 now has 2 intervals
-    val dir = java.nio.file.Files.createTempDirectory("graft-purge").toString + "/h"
+    val dir = GraftSession.scratchDir("graft-purge").toString + "/h"
     val nB = 8
     MetadataStore.writeHistory(st.history(), nB, dir)
 
@@ -958,7 +958,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
 
   test("log redaction: the ids vanish from EVERY version — deltas and the bucketed " +
     "base surgically rewritten, commit structure preserved, crash remnant heals") {
-    val dir = Files.createTempDirectory("graft-redact").toString
+    val dir = GraftSession.scratchDir("graft-redact").toString
     val st = new MetadataStore(spark, dir, fixedClock, numBuckets = 4)
     val e = Fixtures.corpus
     (0 until 6).foreach(i => st.upsert(e(i)))        // v1..v6
@@ -1057,7 +1057,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
 
   test("point reads: creationTime round-trips exactly through an INT96 base, a driver-written " +
     "delta and a bucketed base without its sidecar") {
-    val dir = Files.createTempDirectory("graft-store-ts")
+    val dir = GraftSession.scratchDir("graft-store-ts")
     val st = new MetadataStore(spark, dir.toString, fixedClock)
     val stamps = Seq("2019-03-04 05:06:07.123456", "1970-01-01 00:00:00.000001",
       "1969-12-31 23:59:59.999999").map(Timestamp.valueOf)
@@ -1087,7 +1087,7 @@ class MetadataStoreSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("point reads: a published-but-uncommitted segment and a staging dir stay invisible to get") {
-    val dir = Files.createTempDirectory("graft-store-orphan")
+    val dir = GraftSession.scratchDir("graft-store-orphan")
     val st = new MetadataStore(spark, dir.toString, fixedClock)
     val e1 = Fixtures.corpus(1)
     st.upsert(e0) // v1

@@ -187,7 +187,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
     // LineageCut.reliable materializes each round to the context's
     // checkpoint dir instead. (Setting the dir is session-global — later
     // LineageCut.cut calls in this JVM may also go reliable; harmless.)
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val ckpt = GraftSession.scratchDir("graft-ckpt")
     spark.sparkContext.setCheckpointDir(ckpt.toString)
     val docs = (0L to 9L).map(i => (i, s"doc $i")).toDF("doc_id", "text")
     val pairs = Seq((0L, 1L), (1L, 2L), (2L, 3L), (7L, 8L)).toDF("a_id", "b_id")
@@ -572,7 +572,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
 
   test("indexed ivf (parquet round-trip) equals the inline ivf at every probe width") {
     val cents = Similarity.ivfCentroids(embDf, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfidx").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-ivfidx").toString + "/idx"
     Similarity.ivfIndex(embDf, cents).write.partitionBy("cell").parquet(dir)
     val idx = spark.read.parquet(dir)
     val q = embDf.where($"vec_id" < 3)
@@ -587,7 +587,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
 
   test("range search: full probe equals a driver-side brute-force radius scan; partial probe is a subset") {
     val cents = Similarity.ivfCentroids(embDf, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-rangeidx").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-rangeidx").toString + "/idx"
     Similarity.ivfIndex(embDf, cents).write.partitionBy("cell").parquet(dir)
     val idx = spark.read.parquet(dir)
     val q = embDf.where($"vec_id" < 3)
@@ -815,7 +815,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
   test("pre-filtered ivf: exact under the predicate at full probe; post-filter demonstrably under-fills") {
     val labeled = embDf.withColumn("label", ($"vec_id" % 2).cast("int"))
     val cents = Similarity.ivfCentroids(labeled, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivffilt").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-ivffilt").toString + "/idx"
     Similarity.ivfIndex(labeled, cents).write.partitionBy("cell").parquet(dir)
     val idx = spark.read.parquet(dir)
     // the index carries the metadata column — filtering is a pushed scan
@@ -844,7 +844,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
     val base = embDf.where($"vec_id" < 20)
     val batch = embDf.where($"vec_id" >= 20)
     val cents = Similarity.ivfCentroids(base, 8) // codebook frozen at index build
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfapp").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-ivfapp").toString + "/idx"
     Similarity.ivfIndex(base, cents).write.partitionBy("cell").parquet(dir)
     Similarity.ivfAppend(batch, cents, dir)
     val appended = spark.read.parquet(dir)
@@ -865,7 +865,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
 
   test("ivf delete: masked read ≡ compacted ≡ rebuild; compaction touches only affected cells") {
     val cents = Similarity.ivfCentroids(embDf, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfdel").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-ivfdel").toString + "/idx"
     Similarity.ivfIndex(embDf, cents).write.partitionBy("cell").parquet(dir)
     val q = embDf.where($"vec_id" === 0)
     // delete the parallel vector (the unfiltered top-1) plus some noise
@@ -916,7 +916,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
 
   test("ivf small-file compaction: accreted appends collapse to one file per hot cell, search identical, cold cells untouched") {
     val cents = Similarity.ivfCentroids(embDf, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfsmall").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-ivfsmall").toString + "/idx"
     // base index from half the corpus, then FOUR append batches — the
     // accretion path: each append lands new files in its touched cells
     val base = embDf.where($"vec_id" < 20)
@@ -1264,7 +1264,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
   test("shard export: one file per shard, balanced, deterministic bytes, manifest matches") {
     val docs = (0L until 1000L).map(i => (i, s"document body $i", s"src${i % 3}"))
       .toDF("doc_id", "text", "source")
-    val root = java.nio.file.Files.createTempDirectory("graft-shardexp")
+    val root = GraftSession.scratchDir("graft-shardexp")
     val out = s"$root/corpus"
     graft.operators.Pipeline.shardExport(docs, out, shards = 8)
     def bucket(id: Long) = ((id * 2654435761L) % 4294967296L) % 8L
@@ -1307,7 +1307,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
     "fresh filtered export), sweeps an emptied shard, keeps the manifest consistent") {
     val docs = (0L until 1000L).map(i => (i, s"document body $i", s"src${i % 3}"))
       .toDF("doc_id", "text", "source")
-    val root = java.nio.file.Files.createTempDirectory("graft-takedown")
+    val root = GraftSession.scratchDir("graft-takedown")
     val out = s"$root/corpus"
     graft.operators.Pipeline.shardExport(docs, out, shards = 8)
     def bucket(id: Long) = ((id * 2654435761L) % 4294967296L) % 8L
@@ -1362,7 +1362,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
     val docs = (0L until 300L).map(i =>
         (i, s"document body $i", if (i % 50 == 0) null else s"src${i % 3}"))
       .toDF("doc_id", "text", "source")
-    val root = java.nio.file.Files.createTempDirectory("graft-revoke")
+    val root = GraftSession.scratchDir("graft-revoke")
     val out = s"$root/corpus"
     graft.operators.Pipeline.shardExport(docs, out, shards = 8)
     val doomedCount = (0L until 300L).count(i => i % 50 != 0 && i % 3 == 1).toLong
@@ -1399,7 +1399,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
     val m2 = e2.map(r => r._1 -> ((r._2, r._3))).toMap
     (0L until 400L).count(i => m1(i) == m2(i)).toDouble / 400 should be < 0.5
     // replay: the same seed exports byte-identical shard files
-    val root = java.nio.file.Files.createTempDirectory("graft-epoch")
+    val root = GraftSession.scratchDir("graft-epoch")
     val out = s"$root/epoch1"
     def dataFiles(p: java.nio.file.Path) = graft.util.FsUtil.listDir(p)(
       _.filter(_.getFileName.toString.endsWith(".parquet")).toSeq)
@@ -1712,7 +1712,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
   test("JSONL quarantine: clean rows round-trip intact, bad lines captured verbatim") {
     val src = Seq((1L, "hello world"), (2L, "with \"quotes\" and, commas"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft-quarantine").toString
+    val dir = GraftSession.scratchDir("graft-quarantine").toString
     graft.sources.Jsonl.write(src, dir)
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "part-bad.json"),
@@ -1729,7 +1729,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("schema-evolution merge: old-generation rows null-fill the added column, new keep it") {
-    val root = java.nio.file.Files.createTempDirectory("graft-evolve-spec").toString
+    val root = GraftSession.scratchDir("graft-evolve-spec").toString
     Seq((1L, "a")).toDF("id", "v").write.parquet(s"$root/gen0")
     Seq((2L, "b", 9L)).toDF("id", "v", "extra").write.parquet(s"$root/gen1")
     val merged = graft.sources.SchemaEvolution.readMerged(spark, s"$root/gen0", s"$root/gen1")
@@ -1740,7 +1740,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("compaction: 64 shattered files rewrite to the byte-sized count with identical rows") {
-    val root = java.nio.file.Files.createTempDirectory("graft-compact-spec").toString
+    val root = GraftSession.scratchDir("graft-compact-spec").toString
     val src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     src.repartition(64).write.parquet(s"$root/small")
     def parquetFiles(dir: String): Int = {
@@ -1765,7 +1765,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("day refresh: dynamic overwrite replaces exactly the day present; other days byte-identical") {
-    val root = java.nio.file.Files.createTempDirectory("graft-dayrefresh").toString
+    val root = GraftSession.scratchDir("graft-dayrefresh").toString
     val out = s"$root/events"
     val ts = (day: Int, h: Int) =>
       java.sql.Timestamp.valueOf(f"2024-01-$day%02d $h%02d:30:00")
@@ -1824,7 +1824,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom-spec").toString + "/docs"
+    val dir = GraftSession.scratchDir("graft-bloom-spec").toString + "/docs"
     graft.sources.BloomLayout.write(docs, "doc_id", dir, files = 16, expectedNdv = 1000L)
     val key = 321L
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1867,7 +1867,7 @@ class OperatorsSpec extends AnyFunSuite with Matchers with SparkSupport {
     import org.apache.parquet.hadoop.util.HadoopInputFile
     val ev = graft.streaming.EventStream.withEventTime(
       spark.read.parquet("/root/testdata/sf0.01/events.parquet"))
-    val root = java.nio.file.Files.createTempDirectory("graft-zorder-spec").toString
+    val root = GraftSession.scratchDir("graft-zorder-spec").toString
     graft.sources.SortedLayout.write(ev, "ts", s"$root/tssorted", files = 32)
     graft.sources.ZOrderLayout.write(ev, "ts", "user_id", s"$root/zorder", files = 32)
     val conf = spark.sparkContext.hadoopConfiguration

@@ -125,7 +125,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
   test("raw-column query filters push into the parquet scan of a materialized entry table") {
     // the Corpus derivation computes columns from p_partkey (nothing to push);
     // a real deployment stores entries materialized — model that here
-    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-meta").toString + "/meta"
+    val dir = GraftSession.scratchDir("graft-planaudit-meta").toString + "/meta"
     Corpus.metadata(spark, "/root/testdata/sf0.001").write.parquet(dir)
     val cq = QueryCompiler.compile(QueryCompiler.parse(
       """{"filters":[{"creationTime":["2015-03-01 00:00:00","2015-06-01 00:00:00"]}]}"""),
@@ -144,7 +144,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("S2 point lookup pushes the id filter into every log scan (no full-table window)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-store").toString
+    val dir = GraftSession.scratchDir("graft-planaudit-store").toString
     val st = new graft.store.MetadataStore(spark, dir,
       () => java.sql.Timestamp.valueOf("2020-01-01 00:00:00"))
     val entries = Corpus.metadata(spark, "/root/testdata/sf0.001")
@@ -161,7 +161,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("bucketed base: point lookup prunes to one _bucket partition directory") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-bucketed").toString
+    val dir = GraftSession.scratchDir("graft-planaudit-bucketed").toString
     val st = new graft.store.MetadataStore(spark, dir,
       () => java.sql.Timestamp.valueOf("2020-01-01 00:00:00"), numBuckets = 8)
     val entries = Corpus.metadata(spark, "/root/testdata/sf0.001")
@@ -180,7 +180,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
 
   test("one-segment store: current and the point lookup read the segment as it is — " +
     "no Exchange, no Window — after a bulk load and after a compaction") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-oneseg").toString
+    val dir = GraftSession.scratchDir("graft-planaudit-oneseg").toString
     val st = new graft.store.MetadataStore(spark, dir,
       () => java.sql.Timestamp.valueOf("2020-01-01 00:00:00"))
     val entries = Corpus.metadata(spark, "/root/testdata/sf0.001")
@@ -207,7 +207,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
 
   test("persisted-history refresh: the keep-slice scan prunes STATICALLY to the " +
     "touched buckets — a literal bucket IN partition filter, cold dirs never listed") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-planaudit-hist").toString
+    val dir = GraftSession.scratchDir("graft-planaudit-hist").toString
     val st = new graft.store.MetadataStore(spark, dir,
       () => java.sql.Timestamp.valueOf("2020-01-01 00:00:00"))
     val entries = Corpus.metadata(spark, "/root/testdata/sf0.001")
@@ -407,7 +407,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id", $"embedding")
     val cents = graft.operators.Similarity.ivfCentroids(corpus, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfidx-audit").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-ivfidx-audit").toString + "/idx"
     graft.operators.Similarity.ivfIndex(corpus, cents)
       .write.partitionBy("cell").parquet(dir)
     val out = graft.operators.Similarity.ivfTopKIndexed(spark.read.parquet(dir), cents,
@@ -424,7 +424,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id", $"embedding", $"label")
     val cents = graft.operators.Similarity.ivfCentroids(corpus, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivffilt-audit").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-ivffilt-audit").toString + "/idx"
     graft.operators.Similarity.ivfIndex(corpus, cents)
       .write.partitionBy("cell").parquet(dir)
     val out = graft.operators.Similarity.ivfFilteredTopKIndexed(
@@ -443,7 +443,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
       .select($"vec_id", $"embedding")
     val cents = graft.operators.Similarity.ivfCentroids(corpus, 8)
     val books = graft.operators.Similarity.pqCodebooks(corpus, 8, 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpq-audit").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-ivfpq-audit").toString + "/idx"
     graft.operators.Similarity.ivfPqIndex(corpus, cents, books)
       .write.partitionBy("cell").parquet(dir)
     val out = graft.operators.Similarity.ivfPqTopKIndexed(
@@ -459,7 +459,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
       .select($"vec_id", $"embedding", $"label")
     val cents = graft.operators.Similarity.ivfCentroids(corpus, 8)
     val books = graft.operators.Similarity.pqCodebooks(corpus, 8, 16)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfpqfilt-audit").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-ivfpqfilt-audit").toString + "/idx"
     graft.operators.Similarity.ivfPqIndex(corpus, cents, books, carry = Seq("label"))
       .write.partitionBy("cell").parquet(dir)
     val out = graft.operators.Similarity.ivfPqFilteredTopKIndexed(
@@ -478,7 +478,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id", $"embedding")
     val cents = graft.operators.Similarity.ivfCentroids(corpus, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-ivfdel-audit").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-ivfdel-audit").toString + "/idx"
     graft.operators.Similarity.ivfIndex(corpus, cents)
       .write.partitionBy("cell").parquet(dir)
     graft.operators.Similarity.ivfDelete(corpus.where($"vec_id" < 3).select("vec_id"), dir)
@@ -813,7 +813,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("range-sorted layout: both ts bounds reach the parquet scan as pushed filters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-sorted-audit").toString + "/ev"
+    val dir = GraftSession.scratchDir("graft-sorted-audit").toString + "/ev"
     val ev = graft.streaming.EventStream.withEventTime(
       spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
     graft.sources.SortedLayout.write(ev, "ts", dir, files = 4)
@@ -839,7 +839,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("bloom layout lookup: the IN predicate reaches the parquet scan as a pushed filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-bloom-audit").toString + "/docs"
+    val dir = GraftSession.scratchDir("graft-bloom-audit").toString + "/docs"
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     graft.sources.BloomLayout.write(docs, "doc_id", dir, files = 4, expectedNdv = 100L)
     val plan = graft.sources.BloomLayout.lookup(spark, dir, "doc_id", Seq(7L, 21L))
@@ -849,7 +849,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("z-order box read: all four bounds reach the parquet scan as pushed filters") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-zorder-audit").toString + "/ev"
+    val dir = GraftSession.scratchDir("graft-zorder-audit").toString + "/ev"
     val ev = graft.streaming.EventStream.withEventTime(
       spark.read.parquet("/root/testdata/sf0.001/events.parquet"))
     graft.sources.ZOrderLayout.write(ev, "ts", "user_id", dir, files = 4)
@@ -1033,7 +1033,7 @@ class PlanAuditSpec extends AnyFunSuite with Matchers with SparkSupport {
     val corpus = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
       .select($"vec_id", $"embedding")
     val cents = graft.operators.Similarity.ivfCentroids(corpus, 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft-range-audit").toString + "/idx"
+    val dir = GraftSession.scratchDir("graft-range-audit").toString + "/idx"
     graft.operators.Similarity.ivfIndex(corpus, cents)
       .write.partitionBy("cell").parquet(dir)
     val out = graft.operators.Similarity.rangeSearchIndexed(

@@ -18,7 +18,7 @@ class ServeSpec extends AnyFunSuite with Matchers with SparkSupport {
   private val clock: () => Timestamp = () => Timestamp.valueOf("2020-01-01 00:00:00")
 
   private def service(): (CatalogService, RecordingNotifier, RecordingCascadeDeleter) = {
-    val store = new MetadataStore(spark, Files.createTempDirectory("graft-serve").toString, clock)
+    val store = new MetadataStore(spark, GraftSession.scratchDir("graft-serve").toString, clock)
     val n = new RecordingNotifier
     val c = new RecordingCascadeDeleter
     (new CatalogService(spark, store, n, c), n, c)
@@ -48,7 +48,7 @@ class ServeSpec extends AnyFunSuite with Matchers with SparkSupport {
     // reference: notifier.py:56-63 — {OrgGuid, Message, Timestamp} stamped
     // by the notifier at publish time with an epoch-ms clock.
     var now = 1000L
-    val store = new MetadataStore(spark, Files.createTempDirectory("graft-serve").toString, clock)
+    val store = new MetadataStore(spark, GraftSession.scratchDir("graft-serve").toString, clock)
     val n = new RecordingNotifier(() => { now += 1; now })
     val svc = new CatalogService(spark, store, n, new RecordingCascadeDeleter)
     svc.put(e0)
@@ -108,7 +108,7 @@ class ServeSpec extends AnyFunSuite with Matchers with SparkSupport {
   }
 
   test("the facade self-compacts past its threshold; reads stay correct") {
-    val dir = Files.createTempDirectory("graft-serve-compact").toString
+    val dir = GraftSession.scratchDir("graft-serve-compact").toString
     val store = new MetadataStore(spark, dir, clock)
     val svc = new CatalogService(spark, store, compactThreshold = 4)
     Fixtures.corpus.take(5).foreach(svc.put)

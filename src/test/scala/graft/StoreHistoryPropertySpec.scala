@@ -33,7 +33,7 @@ class StoreHistoryPropertySpec extends AnyFunSuite with Matchers with SparkSuppo
     for (seed <- 1 to 3) {
       val rnd = new scala.util.Random(seed)
       val st = new MetadataStore(spark,
-        Files.createTempDirectory(s"graft-hist-prop-$seed").toString, fixedClock)
+        GraftSession.scratchDir(s"graft-hist-prop-$seed").toString, fixedClock)
       val ids = (0 until 5).map(i => s"id$i")
       // simulation state: id -> current title; events: (id, title, from, to)
       var live = Map.empty[String, (String, Long)] // title, valid_from
@@ -107,7 +107,7 @@ class StoreHistoryPropertySpec extends AnyFunSuite with Matchers with SparkSuppo
   test("property: every writer keeps one row per id per segment; currentAt(v) equals the model at every v") {
     for (seed <- 21 to 22) {
       val rnd = new scala.util.Random(seed)
-      val dir = Files.createTempDirectory(s"graft-seg-prop-$seed")
+      val dir = GraftSession.scratchDir(s"graft-seg-prop-$seed")
       val st = new MetadataStore(spark, dir.toString, fixedClock)
       val ids = (0 until 6).map(i => s"id$i")
       def stamped(id: String, title: String, month: Int): MetadataEntry =
@@ -168,7 +168,7 @@ class StoreHistoryPropertySpec extends AnyFunSuite with Matchers with SparkSuppo
     for (seed <- 11 to 13) {
       val rnd = new scala.util.Random(seed)
       val st = new MetadataStore(spark,
-        Files.createTempDirectory(s"graft-vdiff-prop-$seed").toString, fixedClock)
+        GraftSession.scratchDir(s"graft-vdiff-prop-$seed").toString, fixedClock)
       val ids = (0 until 6).map(i => s"id$i")
       var live = Map.empty[String, String] // id -> title (full row derives from it)
       var v = 0L
@@ -208,7 +208,7 @@ class StoreHistoryPropertySpec extends AnyFunSuite with Matchers with SparkSuppo
   test("property: after every random op, get and versionOf equal the Spark window's answer for every id") {
     for (seed <- 31 to 32) {
       val rnd = new scala.util.Random(seed)
-      val dir = Files.createTempDirectory(s"graft-point-prop-$seed").toString
+      val dir = GraftSession.scratchDir(s"graft-point-prop-$seed").toString
       val st = new MetadataStore(spark, dir, fixedClock)
       val bucketed = new MetadataStore(spark, dir, fixedClock, numBuckets = 4)
       val ids = (0 until 5).map(i => s"id$i")

@@ -193,7 +193,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
   }
 
   test("validated ingest: violators quarantined exactly, replay idempotent, nothing dropped") {
-    val root = java.nio.file.Files.createTempDirectory("graft-e13-spec").toString
+    val root = GraftSession.scratchDir("graft-e13-spec").toString
     val src = s"$root/src"
     // 40 rows across two files (maxFilesPerTrigger=1 -> two micro-batches);
     // ids 5,10,...,40 carry a planted negative value
@@ -218,7 +218,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
   }
 
   test("streaming sketch fold: batch partials union-merge to the batch fold's answer; replay is a no-op") {
-    val root = java.nio.file.Files.createTempDirectory("graft-e14-spec").toString
+    val root = GraftSession.scratchDir("graft-e14-spec").toString
     // 3 files -> 3 micro-batches; user space small enough for exact HLL
     val ev = spark.range(0, 300).select(
       (col("id") % 40).as("user_id"),
@@ -294,7 +294,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
   }
 
   test("incremental ingest: a rerun with the same checkpoint reads only new files; unchanged dir is a no-op") {
-    val root = java.nio.file.Files.createTempDirectory("graft-incr-spec").toString
+    val root = GraftSession.scratchDir("graft-incr-spec").toString
     val ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
     val (nA, nB) = (ev.where($"event_id" % 2 === 0).count(),
       ev.where($"event_id" % 2 === 1).count())
@@ -341,7 +341,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
       ev(5, "view", 0), ev(5, "view", 0), ev(5, "click", 3), ev(5, "click", 3),
       // a late tail event pushes the watermark far past the early anchors
       ev(9, "view", 100))
-    val dir = java.nio.file.Files.createTempDirectory("graft-sfunnel").toString + "/ev"
+    val dir = GraftSession.scratchDir("graft-sfunnel").toString + "/ev"
     rows.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .repartition(3).write.parquet(dir)
     val users = EventStream.backfillFunnelUsers(spark, dir, steps,
@@ -388,7 +388,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
       ev(9, "view", 6000))
     val u3 = { val e1 = ev(3, "view", 0); Seq(e1, e1, ev(3, "click", 20)) }
     val all = rows ++ u3
-    val dir = java.nio.file.Files.createTempDirectory("graft-spaths").toString + "/ev"
+    val dir = GraftSession.scratchDir("graft-spaths").toString + "/ev"
     all.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .repartition(3).write.parquet(dir)
     val emitted = EventStream.backfillSessionPaths(spark, dir)
@@ -415,7 +415,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
 
   test("streaming CUSUM: the folded daily-count log reproduces the batch changepoint gate verbatim") {
     import graft.streaming.EventStream
-    val root = java.nio.file.Files.createTempDirectory("graft-scusum").toString
+    val root = GraftSession.scratchDir("graft-scusum").toString
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .repartition(4).write.parquet(s"$root/src")
     EventStream.streamDailyCountFold(spark, s"$root/src", s"$root/log")
@@ -432,7 +432,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
 
   test("streaming moments: the folded second-moment log reproduces the batch correlation gate verbatim") {
     import graft.streaming.EventStream
-    val root = java.nio.file.Files.createTempDirectory("graft-smom").toString
+    val root = GraftSession.scratchDir("graft-smom").toString
     val base = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     base.repartition(4).write.parquet(s"$root/src1")
     base.where($"doc_id" % 3 === 0).repartition(2).write.parquet(s"$root/src2")
@@ -454,7 +454,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
 
   test("streaming chi-squared: folded category-count logs reproduce the batch gate; one-sided categories align at 0") {
     import graft.streaming.EventStream
-    val root = java.nio.file.Files.createTempDirectory("graft-schi2").toString
+    val root = GraftSession.scratchDir("graft-schi2").toString
     val v1 = Seq("A", "A", "A", "B", "C", "C").toDF("category")
     val v2 = Seq("A", "B", "B", "D").toDF("category") // C vanishes, D appears
     v1.repartition(3).write.parquet(s"$root/src1")
@@ -473,7 +473,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
 
   test("streaming stickiness: the folded (day, user) set log reproduces the batch DAU/MAU verbatim") {
     import graft.streaming.EventStream
-    val root = java.nio.file.Files.createTempDirectory("graft-sstick").toString
+    val root = GraftSession.scratchDir("graft-sstick").toString
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .repartition(4).write.parquet(s"$root/src")
     EventStream.streamDayUserFold(spark, s"$root/src", s"$root/log")
@@ -490,7 +490,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
 
   test("streaming norm profile: the folded sum+min+max partial log reproduces the batch audit verbatim") {
     import graft.streaming.EventStream
-    val root = java.nio.file.Files.createTempDirectory("graft-snorm").toString
+    val root = GraftSession.scratchDir("graft-snorm").toString
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     emb.repartition(4).write.parquet(s"$root/src")
     EventStream.streamNormFold(spark, s"$root/src", s"$root/log")
@@ -508,7 +508,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
   test("streamed encoding fold: report over batch partials equals the batch report, positives live") {
     import graft.streaming.EventStream
     import org.apache.spark.sql.functions.{col, concat, lit, when}
-    val root = java.nio.file.Files.createTempDirectory("graft-senc").toString
+    val root = GraftSession.scratchDir("graft-senc").toString
     val planted = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"),
         when(col("doc_id") % 7 === 0,
@@ -536,7 +536,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
 
   test("streamed FD fold: report over the distinct-triple set log equals the batch report") {
     import graft.streaming.EventStream
-    val root = java.nio.file.Files.createTempDirectory("graft-sfd").toString
+    val root = GraftSession.scratchDir("graft-sfd").toString
     val src = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), col("lang"), col("source"))
     src.repartition(4).write.parquet(s"$root/src")
@@ -556,7 +556,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
 
   test("streamed Benford fold: report over the digit sum log equals the batch profile") {
     import graft.streaming.EventStream
-    val root = java.nio.file.Files.createTempDirectory("graft-sbenf").toString
+    val root = GraftSession.scratchDir("graft-sbenf").toString
     val vals = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select(col("doc_id"), (col("doc_id") % 997 + 1).as("v"))
     vals.repartition(4).write.parquet(s"$root/src")
@@ -574,7 +574,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
   test("top-k count-log compaction: fold invariant, stale replays ignored, second pass a no-op") {
     import graft.streaming.EventStream
     import graft.operators.SketchRollup
-    val root = java.nio.file.Files.createTempDirectory("graft-topkc-spec").toString
+    val root = GraftSession.scratchDir("graft-topkc-spec").toString
     spark.read.parquet("/root/testdata/sf0.001/events.parquet")
       .repartition(4).write.parquet(s"$root/src")
     def folded(): Seq[(java.sql.Date, String, Long, Long)] =
@@ -591,7 +591,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
     dirs() shouldBe Set("batch=0", "batch=1", "batch=2", "batch=3")
     val before = folded()
     // keep a replay copy of batch 1, then compact 0..2 into the segment
-    val replayCopy = java.nio.file.Files.createTempDirectory("graft-topkc-replay")
+    val replayCopy = GraftSession.scratchDir("graft-topkc-replay")
     spark.read.parquet(s"$batches/batch=1").write
       .parquet(replayCopy.toString + "/batch=1")
     EventStream.compactTopKCountLog(spark, s"$root/log", 2L) shouldBe 3
@@ -615,7 +615,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
   test("IDF delta-log compaction: fold invariant, stale replays ignored, second pass a no-op") {
     import graft.streaming.EventStream
     import graft.compile.QueryCompiler
-    val root = java.nio.file.Files.createTempDirectory("graft-idfc-spec").toString
+    val root = GraftSession.scratchDir("graft-idfc-spec").toString
     val meta = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select($"doc_id".cast("string").as("id"), $"text".as("dataSample"))
     val terms = Seq("the", "data")
@@ -637,7 +637,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
     val before = folded()
 
     // keep a replay copy of batch 1, then compact 0..2 into the segment
-    val replayCopy = java.nio.file.Files.createTempDirectory("graft-idfc-replay")
+    val replayCopy = GraftSession.scratchDir("graft-idfc-replay")
     spark.read.parquet(s"$batches/batch=1").write
       .parquet(replayCopy.toString + "/batch=1")
     EventStream.compactIdfDeltaLog(spark, s"$root/deltas", 2L) shouldBe 3
@@ -688,7 +688,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
     val base = all.where($"vec_id" < 25)
     val batch = all.where($"vec_id" >= 25)
     val cents = graft.operators.Similarity.ivfCentroids(base, 8)
-    val root = java.nio.file.Files.createTempDirectory("graft-streamidx").toString
+    val root = GraftSession.scratchDir("graft-streamidx").toString
     graft.operators.Similarity.ivfIndex(base, cents).write
       .partitionBy("cell").parquet(s"$root/idx")
     // 3 landed files → maxFilesPerTrigger=1 forces 3 real micro-batches
@@ -712,7 +712,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
 
   test("stream ingest to store: net latest-per-key lands as one delta commit, duplicates converge") {
     // stage a small event file: user 1 updated twice, user 2 once
-    val dir = java.nio.file.Files.createTempDirectory("graft-ingest").toString
+    val dir = GraftSession.scratchDir("graft-ingest").toString
     Seq(
       (1L, Timestamp.valueOf("2020-01-01 10:00:00"), 1L, "click", 1.0, "p1"),
       (2L, Timestamp.valueOf("2020-01-01 11:00:00"), 1L, "view", 2.0, "p2"),
@@ -720,7 +720,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
     ).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.mode("overwrite").parquet(s"$dir/events")
     val store = new graft.store.MetadataStore(spark,
-      java.nio.file.Files.createTempDirectory("graft-ingest-store").toString,
+      GraftSession.scratchDir("graft-ingest-store").toString,
       () => Timestamp.valueOf("2020-01-01 00:00:00"))
     EventStream.streamIngestToStore(spark, s"$dir/events", store) { batch =>
       val w = org.apache.spark.sql.expressions.Window
@@ -795,7 +795,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
   test("streaming signature ingest: index-only pairs equal the text-path incremental dedup; replay overwrites") {
     import graft.streaming.EventStream
     import graft.operators.Dedup
-    val root = java.nio.file.Files.createTempDirectory("graft-sig-spec").toString
+    val root = GraftSession.scratchDir("graft-sig-spec").toString
     val ds = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val base = ds.where($"doc_id" % 3 =!= 0L)
     val batch = ds.where($"doc_id" % 3 === 0L)
@@ -860,7 +860,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
   test("streaming signature ingest refuses a session with AQE off; the shared session is untouched") {
     val noAqe = spark.newSession()
     noAqe.conf.set("spark.sql.adaptive.enabled", "false")
-    val root = java.nio.file.Files.createTempDirectory("graft-sig-noaqe").toString
+    val root = GraftSession.scratchDir("graft-sig-noaqe").toString
     val e = the[IllegalArgumentException] thrownBy
       EventStream.streamSignatureIngest(noAqe, s"$root/landing", s"$root/idx")
     e.getMessage should include("spark.sql.adaptive.enabled")
@@ -891,7 +891,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
 
   test("streamed merge feed: a refused micro-batch fails the feed, and the batch before it stays committed") {
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft-merge-fail").toString
+    val root = GraftSession.scratchDir("graft-merge-fail").toString
     val store = new graft.store.MetadataStore(spark, s"$root/store",
       () => Timestamp.valueOf("2020-01-01 00:00:00"))
     val rows = spark.createDataset(Fixtures.corpus).toDF().withColumn("_delete", lit(false))
@@ -923,7 +923,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
   test("generic sum-log compaction: classifier counts fold-invariant, stale replay ignored, second pass a no-op") {
     import graft.streaming.EventStream
     import graft.operators.TextAnalysis
-    val root = java.nio.file.Files.createTempDirectory("graft-clslog-spec").toString
+    val root = GraftSession.scratchDir("graft-clslog-spec").toString
     val ds = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     ds.where($"doc_id" % 2 === 0L).repartition(3).write.parquet(s"$root/src")
     val base = TextAnalysis.classifierCounts(ds.where($"doc_id" % 2 =!= 0L))
@@ -961,7 +961,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
   test("streaming PSI: stream-folded bucket counts give the exact batch psiDrift; replay and compaction invisible") {
     import graft.streaming.EventStream
     import graft.operators.Quality
-    val root = java.nio.file.Files.createTempDirectory("graft-psi-spec").toString
+    val root = GraftSession.scratchDir("graft-psi-spec").toString
     val ds = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     val ref = ds.where($"doc_id" % 2 === 0L)
     val streamed = ds.where($"doc_id" % 2 =!= 0L)
@@ -985,7 +985,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
   test("DSIR raw-model stream fold: batch deltas re-sum to the direct raw counts; replay overwrites, never duplicates") {
     import graft.streaming.EventStream
     import graft.operators.Pipeline
-    val root = java.nio.file.Files.createTempDirectory("graft-dsir-spec").toString
+    val root = GraftSession.scratchDir("graft-dsir-spec").toString
     val ds = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     ds.repartition(4).write.parquet(s"$root/src")
     val vocab = Pipeline.dsirVocab(ds.where($"lang" === "en"), 64)
@@ -1038,7 +1038,7 @@ class StreamingMultimodalSpec extends AnyFunSuite with Matchers with SparkSuppor
       Seq((3L, 1L, "click", t(10))),
       Seq((4L, 1L, "view", t(20)), (5L, 2L, "purchase", t(21))))
     val batchIds = Seq(2, 0, 1)
-    val root = java.nio.file.Files.createTempDirectory("graft-e29-spec").toString
+    val root = GraftSession.scratchDir("graft-e29-spec").toString
     slices.zip(batchIds).foreach { case (rows, b) =>
       import org.apache.spark.sql.expressions.Window
       val e = rows.toDF("event_id", "user_id", "event_type", "ts")

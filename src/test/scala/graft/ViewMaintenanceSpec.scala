@@ -135,7 +135,7 @@ class ViewMaintenanceSpec extends AnyFunSuite with Matchers with SparkSupport {
 
   test("persisted view: refresh rewrites ONLY touched buckets — cold bucket files " +
     "byte-identical — and the on-disk view lands on the fresh join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-view").toString + "/v"
+    val dir = GraftSession.scratchDir("graft-view").toString + "/v"
     val nB = 8
     val a0 = a((1L, 10L, 1.0), (2L, 20L, 2.0), (3L, 20L, 3.0), (4L, 30L, 4.0),
       (5L, 40L, 5.0), (6L, 50L, 6.0))
