@@ -13,33 +13,20 @@ import OracleSql._
 object Aggregations {
   val entries: Seq[Entry] = Seq(
     // A1 category facet: top-100 buckets by count
-    Entry("a1_facet_categories", (s, d) => {
-      val cq = QueryCompiler.compile(QueryCompiler.parse("{}"), admin)
-      SearchExecutor.facetBranch(
-        SearchExecutor.baseBranch(Corpus.metadata(s, d), cq), "category", SearchExecutor.CategoryFacetSize)
-        .select(col("category"), col("count").as("cnt"))
-    },
+    Entry("a1_facet_categories", (s, d) =>
+      facet(s, d, "{}", admin, "category", SearchExecutor.CategoryFacetSize),
       M + "SELECT category, count(*) AS cnt FROM meta GROUP BY category ORDER BY cnt DESC, category LIMIT 100"),
 
     // A2 format facet: top-10 buckets
-    Entry("a2_facet_formats", (s, d) => {
-      val cq = QueryCompiler.compile(QueryCompiler.parse("{}"), admin)
-      SearchExecutor.facetBranch(
-        SearchExecutor.baseBranch(Corpus.metadata(s, d), cq), "format", SearchExecutor.FormatFacetSize)
-        .select(col("format"), col("count").as("cnt"))
-    },
+    Entry("a2_facet_formats", (s, d) =>
+      facet(s, d, "{}", admin, "format", SearchExecutor.FormatFacetSize),
       M + "SELECT format, count(*) AS cnt FROM meta GROUP BY format ORDER BY cnt DESC, format LIMIT 10"),
 
     // A3 post-filter segregation: the format filter restricts hits but NOT
     // this facet; ACL does restrict it
-    Entry("a3_facet_segregation", (s, d) => {
-      val cq = QueryCompiler.compile(
-        QueryCompiler.parse("""{"filters":[{"format":["csv"]}]}"""),
-        AclContext(Seq("org1"), isAdmin = false))
-      SearchExecutor.facetBranch(
-        SearchExecutor.baseBranch(Corpus.metadata(s, d), cq), "category", SearchExecutor.CategoryFacetSize)
-        .select(col("category"), col("count").as("cnt"))
-    },
+    Entry("a3_facet_segregation", (s, d) =>
+      facet(s, d, """{"filters":[{"format":["csv"]}]}""",
+        AclContext(Seq("org1"), isAdmin = false), "category", SearchExecutor.CategoryFacetSize),
       M + s"SELECT category, count(*) AS cnt FROM meta WHERE $aclOr GROUP BY category ORDER BY cnt DESC, category LIMIT 100"),
 
     // A4 total = count of the POST-filtered set (ES hits.total semantics)

@@ -269,6 +269,9 @@ object Checks {
       val base = docs(s, d)
       graft.operators.Quality.qualityDrift(base, revisedDocs(base))
     },
+      // c6: both sides' decile histograms recomputed naively over the
+      // same derived v2, densified over a 0..9 spine, same HALF_UP
+      // integer fractions
       revisedDocsSql + " " +
         microsFor("documents", "q1") + microsFor("v2", "q2") +
         qualityBucketsSql +
@@ -285,6 +288,8 @@ object Checks {
     Entry("c16_value_entropy", (s, d) =>
       graft.operators.Quality.valueEntropy(Corpus.metadata(s, d),
         Seq("category", "format", "orgUUID", "isPublic")),
+      // c16: same melt, same per-term round-half-up micros quantization
+      // before the order-free sum, same floor division
       M + ", m AS (SELECT unnest(['category','format','isPublic','orgUUID']) AS col, " +
         "unnest([category, format, isPublic::VARCHAR, orgUUID]) AS val FROM meta), " +
         "c AS (SELECT col, val, count(*)::BIGINT AS n FROM m GROUP BY 1, 2), " +
@@ -304,17 +309,8 @@ object Checks {
     // terms localizing which value moved
     Entry("c17_chi2_drift", (s, d) => {
       val m = Corpus.metadata(s, d)
-      val key = expr("CAST(id AS INT)")
-      val v2 = m.where(key % 17 =!= 0)
-        .withColumn("category",
-          when(key % 13 === 0, lit("cat0")).otherwise(col("category")))
-      graft.operators.Quality.chiSquareDrift(m, v2, "category")
+      graft.operators.Quality.chiSquareDrift(m, recategorized(m), "category")
     },
-      // c6: both sides' decile histograms recomputed naively over the
-      // same derived v2, densified over a 0..9 spine, same HALF_UP
-      // integer fractions
-      // c16: same melt, same per-term round-half-up micros quantization
-      // before the order-free sum, same floor division
       // c17: see chi2DriftSql — shared verbatim with the streamed fold
       chi2DriftSql),
 

@@ -133,7 +133,7 @@ object Duplicates {
     },
       // d9: the corpus×batch restriction of d3's exact-Jaccard ground truth
       // (batch ids start at 300000; the margin argument is d3's)
-incrementalDedupSql),
+      incrementalDedupSql),
 
     // Dedup: exact-substring repeated spans (the Lee-et-al suffix-array
     // tier re-expressed as positioned 8-shingle postings + island merge).
@@ -192,17 +192,7 @@ incrementalDedupSql),
         ", cuts AS (SELECT doc_id, start_tok, end_tok, nt FROM " +
         "(SELECT keyed.*, row_number() OVER (PARTITION BY span_key ORDER BY doc_id, start_tok) AS rn FROM keyed) " +
         "WHERE rn > 1) " +
-        ", agg AS (SELECT doc_id, sum(nt) AS removed_tokens FROM cuts GROUP BY doc_id) " +
-        ", posd AS (SELECT doc_id, unnest(range(1, len(t) + 1)) AS i, unnest(t) AS tok FROM toks) " +
-        ", kept AS (SELECT pd.doc_id, pd.i, pd.tok FROM posd pd LEFT JOIN cuts c " +
-        "ON pd.doc_id = c.doc_id AND pd.i - 1 BETWEEN c.start_tok AND c.end_tok " +
-        "WHERE c.doc_id IS NULL) " +
-        ", rebuilt AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS clean_text FROM kept GROUP BY doc_id) " +
-        "SELECT t.doc_id, len(t.t)::BIGINT AS n_tokens, " +
-        "coalesce(a.removed_tokens, 0)::BIGINT AS removed_tokens, " +
-        "md5(coalesce(r.clean_text, '')) AS clean_hash " +
-        "FROM toks t LEFT JOIN agg a USING (doc_id) LEFT JOIN rebuilt r USING (doc_id) " +
-        "ORDER BY t.doc_id"),
+        spanRewriteSql),
 
     // Dedup: exact-substring removal at TRUE window granularity — the
     // suffix-array-faithful policy (d12's documented under-removal caveat
@@ -227,17 +217,7 @@ incrementalDedupSql),
         ", grp AS (SELECT doc_id, p, sum(ni) OVER (PARTITION BY doc_id ORDER BY p) AS g FROM isl2) " +
         ", cuts AS (SELECT doc_id, min(p) AS start_tok, max(p) + 7 AS end_tok, " +
         "max(p) + 7 - min(p) + 1 AS nt FROM grp GROUP BY doc_id, g) " +
-        ", agg AS (SELECT doc_id, sum(nt) AS removed_tokens FROM cuts GROUP BY doc_id) " +
-        ", posd AS (SELECT doc_id, unnest(range(1, len(t) + 1)) AS i, unnest(t) AS tok FROM toks) " +
-        ", kept AS (SELECT pd.doc_id, pd.i, pd.tok FROM posd pd LEFT JOIN cuts c " +
-        "ON pd.doc_id = c.doc_id AND pd.i - 1 BETWEEN c.start_tok AND c.end_tok " +
-        "WHERE c.doc_id IS NULL) " +
-        ", rebuilt AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS clean_text FROM kept GROUP BY doc_id) " +
-        "SELECT t.doc_id, len(t.t)::BIGINT AS n_tokens, " +
-        "coalesce(a.removed_tokens, 0)::BIGINT AS removed_tokens, " +
-        "md5(coalesce(r.clean_text, '')) AS clean_hash " +
-        "FROM toks t LEFT JOIN agg a USING (doc_id) LEFT JOIN rebuilt r USING (doc_id) " +
-        "ORDER BY t.doc_id"),
+        spanRewriteSql),
 
     // Dedup: fuzzy survivors after collapsing Jaccard near-dup groups
     Entry("d5_fuzzy_survivors", (s, d) =>
@@ -338,6 +318,8 @@ incrementalDedupSql),
       Similarity.semanticContamination(train, evalVecs)
         .orderBy("vec_id")
     },
+      // d15: the same planted train side, naive all-pairs best-match
+      // (cos desc, eval id asc), threshold filter
       "WITH ev AS (SELECT vec_id AS eid, embedding AS e FROM embeddings WHERE vec_id < 20), " +
         "tr AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id >= 20 " +
         "UNION ALL SELECT vec_id + 100000, embedding FROM embeddings " +
@@ -353,33 +335,18 @@ incrementalDedupSql),
     // J>0 ⇒ shares-a-shingle argument) on sf0.01's organic corpus. Same
     // SF-fingerprint guard as v11: pinned recalls describe this corpus
     // only, any other SF mirrors a PIN_STALE marker on both sides.
-    Entry("d16_dedup_recall", (s, d) => {
-      import s.implicits._
-      val fp = docs(s, d)
-        .agg((count(lit(1)) * 100000 + sum(col("n_chars"))).cast("long"))
-        .collect()(0).getLong(0)
-      if (fp != 50149174L)
-        Seq(("PIN_STALE_expected_sf0.01", -1L, fp, -1.0))
-          .toDF("method", "hits", "total", "recall")
-      else measuredDedupRecall(s, d)
-    },
-      // d15: the same planted train side, naive all-pairs best-match
-      // (cos desc, eval id asc), threshold filter
+    Entry("d16_dedup_recall", (s, d) =>
+      pinnedRecall(s, docs(s, d), "n_chars", 50149174L)(measuredDedupRecall(s, d)),
       // d16: pinned measured dedup recalls (the v11 discipline) — 25 exact
       // j≥0.8 pairs at sf0.01; the production blocking (df∈[2,20],
       // minShared≥3) and both MinHash-LSH configurations recall all 25,
       // the simhash Hamming≤3 gate recalls 18 (it targets a different
       // similarity; the gap is the documented cross-method number)
-      "WITH fp AS (SELECT (count(*)*100000 + sum(n_chars))::BIGINT AS v FROM documents) " +
-        "SELECT * FROM (VALUES " +
-        "('blocked_exact_df20_ms3', 25::BIGINT, 25::BIGINT, 1.0::DOUBLE), " +
-        "('minhash_16x4', 25::BIGINT, 25::BIGINT, 1.0::DOUBLE), " +
-        "('minhash_8x8', 25::BIGINT, 25::BIGINT, 1.0::DOUBLE), " +
-        "('simhash_h3', 18::BIGINT, 25::BIGINT, 0.72::DOUBLE)" +
-        ") AS t(method, hits, total, recall) WHERE (SELECT v FROM fp) = 50149174 " +
-        "UNION ALL SELECT 'PIN_STALE_expected_sf0.01', -1::BIGINT, " +
-        "(SELECT v FROM fp), -1.0::DOUBLE WHERE (SELECT v FROM fp) <> 50149174 " +
-        "ORDER BY method"),
+      pinnedRecallSql("documents", "n_chars", 50149174L, Seq(
+        "('blocked_exact_df20_ms3', 25::BIGINT, 25::BIGINT, 1.0::DOUBLE)",
+        "('minhash_16x4', 25::BIGINT, 25::BIGINT, 1.0::DOUBLE)",
+        "('minhash_8x8', 25::BIGINT, 25::BIGINT, 1.0::DOUBLE)",
+        "('simhash_h3', 18::BIGINT, 25::BIGINT, 0.72::DOUBLE)"))),
 
     // Dedup × similarity: SemDeDup-style semantic near-dup pairs blocked
     // by the IVF CELL structure (multi-probe assignment closes single-
@@ -394,6 +361,6 @@ incrementalDedupSql),
     },
       // d14: cell-blocked (SemDeDup) pairs held to the SAME exact planted
       // pair set as the band-blocked v3 — blocking must lose nothing here
-embeddingDupSql)
+      embeddingDupSql)
   )
 }

@@ -217,14 +217,9 @@ object EventJoins {
         events(s, d)),
       // j16: the same gap split (strict >), running-sum session ids, and
       // ordered string_agg — boundary/order semantics identical
-      eventsUsSql +
-        sessionsSql +
-        "s3 AS (SELECT *, row_number() OVER " +
-        "(PARTITION BY user_id, sess ORDER BY us, event_id) AS pos FROM s2), " +
+      topPathsSql("",
         "p AS (SELECT user_id, sess, string_agg(event_type, '>' ORDER BY pos) AS path " +
-        "FROM s3 WHERE pos <= 12 GROUP BY 1, 2) " +
-        "SELECT path, count(*)::BIGINT AS n_sessions FROM p " +
-        "GROUP BY 1 ORDER BY n_sessions DESC, path LIMIT 20"),
+        "FROM s3 WHERE pos <= 12 GROUP BY 1, 2) ")),
 
     // J19 bounce rate by session entry action: 1-event sessions over
     // sessions starting with each type — the j16 gap discipline, one
@@ -350,7 +345,7 @@ object EventJoins {
         events(s, d)),
       // j15: the same lead() pairing over (user; ts, event_id) and the
       // same integer floor division — DuckDB // on positives ≡ Spark DIV
-markovSql),
+      markovSql),
 
     // J11 time-weighted average: per-user TWAP of the view-value signal
     // under step-function hold — exact decimal v·Δt products summed
@@ -414,14 +409,7 @@ markovSql),
       // engine's timestamp_micros(ts div 1000) normalization. Clicks
       // collapse to max event_id per (user, ts) so the ASOF tie is
       // deterministic in both engines.
-      "WITH clicks AS (SELECT user_id, ts::TIMESTAMP AS click_ts, " +
-        "max(event_id) AS click_id FROM events WHERE event_type = 'click' GROUP BY 1, 2), " +
-        "purchases AS (SELECT event_id AS purchase_id, user_id, ts::TIMESTAMP AS purchase_ts " +
-        "FROM events WHERE event_type = 'purchase') " +
-        "SELECT p.purchase_id, p.user_id, p.purchase_ts, c.click_ts, c.click_id " +
-        "FROM purchases p ASOF LEFT JOIN clicks c " +
-        "ON p.user_id = c.user_id AND c.click_ts <= p.purchase_ts " +
-        "ORDER BY purchase_id"),
+      asOfClickSql("c.click_ts, c.click_id")),
 
     // NEAREST-neighbor temporal align: each purchase to its user's CLOSEST
     // click in either direction within ±30 min (ties → backward, the as-of
@@ -429,13 +417,7 @@ markovSql),
     // trick). Same single co-partitioned sort as j1 — the forward
     // candidate is a second window over the same ordering
     Entry("j6_nearest_align", (s, d) => {
-      val ev = EventStream.withEventTime(events(s, d))
-      val clicks = ev.where(col("event_type") === "click")
-        .select(col("user_id"), col("ts").as("click_ts"),
-          col("event_id").as("click_id"))
-      val purchases = ev.where(col("event_type") === "purchase")
-        .select(col("event_id").as("purchase_id"), col("user_id"),
-          col("ts").as("purchase_ts"))
+      val (purchases, clicks) = purchasesAndClicks(s, d)
       Joins.nearestAsOf(purchases, clicks, Seq("user_id"),
           "purchase_ts", "click_ts", "click_id", toleranceMicros = 1800000000L)
         .orderBy("purchase_id")
@@ -466,16 +448,9 @@ markovSql),
     // oracle applies the same CASE to DuckDB's unbounded ASOF result.
     Entry("j4_asof_tolerance", (s, d) =>
       clickPurchaseAsOf(s, d, toleranceMicros = 30L * 60 * 1000000L),
-      "WITH clicks AS (SELECT user_id, ts::TIMESTAMP AS click_ts, " +
-        "max(event_id) AS click_id FROM events WHERE event_type = 'click' GROUP BY 1, 2), " +
-        "purchases AS (SELECT event_id AS purchase_id, user_id, ts::TIMESTAMP AS purchase_ts " +
-        "FROM events WHERE event_type = 'purchase') " +
-        "SELECT p.purchase_id, p.user_id, p.purchase_ts, " +
+      asOfClickSql(
         "CASE WHEN c.click_ts >= p.purchase_ts - INTERVAL 30 MINUTE THEN c.click_ts END AS click_ts, " +
-        "CASE WHEN c.click_ts >= p.purchase_ts - INTERVAL 30 MINUTE THEN c.click_id END AS click_id " +
-        "FROM purchases p ASOF LEFT JOIN clicks c " +
-        "ON p.user_id = c.user_id AND c.click_ts <= p.purchase_ts " +
-        "ORDER BY purchase_id"),
+        "CASE WHEN c.click_ts >= p.purchase_ts - INTERVAL 30 MINUTE THEN c.click_id END AS click_id")),
 
     // Range join, pair form: unordered event pairs within 2 s of each other
     // (micro-burst detection). Epsilon-binned candidate generation — never

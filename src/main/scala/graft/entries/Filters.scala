@@ -1,7 +1,7 @@
 package graft
 package entries
 
-import graft.model.{AclContext, DataSetFiltering, InvalidQueryException}
+import graft.model.{AclContext, DataSetFiltering}
 import org.apache.spark.sql.functions._
 
 import Fixtures._
@@ -65,13 +65,8 @@ object Filters {
       M + "SELECT id, isPublic AS is_public FROM meta WHERE isPublic ORDER BY id"),
 
     // F6 whitelist: illegal filter field → InvalidQuery (the reference's 400)
-    Entry("f6_whitelist_reject", (s, d) => {
-      import s.implicits._
-      val err =
-        try { hits(s, d, """{"filters":[{"badField":["x"]}]}""", admin); "NO_ERROR" }
-        catch { case _: InvalidQueryException => "InvalidQuery" }
-      Seq(err).toDF("error")
-    },
+    Entry("f6_whitelist_reject", (s, d) =>
+      queryError(s)(hits(s, d, """{"filters":[{"badField":["x"]}]}""", admin)),
       "SELECT 'InvalidQuery' AS error"),
 
     // F7 stemmed title term-filter: the reference's title field is

@@ -3,11 +3,11 @@ package entries
 
 import graft.compile.QueryCompiler
 import graft.exec.SearchExecutor
-import graft.model.{AclContext, MetadataEntry}
+import graft.model.{AclContext, InvalidQueryException, MetadataEntry}
 import graft.operators.{Joins, Multimodal, Similarity}
 import graft.store.MetadataStore
 import graft.streaming.EventStream
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -26,6 +26,16 @@ object Fixtures {
     SearchExecutor.hitsBranch(SearchExecutor.baseBranch(Corpus.metadata(spark, sfDir), cq), cq)
   }
 
+  /** The `field` facet's top-`size` (value, cnt) buckets for `dsl` under
+    * `acl`.
+    */
+  def facet(s: SparkSession, d: String, dsl: String, acl: AclContext,
+            field: String, size: Int): DataFrame = {
+    val cq = QueryCompiler.compile(QueryCompiler.parse(dsl), acl)
+    SearchExecutor.facetBranch(SearchExecutor.baseBranch(Corpus.metadata(s, d), cq), field, size)
+      .select(col(field), col("count").as("cnt"))
+  }
+
   /** Unpaged variant: splice a huge size into the DSL so the hits branch
     * returns every matching row, still deterministically ordered.
     */
@@ -33,6 +43,17 @@ object Fixtures {
     val inner = dsl.trim.stripPrefix("{").stripSuffix("}").trim
     if (inner.isEmpty) """{"size":10000000}"""
     else s"""{"size":10000000,$inner}"""
+  }
+
+  /** The one-row `error` frame: "InvalidQuery" when `attempt` throws
+    * [[InvalidQueryException]], "NO_ERROR" when it returns.
+    */
+  def queryError(s: SparkSession)(attempt: => Any): DataFrame = {
+    import s.implicits._
+    val err =
+      try { attempt; "NO_ERROR" }
+      catch { case _: InvalidQueryException => "InvalidQuery" }
+    Seq(err).toDF("error")
   }
 
   def docs(s: SparkSession, d: String): DataFrame =
@@ -67,6 +88,17 @@ object Fixtures {
       .unionByName(base.where(col("doc_id") % 19 === 0)
         .select((col("doc_id") + 10000000L).as("doc_id"),
           concat(lit("new doc "), col("doc_id")).as("text")))
+
+  /** The second snapshot of the metadata corpus `m` for the category drift
+    * checks: id % 17 == 0 rows dropped, id % 13 == 0 rows re-categorized
+    * into cat0.
+    */
+  def recategorized(m: DataFrame): DataFrame = {
+    val key = expr("CAST(id AS INT)")
+    m.where(key % 17 =!= 0)
+      .withColumn("category",
+        when(key % 13 === 0, lit("cat0")).otherwise(col("category")))
+  }
 
   /** A documents table's rows in doc_id order, text by md5: the fidelity
     * check of the format and layout round-trips. [[OracleSql.docRowsSql]]
@@ -112,6 +144,42 @@ object Fixtures {
     st
   }
 
+  /** s28's three-arm merge source, `_delete`-flagged: 000010 with only its
+    * title set (merge-patch keeps every null field), a delete of 000020,
+    * an insert of 000200 and a delete of 000300, which the store lacks.
+    */
+  def mergeScript(s: SparkSession, d: String): DataFrame = {
+    val base = corpusEntries(s, d, "000001", "000300").toDF()
+    val fields = graft.model.MetadataSchema.structType.fields.toSeq
+    def nulledExcept(overrides: Map[String, Column]) =
+      fields.map { f =>
+        overrides.getOrElse(f.name,
+          if (f.name == "id") col("id")
+          else lit(null).cast(f.dataType).as(f.name)).as(f.name)
+      }
+    base.where(col("id") === "000010")
+      .select(nulledExcept(Map("title" -> lit("merged-title"))): _*)
+      .withColumn("_delete", lit(false))
+      .unionByName(base.where(col("id") === "000020")
+        .select(nulledExcept(Map.empty): _*).withColumn("_delete", lit(true)))
+      .unionByName(base.where(col("id") === "000200").withColumn("_delete", lit(false)))
+      .unionByName(base.where(col("id") === "000300")
+        .select(nulledExcept(Map.empty): _*).withColumn("_delete", lit(true)))
+  }
+
+  /** s11/s25's replica: the loaded store's version-1 snapshot advanced by
+    * the change feed of 000010's title update, 000020's delete and
+    * 000200's insert.
+    */
+  def cdcReplica(s: SparkSession, d: String): DataFrame = {
+    val st = loadedStore(s, d) // commits version 1
+    val snapshot = st.currentAt(1L).toDF()
+    st.partialUpdate("000010", Map("title" -> "cdc-title"))
+    st.delete("000020")
+    corpusEntries(s, d, "000200", "000200").collect().foreach(st.upsert)
+    MetadataStore.applyChanges(snapshot, st.changesBetween(1L))
+  }
+
   /** A history table's (id, title, valid_from, valid_to) columns. */
   def historyRows(h: DataFrame): DataFrame =
     h.select(col("id"), col("title"), col("valid_from"), col("valid_to"))
@@ -149,19 +217,26 @@ object Fixtures {
     report(s.read.parquet(s"$d/customer.parquet"), s.read.parquet(s"$d/orders.parquet"),
       lineitemWide(s, d), s.read.parquet(s"$d/nation.parquet"))
 
+  /** The events table's purchases (purchase_id, user_id, purchase_ts) and
+    * clicks (user_id, click_ts, click_id), event time normalized: the
+    * temporal-join entries' two sides.
+    */
+  def purchasesAndClicks(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val ev = EventStream.withEventTime(events(s, d))
+    (ev.where(col("event_type") === "purchase")
+      .select(col("event_id").as("purchase_id"), col("user_id"),
+        col("ts").as("purchase_ts")),
+     ev.where(col("event_type") === "click")
+      .select(col("user_id"), col("ts").as("click_ts"),
+        col("event_id").as("click_id")))
+  }
+
   /** Shared j1/j4 harness: purchases as-of-joined to the same user's most
     * recent prior click, output (purchase_id, user_id, purchase_ts,
     * click_ts, click_id) ordered by purchase id.
     */
-  def clickPurchaseAsOf(s: SparkSession, d: String,
-                                toleranceMicros: Long): DataFrame = {
-    val ev = EventStream.withEventTime(s.read.parquet(s"$d/events.parquet"))
-    val clicks = ev.where(col("event_type") === "click")
-      .select(col("user_id"), col("ts").as("click_ts"),
-        col("event_id").as("click_id"))
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"), col("user_id"),
-        col("ts").as("purchase_ts"))
+  def clickPurchaseAsOf(s: SparkSession, d: String, toleranceMicros: Long): DataFrame = {
+    val (purchases, clicks) = purchasesAndClicks(s, d)
     Joins.asOf(purchases, clicks, Seq("user_id"),
         "purchase_ts", "click_ts", "click_id", toleranceMicros)
       .orderBy("purchase_id")
@@ -217,6 +292,21 @@ object Fixtures {
           array_join(slice(t, lit(1), ceil(size(t) * frac).cast("int")), " ").as("text")))
   }
 
+  /** e15/e16's setup: the 'red'/'widget' IDF stats of ids up to 000050,
+    * and ids 000051-000090 streamed from `<name>-src` into the delta log
+    * `<name>-deltas`. Returns the stats and the delta dir.
+    */
+  def streamedIdfDeltas(s: SparkSession, d: String, name: String): (DataFrame, String) = {
+    val deltas = GraftSession.scratch(s"$name-deltas")
+    val src = staged(s"$name-src")(
+      Corpus.metadata(s, d).where(col("id").between("000051", "000090"))
+        .select("id", "dataSample").repartition(4).write.parquet(_))
+    val base = Corpus.metadata(s, d).where(col("id") <= "000050")
+    val stats0 = QueryCompiler.idfStatsTable(base, Seq("red", "widget"))
+    EventStream.streamIdfDeltaFold(s, src, deltas, Seq("red", "widget"))
+    (stats0, deltas)
+  }
+
   /** d9's setup as a stream: the base corpus's signatures in the
     * `batch=-1` segment of the index `<name>-sigidx`, then the planted
     * batch streamed in from `<name>-landing`. Returns the index dir.
@@ -266,6 +356,21 @@ object Fixtures {
           array_join(reverse(t), " ").as("text")))
   }
 
+  /** documents with planted encoding damage — the t32/e39 corpus: the
+    * mojibake pair on doc_id % 7 == 0, a binary leak and a replacement
+    * char on doc_id % 11 == 0.
+    */
+  def plantedEncodingDocs(s: SparkSession, d: String): DataFrame =
+    docs(s, d).select(col("doc_id"),
+      // planted damage, pure escapes: \u00c3\u00a9 = the e-acute
+      // double-encoding pair, \u00e2\u20ac\u009d = the right-quote one
+      when(col("doc_id") % 7 === 0,
+        concat(col("text"), lit(" \u00c3\u00a9 \u00e2\u20ac\u009d bad")))
+        // NUL + SOH binary leak + an admitted replacement char
+        .when(col("doc_id") % 11 === 0,
+          concat(col("text"), lit("\u0000\u0001 bin \ufffd")))
+        .otherwise(col("text")).as("text"))
+
   /** documents re-shaped into LINE-structured pages — the d8 planted
     * corpus. Every doc keeps its body as line 1 and gains boilerplate
     * footers: a newsletter plug on doc_id % 3 == 0 (~1/3 of the corpus)
@@ -295,6 +400,39 @@ object Fixtures {
       when(col("doc_id") % 7 === 0,
         concat(col("text"), lit(" the quick brown fox jumps over the lazy dog again and again")))
         .otherwise(col("text")).as("text"))
+
+  /** x11/x13: per event_type row count and exact-decimal value sum of a
+    * layout read ([[OracleSql.typeTotalsSql]] is its DuckDB twin).
+    */
+  def typeTotals(ev: DataFrame): DataFrame =
+    ev.groupBy("event_type")
+      .agg(count(lit(1)).as("cnt"),
+        sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
+      .orderBy("event_type")
+
+  /** x16/e14's gate: the exact distinct users of `ev` over 2024-01-05 to
+    * 2024-01-15, and whether the merged daily `sketches` estimate lands
+    * within 5% of it.
+    */
+  def rangeDistinctCheck(ev: DataFrame, sketches: DataFrame): DataFrame = {
+    val est = graft.operators.SketchRollup
+      .rangeDistinctEstimate(sketches, "2024-01-05", "2024-01-15")
+    val exact = ev.where(col("ts") >= lit("2024-01-05") && col("ts") < lit("2024-01-15"))
+      .agg(countDistinct(col("user_id")).as("exact_users"))
+    exact.crossJoin(est)
+      .select(col("exact_users"),
+        (abs(col("est_distinct") / col("exact_users") - 1.0) <= 0.05).as("est_ok"))
+  }
+
+  /** x19/e20/e21: the top-10 users by event count over 2024-01-05 to
+    * 2024-01-15 from the daily top-k `candidates`, with their count bounds.
+    */
+  def rangeTop10(candidates: DataFrame): DataFrame =
+    graft.operators.SketchRollup
+      .rangeTopK(candidates, "2024-01-05", "2024-01-15", k = 10)
+      .select(col("key").as("user_id"), col("cnt_lb").as("n_events"),
+        col("cnt_ub"), col("guaranteed"))
+      .orderBy(col("n_events").desc, col("user_id"))
 
   /** Persists a cell-keyed vector index to `dir`, one directory per cell
     * (a static overwrite, so it also resets the scratch index).
@@ -413,6 +551,23 @@ object Fixtures {
           round(col("hits") / lit(total.toDouble), 4).as("recall"))
   }
 
+  /** A pinned measurement's SF guard: `measure` runs only when the exact
+    * fingerprint count·100000 + sum(`sumCol`) of `table` equals `fp`, the
+    * sf0.01 value the oracle's pins describe; any other SF yields the one
+    * PIN_STALE row ([[OracleSql.pinnedRecallSql]]'s stale branch).
+    */
+  def pinnedRecall(s: SparkSession, table: DataFrame, sumCol: String, fp: Long)(
+      measure: => DataFrame): DataFrame = {
+    import s.implicits._
+    val v = table
+      .agg((count(lit(1)) * 100000 + sum(col(sumCol))).cast("long"))
+      .collect()(0).getLong(0)
+    if (v != fp)
+      Seq(("PIN_STALE_expected_sf0.01", -1L, v, -1.0))
+        .toDF("method", "hits", "total", "recall")
+    else measure
+  }
+
   /** v25: measured recall of PARTIAL-probe range search vs the full-probe
     * exact radius scan (the v11 discipline applied to v24) — for RANGE
     * search, partial-probe loss is precisely the in-radius neighbors
@@ -443,44 +598,44 @@ object Fixtures {
     */
   def measuredRecall(s: SparkSession, d: String): DataFrame = {
     val e = emb(s, d)
-      val q = e.where(col("vec_id") < 50)
-      // The exact top-10 ground truth is |q|·10 (q_id, vec_id) pairs — a
-      // driver-side statistic the size of a codebook snapshot
-      val leg = recallAgainst(s, Similarity.bruteForceTopK(e, q, 10), "q_id", "vec_id")
-      // Each method carries its r8 baseline knob AND the r10-tuned knob —
-      // the measured knob→recall curve on organic geometry (see scaladoc
-      // on lshTopK/ivfTopKIndexed/pqTopK for why each knob moves recall)
-      leg("lsh_16x4", Similarity.lshTopK(e, q, 10, bits = 16, bands = 4))
-        .unionByName(leg("lsh_24x8", Similarity.lshTopK(e, q, 10)))
-        .unionByName(leg("ivf_nprobe8",
-          Similarity.ivfTopK(e, q, 10, nlist = 32, nprobe = 8)))
-        .unionByName(leg("ivf_nprobe16",
-          Similarity.ivfTopK(e, q, 10, nlist = 32, nprobe = 16)))
-        .unionByName({
-          // one Lloyd refinement (the offline re-train cost) feeds both probes
-          val cents = Similarity.lloydRefine(e, Similarity.ivfCentroids(e, 32))
-          val idx = Similarity.ivfIndex(e, cents)
-          leg("ivf_lloyd_nprobe8",
-              Similarity.ivfTopKIndexed(idx, cents, q, 10, nprobe = 8))
-            .unionByName(leg("ivf_lloyd_nprobe16",
-              Similarity.ivfTopKIndexed(idx, cents, q, 10, nprobe = 16)))
-        })
-        .unionByName(leg("pq_m8x32_sl50",
-          Similarity.pqTopK(e, q, 10, m = 8, codesPerSub = 32, shortlistSize = 50)))
-        .unionByName(leg("pq_m8x64_sl150", Similarity.pqTopK(e, q, 10)))
-        .unionByName(leg("sq_sl50", Similarity.sqTopK(e, q, 10)))
-        .unionByName({
-          // one codebook + index build (the offline cost) feeds both
-          // probe knobs — the r8-era default (16) and the r11-tuned 20
-          val cents = Similarity.ivfCentroids(e, 32)
-          val books = Similarity.pqCodebooks(e, 8, 64)
-          val idx = Similarity.ivfPqIndex(e, cents, books)
-          leg("ivfpq_np16_m8x64_sl150",
-              Similarity.ivfPqTopKIndexed(idx, cents, books, e, q, 10, 16, 150))
-            .unionByName(leg("ivfpq_np20_m8x64_sl150",
-              Similarity.ivfPqTopKIndexed(idx, cents, books, e, q, 10, 20, 150)))
-        })
-        .orderBy("method")
+    val q = e.where(col("vec_id") < 50)
+    // The exact top-10 ground truth is |q|·10 (q_id, vec_id) pairs — a
+    // driver-side statistic the size of a codebook snapshot
+    val leg = recallAgainst(s, Similarity.bruteForceTopK(e, q, 10), "q_id", "vec_id")
+    // Each method carries its r8 baseline knob AND the r10-tuned knob —
+    // the measured knob→recall curve on organic geometry (see scaladoc
+    // on lshTopK/ivfTopKIndexed/pqTopK for why each knob moves recall)
+    leg("lsh_16x4", Similarity.lshTopK(e, q, 10, bits = 16, bands = 4))
+      .unionByName(leg("lsh_24x8", Similarity.lshTopK(e, q, 10)))
+      .unionByName(leg("ivf_nprobe8",
+        Similarity.ivfTopK(e, q, 10, nlist = 32, nprobe = 8)))
+      .unionByName(leg("ivf_nprobe16",
+        Similarity.ivfTopK(e, q, 10, nlist = 32, nprobe = 16)))
+      .unionByName({
+        // one Lloyd refinement (the offline re-train cost) feeds both probes
+        val cents = Similarity.lloydRefine(e, Similarity.ivfCentroids(e, 32))
+        val idx = Similarity.ivfIndex(e, cents)
+        leg("ivf_lloyd_nprobe8",
+            Similarity.ivfTopKIndexed(idx, cents, q, 10, nprobe = 8))
+          .unionByName(leg("ivf_lloyd_nprobe16",
+            Similarity.ivfTopKIndexed(idx, cents, q, 10, nprobe = 16)))
+      })
+      .unionByName(leg("pq_m8x32_sl50",
+        Similarity.pqTopK(e, q, 10, m = 8, codesPerSub = 32, shortlistSize = 50)))
+      .unionByName(leg("pq_m8x64_sl150", Similarity.pqTopK(e, q, 10)))
+      .unionByName(leg("sq_sl50", Similarity.sqTopK(e, q, 10)))
+      .unionByName({
+        // one codebook + index build (the offline cost) feeds both
+        // probe knobs — the r8-era default (16) and the r11-tuned 20
+        val cents = Similarity.ivfCentroids(e, 32)
+        val books = Similarity.pqCodebooks(e, 8, 64)
+        val idx = Similarity.ivfPqIndex(e, cents, books)
+        leg("ivfpq_np16_m8x64_sl150",
+            Similarity.ivfPqTopKIndexed(idx, cents, books, e, q, 10, 16, 150))
+          .unionByName(leg("ivfpq_np20_m8x64_sl150",
+            Similarity.ivfPqTopKIndexed(idx, cents, books, e, q, 10, 20, 150)))
+      })
+      .orderBy("method")
   }
 
   /** The d16 measurement body: recall of every production dedup path vs the

@@ -3,7 +3,6 @@ package entries
 
 import graft.GraftSession.scratch
 import graft.compile.QueryCompiler
-import graft.model.InvalidQueryException
 import graft.streaming.EventStream
 import org.apache.spark.sql.functions._
 
@@ -14,13 +13,8 @@ import OracleSql._
 object Formats {
   val entries: Seq[Entry] = Seq(
     // X1 DSL parser: malformed JSON → InvalidQuery
-    Entry("x1_dsl_error", (s, d) => {
-      import s.implicits._
-      val err =
-        try { QueryCompiler.parse("{not json"); "NO_ERROR" }
-        catch { case _: InvalidQueryException => "InvalidQuery" }
-      Seq(err).toDF("error")
-    },
+    Entry("x1_dsl_error", (s, d) =>
+      queryError(s)(QueryCompiler.parse("{not json")),
       "SELECT 'InvalidQuery' AS error"),
 
     // X2 full export scan: snapshot → parquet → read back
@@ -93,20 +87,13 @@ object Formats {
       val out = scratch("x11-sorted") + "/events" // overwrite-reuse: no per-call leak
       val ev = EventStream.withEventTime(events(s, d))
       graft.sources.SortedLayout.write(ev, "ts", out, files = 16)
-      graft.sources.SortedLayout.readRange(s, out, "ts",
+      typeTotals(graft.sources.SortedLayout.readRange(s, out, "ts",
           lit("2024-01-15 00:00:00").cast("timestamp"),
-          lit("2024-01-15 06:00:00").cast("timestamp"))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-        .orderBy("event_type")
+          lit("2024-01-15 06:00:00").cast("timestamp")))
     },
       // x11: the layout rewrite must not change the range aggregate
-      "SELECT event_type, count(*) AS cnt, " +
-        "sum(value::DECIMAL(18,6))::DOUBLE AS sum_value FROM events " +
-        "WHERE ts::TIMESTAMP >= TIMESTAMP '2024-01-15 00:00:00' " +
-        "AND ts::TIMESTAMP < TIMESTAMP '2024-01-15 06:00:00' " +
-        "GROUP BY 1 ORDER BY 1"),
+      typeTotalsSql("WHERE ts::TIMESTAMP >= TIMESTAMP '2024-01-15 00:00:00' " +
+        "AND ts::TIMESTAMP < TIMESTAMP '2024-01-15 06:00:00' ")),
 
     // X12 bloom-filtered layout: documents hash-distributed on doc_id with
     // a parquet bloom filter per row group — the point-lookup pruning tier
@@ -136,22 +123,15 @@ object Formats {
       val out = scratch("x13-zorder") + "/events" // overwrite-reuse: no per-call leak
       val ev = EventStream.withEventTime(events(s, d))
       graft.sources.ZOrderLayout.write(ev, "ts", "user_id", out, files = 16)
-      graft.sources.ZOrderLayout.readBox(s, out,
+      typeTotals(graft.sources.ZOrderLayout.readBox(s, out,
           "ts", lit("2024-01-10 00:00:00").cast("timestamp"),
           lit("2024-01-16 00:00:00").cast("timestamp"),
-          "user_id", lit(0L), lit(30L))
-        .groupBy("event_type")
-        .agg(count(lit(1)).as("cnt"),
-          sum(col("value").cast("decimal(18,6)")).cast("double").as("sum_value"))
-        .orderBy("event_type")
+          "user_id", lit(0L), lit(30L)))
     },
       // x13: the z-order rewrite must not change the 2-D box aggregate
-      "SELECT event_type, count(*) AS cnt, " +
-        "sum(value::DECIMAL(18,6))::DOUBLE AS sum_value FROM events " +
-        "WHERE ts::TIMESTAMP >= TIMESTAMP '2024-01-10 00:00:00' " +
+      typeTotalsSql("WHERE ts::TIMESTAMP >= TIMESTAMP '2024-01-10 00:00:00' " +
         "AND ts::TIMESTAMP < TIMESTAMP '2024-01-16 00:00:00' " +
-        "AND user_id >= 0 AND user_id < 30 " +
-        "GROUP BY 1 ORDER BY 1"),
+        "AND user_id >= 0 AND user_id < 30 ")),
 
     // X10 small-file compaction: the corpus deliberately shattered into 64
     // files, then rewritten to ~target-sized files (count measured from
@@ -177,18 +157,12 @@ object Formats {
       val dir = scratch("x16-sketches") // per-process fixed dir: no per-run leak
       graft.operators.SketchRollup.dailyDistinctSketches(ev, "ts", "user_id")
         .write.mode("overwrite").parquet(dir)
-      val est = graft.operators.SketchRollup
-        .rangeDistinctEstimate(s.read.parquet(dir), "2024-01-05", "2024-01-15")
-      val exact = ev.where(col("ts") >= lit("2024-01-05") && col("ts") < lit("2024-01-15"))
-        .agg(countDistinct(col("user_id")).as("exact_users"))
-      exact.crossJoin(est)
-        .select(col("exact_users"),
-          (abs(col("est_distinct") / col("exact_users") - 1.0) <= 0.05).as("est_ok"))
+      rangeDistinctCheck(ev, s.read.parquet(dir))
     },
       // x16: the oracle computes the EXACT distinct from raw rows and
       // asserts the engine's sketch estimate landed within the tolerance
       // (the engine side emits est_ok; a drifting sketch breaks the hash)
-rangeDistinctSql),
+      rangeDistinctSql),
 
     // X17 mergeable QUANTILE rollup — x16's discipline applied to KLL
     // doubles sketches: per-day sketch rows, any range answers by merging
@@ -288,17 +262,13 @@ rangeDistinctSql),
       val dir = scratch("x19-topk")
       graft.operators.SketchRollup.dailyTopKCandidates(ev, "ts", "user_id", m = 2048)
         .write.mode("overwrite").parquet(dir)
-      graft.operators.SketchRollup
-        .rangeTopK(s.read.parquet(dir), "2024-01-05", "2024-01-15", k = 10)
-        .select(col("key").as("user_id"), col("cnt_lb").as("n_events"),
-          col("cnt_ub"), col("guaranteed"))
-        .orderBy(col("n_events").desc, col("user_id"))
+      rangeTop10(s.read.parquet(dir))
     },
       // x19: at gate m the rollup is exact, so the oracle is the exact
       // range top-k with the same deterministic tie-break (count desc,
       // key asc); bounds collapse onto the count and `guaranteed` is
       // literal true
-topkRollupSql),
+      topkRollupSql),
 
     Entry("x5_bucketed_join", (s, d) => {
       // fixed per-entry dir, NOT createTempDirectory: the harness invokes

@@ -140,9 +140,6 @@ object Media {
             to_binary(lit("aa" * 16), lit("hex"))).otherwise(col("payload")))
       Multimodal.mediaEntropy(media)
     },
-      // m5: the m4 closure re-derived, then the corpus minus the target's
-      // whole cluster (the target is the first planted original, so it is
-      // guaranteed an edge to its twin and therefore a row in lbl)
       // m6: the same length-difference symbol counts over the same hex
       // rendering (DuckDB md5 IS the payload hex), identical planting
       {
@@ -183,6 +180,9 @@ object Media {
         .select(col("doc_id").as("media_id"), md5(col("text")).as("payload_md5"))
         .orderBy("media_id")
     },
+      // m5: the m4 closure re-derived, then the corpus minus the target's
+      // whole cluster (the target is the first planted original, so it is
+      // guaranteed an edge to its twin and therefore a row in lbl)
       mediaClusterSql + ", " +
         "tgt AS (SELECT min(doc_id) AS t FROM documents WHERE doc_id % 20 = 7), " +
         "trep AS (SELECT rep AS r FROM lbl, tgt WHERE media_id = t), " +

@@ -449,6 +449,8 @@ object Olap {
         s.read.parquet(s"$d/supplier.parquet"),
         s.read.parquet(s"$d/nation.parquet"),
         s.read.parquet(s"$d/lineitem.parquet")),
+      // o22: the honest three-layer nested form — supplier IN (pairs
+      // HAVING sum > 45 AND part IN (prefix parts))
       "SELECT s_suppkey, s_name, n_name FROM supplier " +
         "JOIN nation ON s_nationkey = n_nationkey " +
         "WHERE s_suppkey IN (SELECT l_suppkey FROM lineitem " +
@@ -488,8 +490,6 @@ object Olap {
       Relational.promoRevenueShare(
         s.read.parquet(s"$d/part.parquet"),
         lineitemWide(s, d)),
-      // o22: the honest three-layer nested form — supplier IN (pairs
-      // HAVING sum > 45 AND part IN (prefix parts))
       // o24: the same single-pass conditional-aggregate ratio — exact
       // decimal sums, one double division, round-6/round-2
       "SELECT round(promo * 100 / total, 6)::DOUBLE AS promo_pct, " +
@@ -564,6 +564,8 @@ object Olap {
         s.read.parquet(s"$d/part.parquet"),
         s.read.parquet(s"$d/orders.parquet"),
         s.read.parquet(s"$d/lineitem.parquet")),
+      // o27: profit per nation×year, the same retail-price cost proxy,
+      // per-row decimal difference summed exactly
       "SELECT n_name AS nation, year(o_orderdate) AS o_year, " +
         "round(sum((l_extendedprice * (1 - l_discount))::DECIMAL(18,6) " +
         "- (0.5 * p_retailprice * l_quantity)::DECIMAL(18,6)), 2)::DOUBLE AS sum_profit " +
@@ -582,6 +584,7 @@ object Olap {
     Entry("o31_revenue_concentration", (s, d) =>
       Relational.revenueConcentration(
         s.read.parquet(s"$d/orders.parquet")),
+      // o31: naive global-window rank (the oracle may single-sort; the
       // engine may not), same decile assignment and floor-div micros
       "WITH pc AS (SELECT o_custkey AS cust, " +
         "sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS rev FROM orders GROUP BY 1), " +
@@ -604,9 +607,6 @@ object Olap {
     // exact revenue cents
     Entry("o32_rfm_segments", (s, d) =>
       Relational.rfmSegments(s.read.parquet(s"$d/orders.parquet")),
-      // o27: profit per nation×year, the same retail-price cost proxy,
-      // per-row decimal difference summed exactly
-      // o31: naive global-window rank (the oracle may single-sort; the
       // o32: the same naive global row_number windows (three of them) —
       // the engine's three bucketed ranks must be value-invisible; same
       // (rank−1)·5 // n + 1 quantile rule, same day diffs vs the corpus

@@ -59,6 +59,23 @@ object OracleSql {
       "hit AS (SELECT p.doc_id, p.p FROM pos p JOIN rep r USING (s)), " +
       "isl AS (SELECT doc_id, p, p - row_number() OVER (PARTITION BY doc_id ORDER BY p) AS g FROM hit) "
 
+  /** The d12/d13 rewrite tail after a per-doc `cuts(doc_id, start_tok,
+    * end_tok, nt)` CTE: removed-token counts, and the md5 of each doc's
+    * tokens outside every cut, reassembled in order.
+    */
+  val spanRewriteSql: String =
+    ", agg AS (SELECT doc_id, sum(nt) AS removed_tokens FROM cuts GROUP BY doc_id) " +
+      ", posd AS (SELECT doc_id, unnest(range(1, len(t) + 1)) AS i, unnest(t) AS tok FROM toks) " +
+      ", kept AS (SELECT pd.doc_id, pd.i, pd.tok FROM posd pd LEFT JOIN cuts c " +
+      "ON pd.doc_id = c.doc_id AND pd.i - 1 BETWEEN c.start_tok AND c.end_tok " +
+      "WHERE c.doc_id IS NULL) " +
+      ", rebuilt AS (SELECT doc_id, string_agg(tok, ' ' ORDER BY i) AS clean_text FROM kept GROUP BY doc_id) " +
+      "SELECT t.doc_id, len(t.t)::BIGINT AS n_tokens, " +
+      "coalesce(a.removed_tokens, 0)::BIGINT AS removed_tokens, " +
+      "md5(coalesce(r.clean_text, '')) AS clean_hash " +
+      "FROM toks t LEFT JOIN agg a USING (doc_id) LEFT JOIN rebuilt r USING (doc_id) " +
+      "ORDER BY t.doc_id"
+
   /** DuckDB twin of [[plantedSliceDocs]] (same residue/offset/frac). */
   def slicedDocsCte(residue: Int, offset: Long, frac: String): String =
     "WITH docs2 AS (SELECT doc_id, text FROM documents " +
@@ -859,6 +876,40 @@ object OracleSql {
       "FROM (SELECT w, cnt, unnest(range(1, len(w))) AS i FROM wc)), " +
       "top AS (SELECT a, b FROM pr GROUP BY a, b ORDER BY sum(cnt) DESC, a, b LIMIT 1)"
 
+  /** t32/e39: [[Fixtures.plantedEncodingDocs]] rebuilt as `planted` (chr()
+    * code points) and `c`, each doc's char count and its replacement,
+    * control and mojibake occurrence counts.
+    */
+  val encodingCountsSql: String =
+    "WITH planted AS (SELECT doc_id, CASE " +
+      "WHEN doc_id % 7 = 0 THEN text || ' ' || chr(195) || chr(169) || ' ' || chr(226) || chr(8364) || chr(157) || ' bad' " +
+      "WHEN doc_id % 11 = 0 THEN text || chr(0) || chr(1) || ' bin ' || chr(65533) " +
+      "ELSE text END AS text FROM documents), " +
+      "c AS (SELECT doc_id, length(text)::BIGINT AS n_chars, " +
+      "len(regexp_extract_all(text, '\\x{FFFD}'))::BIGINT AS n_replacement, " +
+      "len(regexp_extract_all(text, '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]'))::BIGINT AS n_control, " +
+      "len(regexp_extract_all(text, '\\x{C3}[\\x{80}-\\x{BF}]|\\x{E2}\\x{20AC}'))::BIGINT AS n_mojibake FROM planted)"
+
+  /** [[T]] plus `dt`: each document's (doc_id, source, n_tok) standard-token
+    * count.
+    */
+  val sourceTokensCte: String =
+    T + ", dt AS (SELECT t.doc_id, d.source, len(t.t)::BIGINT AS n_tok " +
+      "FROM toks t JOIN documents d ON t.doc_id = d.doc_id)"
+
+  /** p8/p13: the Knuth-hash coin keeps each document of [[sourceTokensCte]]
+    * with its source's keep fraction `kf`, which `frac` computes from the
+    * per-source (`bysrc`) and corpus (`tot`) token totals.
+    */
+  def sourceKeepSql(frac: String): String =
+    sourceTokensCte + ", " +
+      "bysrc AS (SELECT source, sum(n_tok) AS src_tok FROM dt GROUP BY 1), " +
+      "tot AS (SELECT sum(n_tok)::DOUBLE AS corpus_tok FROM dt), " +
+      frac +
+      "SELECT doc_id, source, n_tok FROM dt JOIN frac USING (source) " +
+      "WHERE ((doc_id * 2654435761) % 4294967296) % 1000000 < kf * 1000000 " +
+      "ORDER BY doc_id"
+
   /** q8/e15/e16: the 'red' and 'widget' document frequencies and the
     * document count over the dataSample column of `cur`.
     */
@@ -884,6 +935,18 @@ object OracleSql {
       "THEN 1 ELSE 0 END AS new_s FROM e), " +
       "s2 AS (SELECT *, sum(new_s) OVER " +
       "(PARTITION BY user_id ORDER BY us, event_id) AS sess FROM s), "
+
+  /** j16/e33: the top-20 session paths. `head` adds CTEs over the event
+    * rows `e`; `p` builds (user_id, sess, path) from the session positions
+    * `s3` of [[sessionsSql]]'s sessions.
+    */
+  def topPathsSql(head: String, p: String): String =
+    eventsUsSql + head + sessionsSql +
+      "s3 AS (SELECT *, row_number() OVER " +
+      "(PARTITION BY user_id, sess ORDER BY us, event_id) AS pos FROM s2), " +
+      p +
+      "SELECT path, count(*)::BIGINT AS n_sessions FROM p " +
+      "GROUP BY 1 ORDER BY n_sessions DESC, path LIMIT 20"
 
   /** d9/e25/e26: d3's exact-Jaccard pairs restricted to corpus × batch
     * (batch ids start at 300000).
@@ -935,6 +998,41 @@ object OracleSql {
   val windowCountsSql: String =
     "SELECT time_bucket(INTERVAL 1 HOUR, ts) AS window_start, event_type, count(*) AS cnt, " +
       "sum(value::DECIMAL(18,6))::DOUBLE AS sum_value FROM events GROUP BY 1, 2 ORDER BY 1, 2"
+
+  /** x11/x13: per event_type row count and exact-decimal value sum of the
+    * events `where` selects.
+    */
+  def typeTotalsSql(where: String): String =
+    "SELECT event_type, count(*) AS cnt, " +
+      "sum(value::DECIMAL(18,6))::DOUBLE AS sum_value FROM events " +
+      where + "GROUP BY 1 ORDER BY 1"
+
+  /** j1/j4: each purchase (purchase_id, user_id, purchase_ts) with
+    * `clickCols` over DuckDB's ASOF LEFT JOIN to the user's latest click at
+    * or before it, clicks collapsed to max event_id per (user, ts).
+    */
+  def asOfClickSql(clickCols: String): String =
+    "WITH clicks AS (SELECT user_id, ts::TIMESTAMP AS click_ts, " +
+      "max(event_id) AS click_id FROM events WHERE event_type = 'click' GROUP BY 1, 2), " +
+      "purchases AS (SELECT event_id AS purchase_id, user_id, ts::TIMESTAMP AS purchase_ts " +
+      "FROM events WHERE event_type = 'purchase') " +
+      s"SELECT p.purchase_id, p.user_id, p.purchase_ts, $clickCols " +
+      "FROM purchases p ASOF LEFT JOIN clicks c " +
+      "ON p.user_id = c.user_id AND c.click_ts <= p.purchase_ts " +
+      "ORDER BY purchase_id"
+
+  /** The oracle of a pinned measurement (d16, v11, v25): the sf0.01
+    * `(method, hits, total, recall)` rows, emitted only when the exact
+    * fingerprint count(*)·100000 + sum(`sumCol`) of `table` equals `fp`;
+    * any other SF yields one PIN_STALE row carrying the fingerprint.
+    */
+  def pinnedRecallSql(table: String, sumCol: String, fp: Long, rows: Seq[String]): String =
+    s"WITH fp AS (SELECT (count(*)*100000 + sum($sumCol))::BIGINT AS v FROM $table) " +
+      "SELECT * FROM (VALUES " + rows.mkString(", ") +
+      s") AS t(method, hits, total, recall) WHERE (SELECT v FROM fp) = $fp " +
+      "UNION ALL SELECT 'PIN_STALE_expected_sf0.01', -1::BIGINT, " +
+      s"(SELECT v FROM fp), -1.0::DOUBLE WHERE (SELECT v FROM fp) <> $fp " +
+      "ORDER BY method"
 
   /** d14/v3: the planted embedding near-duplicate pairs. */
   val embeddingDupSql: String =

@@ -112,6 +112,8 @@ object Pretraining {
     // global sort); 1-row threshold broadcast, narrow bucketing map
     Entry("p15_perplexity_buckets", (s, d) =>
       graft.operators.Pipeline.perplexityBuckets(docs(s, d)).orderBy("doc_id"),
+      // p15: t16's chain to scores, quantile_cont thresholds (the same
+      // rank = q·(n−1) interpolation), value-threshold CASE
       T + ", bg AS (SELECT doc_id, unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bg FROM toks), " +
         "bc AS (SELECT doc_id, bg, count(*) AS c FROM bg GROUP BY 1, 2), " +
         "corpus AS (SELECT bg, sum(c) AS bcnt, string_split(bg, ' ')[1] AS w1 FROM bc GROUP BY bg), " +
@@ -147,6 +149,11 @@ object Pretraining {
       graft.operators.Pipeline.mixtureEpochPlan(docs(s, d),
         Map("src0" -> 500000L, "src1" -> 300000L, "src2" -> 200000L),
         budgetTokens = 10000L),
+      // p21: the same availability aggregate, CASE-literal weights, and
+      // floor-div plan arithmetic
+      // full-outer against the spec VALUES so a spec'd-but-absent source
+      // surfaces (the engine's documented headline case), and over_cap's
+      // null fallback mirrors the engine's planned > 0
       "WITH a AS (SELECT source, " +
         "sum(len(regexp_extract_all(text, '[^ \\t\\n\\r]+')))::BIGINT AS avail_tokens " +
         "FROM documents GROUP BY 1), " +
@@ -171,11 +178,6 @@ object Pretraining {
     // the derived-weights complement feeding p21's epoch planner
     Entry("p23_temperature_mix", (s, d) =>
       graft.operators.Pipeline.temperatureMixWeights(docs(s, d)),
-      // p21: the same availability aggregate, CASE-literal weights, and
-      // floor-div plan arithmetic
-      // full-outer against the spec VALUES so a spec'd-but-absent source
-      // surfaces (the engine's documented headline case), and over_cap's
-      // null fallback mirrors the engine's planned > 0
       // p23: the identical exact-isqrt weights (float seed, ±1 integer
       // correction), HUGEINT-widened floor-div shares, null boost when
       // the natural share floors to 0
@@ -221,8 +223,6 @@ object Pretraining {
         .dsirTopK(ds, ds.where(col("lang") === "en"), n = 50, vocabSize = 256)
         .orderBy("rank")
     },
-      // p15: t16's chain to scores, quantile_cont thresholds (the same
-      // rank = q·(n−1) interpolation), value-threshold CASE
       dsirSampleSql),
 
     // P24 SELECTION-AGREEMENT audit: DSIR (p19) vs classifier (p14)
@@ -282,18 +282,12 @@ object Pretraining {
       graft.operators.Pipeline.temperatureMix(docs(s, d)).orderBy("doc_id"),
       // p13: the tempered-share selection recomputed naively — sqrt of the
       // natural share, floor-quantized to e-12 units, normalized, same coin
-      T + ", dt AS (SELECT t.doc_id, d.source, len(t.t)::BIGINT AS n_tok " +
-        "FROM toks t JOIN documents d ON t.doc_id = d.doc_id), " +
-        "bysrc AS (SELECT source, sum(n_tok) AS src_tok FROM dt GROUP BY 1), " +
-        "tot AS (SELECT sum(n_tok)::DOUBLE AS corpus_tok FROM dt), " +
+      sourceKeepSql(
         "w AS (SELECT source, src_tok, corpus_tok, " +
         "floor(sqrt(src_tok::DOUBLE / corpus_tok) * 1e12)::BIGINT AS q FROM bysrc, tot), " +
         "qt AS (SELECT sum(q)::DOUBLE AS q_tot FROM w), " +
         "frac AS (SELECT source, least(1.0, 0.5 * corpus_tok * " +
-        "(q::DOUBLE / q_tot) / src_tok) AS kf FROM w, qt) " +
-        "SELECT doc_id, source, n_tok FROM dt JOIN frac USING (source) " +
-        "WHERE ((doc_id * 2654435761) % 4294967296) % 1000000 < kf * 1000000 " +
-        "ORDER BY doc_id"),
+        "(q::DOUBLE / q_tot) / src_tok) AS kf FROM w, qt) ")),
 
     // Pipeline: quality-WEIGHTED downsampling (GPT-3 curation shape) —
     // keep-probability = quality, decided by an exact integer coin-vs-
@@ -356,15 +350,9 @@ object Pretraining {
     },
       // p8: same Knuth-hash selection as p2, fractions from the per-source
       // token totals and the linear share recipe (src k → (k+1)/210)
-      T + ", dt AS (SELECT t.doc_id, d.source, len(t.t)::BIGINT AS n_tok " +
-        "FROM toks t JOIN documents d ON t.doc_id = d.doc_id), " +
-        "bysrc AS (SELECT source, sum(n_tok) AS src_tok FROM dt GROUP BY 1), " +
-        "tot AS (SELECT sum(n_tok)::DOUBLE AS corpus_tok FROM dt), " +
+      sourceKeepSql(
         "frac AS (SELECT source, least(1.0, 0.5 * corpus_tok * " +
-        "((substr(source, 4)::INT + 1) / 210.0) / src_tok) AS kf FROM bysrc, tot) " +
-        "SELECT doc_id, source, n_tok FROM dt JOIN frac USING (source) " +
-        "WHERE ((doc_id * 2654435761) % 4294967296) % 1000000 < kf * 1000000 " +
-        "ORDER BY doc_id"),
+        "((substr(source, 4)::INT + 1) / 210.0) / src_tok) AS kf FROM bysrc, tot) ")),
 
     // Pipeline: deterministic sharded EXPORT — the delivery step. The
     // corpus is written as 8 one-file shard directories (Knuth-hash

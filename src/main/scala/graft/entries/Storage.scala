@@ -174,15 +174,8 @@ object Storage {
     // S11 CDC apply: the consumer half of the change feed — a replica
     // snapshot at version 1 advanced by the feed must equal the source's
     // current table (update applied, delete dropped, insert added)
-    Entry("s11_cdc_apply", (s, d) => {
-      val st = loadedStore(s, d) // commits version 1
-      val snapshot = st.currentAt(1L).toDF()
-      st.partialUpdate("000010", Map("title" -> "cdc-title"))
-      st.delete("000020")
-      corpusEntries(s, d, "000200", "000200").collect().foreach(st.upsert)
-      MetadataStore.applyChanges(snapshot, st.changesBetween(1L))
-        .select(col("id"), col("title")).orderBy("id")
-    },
+    Entry("s11_cdc_apply", (s, d) =>
+      cdcReplica(s, d).select(col("id"), col("title")).orderBy("id"),
       M + "SELECT id, CASE WHEN id = '000010' THEN 'cdc-title' ELSE title END AS title " +
         "FROM meta WHERE id BETWEEN '000001' AND '000050' AND id <> '000020' " +
         "UNION ALL SELECT id, title FROM meta WHERE id = '000200' ORDER BY id"),
@@ -192,15 +185,8 @@ object Storage {
     // fp-mod bucketing (never an engine-private hash), DECIMAL sum folded
     // mod 2^62 to a pinned BIGINT; oracle = the same checksum over the
     // independently reconstructed expected state
-    Entry("s25_replica_checksum", (s, d) => {
-      val st = loadedStore(s, d) // commits version 1
-      val snapshot = st.currentAt(1L).toDF()
-      st.partialUpdate("000010", Map("title" -> "cdc-title"))
-      st.delete("000020")
-      corpusEntries(s, d, "000200", "000200").collect().foreach(st.upsert)
-      MetadataStore.stateChecksum(
-        MetadataStore.applyChanges(snapshot, st.changesBetween(1L)))
-    },
+    Entry("s25_replica_checksum", (s, d) =>
+      MetadataStore.stateChecksum(cdcReplica(s, d)),
       // s25: the same 60-bit md5 fingerprints over the reconstructed
       // expected state, the same fp-mod bucketing and mod-2^62 fold; the
       // same injective NULL/'|' field encoding as stateChecksum ('N' for
@@ -267,7 +253,7 @@ object Storage {
     },
       // s15: a fresh join over the mutated tables — the engine's
       // affected-slice fold must land on it exactly
-joinViewSql),
+      joinViewSql),
 
     // S16 store-feed-driven JOIN-view maintenance: the s15 fold COMPOSED
     // with the s10 change feed — the feed itself supplies the changed-id
@@ -353,7 +339,7 @@ joinViewSql),
       // s17: the same fresh-join oracle as s15 — but the engine's answer
       // is read back from the ON-DISK view after an in-place partition
       // refresh, so the oracle checks the write path end-to-end
-joinViewSql),
+      joinViewSql),
 
     // SCD2 history build: the type-2 dimension the delta log already paid
     // for — one row per committed row IMAGE with its half-open
@@ -518,23 +504,7 @@ joinViewSql),
     // gated in-script, duplicate source ids refused (spec)
     Entry("s28_merge_into", (s, d) => {
       val st = loadedStore(s, d) // v1
-      val base = corpusEntries(s, d, "000001", "000300").toDF()
-      val fields = graft.model.MetadataSchema.structType.fields.toSeq
-      def nulledExcept(overrides: Map[String, org.apache.spark.sql.Column]) =
-        fields.map { f =>
-          overrides.getOrElse(f.name,
-            if (f.name == "id") col("id")
-            else lit(null).cast(f.dataType).as(f.name)).as(f.name)
-        }
-      val patch = base.where(col("id") === "000010")
-        .select(nulledExcept(Map("title" -> lit("merged-title"))): _*)
-        .withColumn("_delete", lit(false))
-      val del = base.where(col("id") === "000020")
-        .select(nulledExcept(Map.empty): _*).withColumn("_delete", lit(true))
-      val ins = base.where(col("id") === "000200").withColumn("_delete", lit(false))
-      val noop = base.where(col("id") === "000300")
-        .select(nulledExcept(Map.empty): _*).withColumn("_delete", lit(true))
-      val stats = st.merge(patch.unionByName(del).unionByName(ins).unionByName(noop))
+      val stats = st.merge(mergeScript(s, d))
       require(stats == graft.store.MetadataStore.MergeStats(1L, 1L, 1L),
         s"unexpected merge stats: $stats")
       st.current.toDF()

@@ -62,7 +62,7 @@ object Streams {
       EventStream.foldTransitionLog(s, deltas)
     },
       // e29: the stream-folded matrix must equal the batch-free recompute
-markovSql),
+      markovSql),
 
     // E32 STREAMING freshness fold: c13's recency statistic kept current
     // by ingest — the fold family's third mergeable class (MAX log,
@@ -189,13 +189,7 @@ markovSql),
       dsirSampleSql),
 
     Entry("e15_stream_idf_fold", (s, d) => {
-      val deltas = scratch("e15-deltas")
-      val src = staged("e15-src")(
-        Corpus.metadata(s, d).where(col("id").between("000051", "000090"))
-          .select("id", "dataSample").repartition(4).write.parquet(_))
-      val base = Corpus.metadata(s, d).where(col("id") <= "000050")
-      val stats0 = QueryCompiler.idfStatsTable(base, Seq("red", "widget"))
-      EventStream.streamIdfDeltaFold(s, src, deltas, Seq("red", "widget"))
+      val (stats0, deltas) = streamedIdfDeltas(s, d, "e15")
       QueryCompiler.idfStatsWithDeltas(stats0,
           s.read.parquet(s"$deltas/batches"))
         .orderBy("term")
@@ -407,13 +401,7 @@ markovSql),
     // StreamingMultimodalSpec, including a staged stale replay and a
     // second no-op compaction pass)
     Entry("e16_idf_log_compaction", (s, d) => {
-      val deltas = scratch("e16-deltas")
-      val src = staged("e16-src")(
-        Corpus.metadata(s, d).where(col("id").between("000051", "000090"))
-          .select("id", "dataSample").repartition(4).write.parquet(_))
-      val base = Corpus.metadata(s, d).where(col("id") <= "000050")
-      val stats0 = QueryCompiler.idfStatsTable(base, Seq("red", "widget"))
-      EventStream.streamIdfDeltaFold(s, src, deltas, Seq("red", "widget"))
+      val (stats0, deltas) = streamedIdfDeltas(s, d, "e16")
       EventStream.compactIdfDeltaLog(s, deltas, upToBatch = 2L)
       QueryCompiler.idfStatsWithDeltas(stats0,
           EventStream.readDeltaLog(s, deltas))
@@ -447,22 +435,7 @@ markovSql),
     // the batch merge — s28's oracle VERBATIM
     Entry("e42_stream_merge", (s, d) => {
       val st = loadedStore(s, d) // v1
-      val base = corpusEntries(s, d, "000001", "000300").toDF()
-      val fields = graft.model.MetadataSchema.structType.fields.toSeq
-      def nulledExcept(overrides: Map[String, org.apache.spark.sql.Column]) =
-        fields.map { f =>
-          overrides.getOrElse(f.name,
-            if (f.name == "id") col("id")
-            else lit(null).cast(f.dataType).as(f.name)).as(f.name)
-        }
-      val feed = base.where(col("id") === "000010")
-        .select(nulledExcept(Map("title" -> lit("merged-title"))): _*)
-        .withColumn("_delete", lit(false))
-        .unionByName(base.where(col("id") === "000020")
-          .select(nulledExcept(Map.empty): _*).withColumn("_delete", lit(true)))
-        .unionByName(base.where(col("id") === "000200").withColumn("_delete", lit(false)))
-        .unionByName(base.where(col("id") === "000300")
-          .select(nulledExcept(Map.empty): _*).withColumn("_delete", lit(true)))
+      val feed = mergeScript(s, d)
       val src = scratch("e42-src")
       graft.util.FsUtil.deleteRecursively(java.nio.file.Paths.get(src))
       graft.util.FsUtil.deleteRecursively(
@@ -521,13 +494,7 @@ markovSql),
     // ≡ the batch aggregate by shared stage; same planted damage as t32
     // so the fold has live positives
     Entry("e39_stream_encoding", (s, d) => {
-      val planted = docs(s, d).select(col("doc_id"),
-        when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" \u00c3\u00a9 \u00e2\u20ac\u009d bad")))
-          .when(col("doc_id") % 11 === 0,
-            concat(col("text"), lit("\u0000\u0001 bin \ufffd")))
-          .otherwise(col("text")).as("text"))
-      val src = staged("e39-src")(planted.repartition(4).write.parquet(_))
+      val src = staged("e39-src")(plantedEncodingDocs(s, d).repartition(4).write.parquet(_))
       val deltas = scratch("e39-deltas")
       EventStream.streamEncodingFold(s, src, deltas)
       graft.operators.TextAnalysis.encodingReport(
@@ -538,14 +505,7 @@ markovSql),
       // e39: the identical planted damage and regex classes as t32,
       // aggregated to the corpus report — the stream-folded totals must
       // re-sum to exactly this; HUGEINT-widened corpus ppm
-      "WITH planted AS (SELECT doc_id, CASE " +
-        "WHEN doc_id % 7 = 0 THEN text || ' ' || chr(195) || chr(169) || ' ' || chr(226) || chr(8364) || chr(157) || ' bad' " +
-        "WHEN doc_id % 11 = 0 THEN text || chr(0) || chr(1) || ' bin ' || chr(65533) " +
-        "ELSE text END AS text FROM documents), " +
-        "c AS (SELECT doc_id, length(text)::BIGINT AS n_chars, " +
-        "len(regexp_extract_all(text, '\\x{FFFD}'))::BIGINT AS n_replacement, " +
-        "len(regexp_extract_all(text, '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]'))::BIGINT AS n_control, " +
-        "len(regexp_extract_all(text, '\\x{C3}[\\x{80}-\\x{BF}]|\\x{E2}\\x{20AC}'))::BIGINT AS n_mojibake FROM planted), " +
+      encodingCountsSql + ", " +
         "f AS (SELECT *, CASE WHEN n_chars > 0 THEN " +
         "((n_replacement + n_control + n_mojibake) * 1000000) // n_chars END AS bad_ppm FROM c) " +
         "SELECT count(*)::BIGINT AS n_docs, " +
@@ -565,7 +525,7 @@ markovSql),
         .select(col("window_start"), col("event_type"), col("cnt"),
           col("sum_value").cast("double").as("sum_value"))
         .orderBy("window_start", "event_type"),
-windowCountsSql),
+      windowCountsSql),
 
     // Streaming over a JSONL event feed: the e1 aggregation ingesting
     // line-delimited JSON (the live-tail file-source shape) — must produce
@@ -576,7 +536,7 @@ windowCountsSql),
           col("sum_value").cast("double").as("sum_value"))
         .orderBy("window_start", "event_type"),
       // e6 must reproduce e1 exactly from the JSONL staging of the same events
-windowCountsSql),
+      windowCountsSql),
 
     // E10 incremental ingest across invocations: the landing-directory
     // pattern — half the events land, a checkpointed AvailableNow run
@@ -643,7 +603,7 @@ windowCountsSql),
       // e25: the stream-maintained signature index must answer the SAME
       // incremental dedup as d9 — identical expected pairs, identical
       // honest text-recomputing oracle
-incrementalDedupSql),
+      incrementalDedupSql),
 
     // E26 SIGNATURE-LOG compaction: the e16/e21 lifecycle discipline on
     // the third log type — aged batch directories fold into the batch=-1
@@ -657,7 +617,7 @@ incrementalDedupSql),
     },
       // e26: compaction is a physical row-identical rewrite — the folded
       // index answers the same pairs
-incrementalDedupSql),
+      incrementalDedupSql),
 
     Entry("e11_stream_index_ingest", (s, d) => {
       val all = plantedTopKEmb(s, d)
@@ -683,10 +643,7 @@ incrementalDedupSql),
     // chiSquareFromCells makes stream ≡ batch — c17's oracle VERBATIM
     Entry("e36_stream_chi2", (s, d) => {
       val m = Corpus.metadata(s, d)
-      val key = expr("CAST(id AS INT)")
-      val v2 = m.where(key % 17 =!= 0)
-        .withColumn("category",
-          when(key % 13 === 0, lit("cat0")).otherwise(col("category")))
+      val v2 = recategorized(m)
       val src1 = staged("e36-src1")(m.repartition(4).write.parquet(_))
       val src2 = staged("e36-src2")(v2.repartition(4).write.parquet(_))
       val del1 = scratch("e36-deltas1"); val del2 = scratch("e36-deltas2")
@@ -766,18 +723,12 @@ incrementalDedupSql),
         ev0.unionByName(ev0).repartition(4).write.parquet(dir)
       }
       EventStream.streamSketchFold(s, src, rollup)
-      val est = graft.operators.SketchRollup.rangeDistinctEstimate(
-        s.read.parquet(s"$rollup/days"), "2024-01-05", "2024-01-15")
-      val ev = EventStream.withEventTime(events(s, d))
-      val exact = ev.where(col("ts") >= lit("2024-01-05") && col("ts") < lit("2024-01-15"))
-        .agg(countDistinct(col("user_id")).as("exact_users"))
-      exact.crossJoin(est)
-        .select(col("exact_users"),
-          (abs(col("est_distinct") / col("exact_users") - 1.0) <= 0.05).as("est_ok"))
+      rangeDistinctCheck(EventStream.withEventTime(events(s, d)),
+        s.read.parquet(s"$rollup/days"))
     },
       // e14: the x16 gate over the streaming-maintained rollup — exact
       // distinct from raw rows, sketch estimate within tolerance
-rangeDistinctSql),
+      rangeDistinctSql),
 
     // E20 STREAMING heavy-hitters maintenance — the x19 rollup kept
     // current by the ingest stream (the e14/e15 symmetry for the fourth
@@ -791,17 +742,12 @@ rangeDistinctSql),
       val log = scratch("e20-log")
       val src = staged("e20-src")(events(s, d).repartition(4).write.parquet(_))
       EventStream.streamTopKCountFold(s, src, log)
-      graft.operators.SketchRollup.rangeTopK(
-          graft.operators.SketchRollup.candidatesFromCountLog(
-            EventStream.readDeltaLog(s, log), m = 2048),
-          "2024-01-05", "2024-01-15", k = 10)
-        .select(col("key").as("user_id"), col("cnt_lb").as("n_events"),
-          col("cnt_ub"), col("guaranteed"))
-        .orderBy(col("n_events").desc, col("user_id"))
+      rangeTop10(graft.operators.SketchRollup.candidatesFromCountLog(
+        EventStream.readDeltaLog(s, log), m = 2048))
     },
       // e20/e21: the streamed count-delta log (raw, and compacted) re-sums
       // to the same exact counts, so the oracle is x19's query verbatim
-topkRollupSql),
+      topkRollupSql),
 
     // E21 count-log compaction — the e16 discipline on the e20 log: fold
     // aged batch directories (+ the existing compact segment) into ONE
@@ -814,15 +760,10 @@ topkRollupSql),
       val src = staged("e21-src")(events(s, d).repartition(4).write.parquet(_))
       EventStream.streamTopKCountFold(s, src, log)
       EventStream.compactTopKCountLog(s, log, upToBatch = 2L)
-      graft.operators.SketchRollup.rangeTopK(
-          graft.operators.SketchRollup.candidatesFromCountLog(
-            EventStream.readDeltaLog(s, log), m = 2048),
-          "2024-01-05", "2024-01-15", k = 10)
-        .select(col("key").as("user_id"), col("cnt_lb").as("n_events"),
-          col("cnt_ub"), col("guaranteed"))
-        .orderBy(col("n_events").desc, col("user_id"))
+      rangeTop10(graft.operators.SketchRollup.candidatesFromCountLog(
+        EventStream.readDeltaLog(s, log), m = 2048))
     },
-topkRollupSql),
+      topkRollupSql),
 
     // Streaming custom state: gap sessionization via flatMapGroupsWithState,
     // watermark-gated emission (trailing open sessions stay in state)
@@ -857,17 +798,11 @@ topkRollupSql),
       // e33: j16's chain VERBATIM plus the e2-style watermark cutoff —
       // only sessions whose last event + gap lies strictly below the
       // final watermark (max event ms − 1 h delay) are final and counted
-      eventsUsSql +
-        "wm AS (SELECT max(us // 1000) - 3600000 AS w FROM e), " +
-        sessionsSql +
-        "s3 AS (SELECT *, row_number() OVER " +
-        "(PARTITION BY user_id, sess ORDER BY us, event_id) AS pos FROM s2), " +
+      topPathsSql("wm AS (SELECT max(us // 1000) - 3600000 AS w FROM e), ",
         "ends AS (SELECT user_id, sess, max(us) AS last_us FROM s2 GROUP BY 1, 2), " +
         "p AS (SELECT s3.user_id, s3.sess, string_agg(event_type, '>' ORDER BY pos) AS path " +
         "FROM s3 JOIN ends USING (user_id, sess) CROSS JOIN wm " +
-        "WHERE pos <= 12 AND (last_us + 1800000000) // 1000 < wm.w GROUP BY 1, 2) " +
-        "SELECT path, count(*)::BIGINT AS n_sessions FROM p " +
-        "GROUP BY 1 ORDER BY n_sessions DESC, path LIMIT 20"),
+        "WHERE pos <= 12 AND (last_us + 1800000000) // 1000 < wm.w GROUP BY 1, 2) ")),
 
     // Streaming built-in state: the SAME sessionization via the native
     // session_window operator — inclusive gap merge at µs grain (an event

@@ -319,6 +319,8 @@ object Text {
     // audit beside p21's epoch plan; unknown rows stay visible
     Entry("t29_language_mix", (s, d) =>
       graft.operators.TextAnalysis.languageMix(docs(s, d)),
+      // t29: the same lang-ID CASE per doc, grouped to (source, lang)
+      // cells with within-source floor-div share micros
       T + s", sc AS (SELECT doc_id, $langScores FROM toks), " +
         "lg AS (SELECT d.source, CASE WHEN en >= es AND en >= de AND en >= fr AND en > 0 THEN 'en' " +
         "WHEN es >= de AND es >= fr AND es > 0 THEN 'es' WHEN de >= fr AND de > 0 THEN 'de' " +
@@ -335,8 +337,6 @@ object Text {
     // blend); deterministic structural counts, one codegen'd pass
     Entry("t30_readability", (s, d) =>
       graft.operators.TextAnalysis.readability(docs(s, d)),
-      // t29: the same lang-ID CASE per doc, grouped to (source, lang)
-      // cells with within-source floor-div share micros
       // t30: identical structural counts (std tokens, non-blank sentence
       // segments min 1, vowel-group runs) and the same micros formula —
       // each // on non-negative operands, final subtraction exact longs
@@ -360,29 +360,12 @@ object Text {
     // binary+replacement) so the gate has live positives; one narrow
     // codegen'd regex-count pass, RE2 ∩ java.regex class subset
     Entry("t32_encoding_profile", (s, d) => {
-      val base = docs(s, d)
-      val planted = base.select(col("doc_id"),
-        // planted damage, pure escapes: \u00c3\u00a9 = the e-acute
-        // double-encoding pair, \u00e2\u20ac\u009d = the right-quote one
-        when(col("doc_id") % 7 === 0,
-          concat(col("text"), lit(" \u00c3\u00a9 \u00e2\u20ac\u009d bad")))
-          // NUL + SOH binary leak + an admitted replacement char
-          .when(col("doc_id") % 11 === 0,
-            concat(col("text"), lit("\u0000\u0001 bin \ufffd")))
-          .otherwise(col("text")).as("text"))
-      graft.operators.TextAnalysis.encodingProfile(planted)
+      graft.operators.TextAnalysis.encodingProfile(plantedEncodingDocs(s, d))
     },
       // t32: the identical planted damage (chr() code points) and the
       // identical RE2 classes — occurrence counts, floor-div ppm,
       // coalesced flag
-      "WITH planted AS (SELECT doc_id, CASE " +
-        "WHEN doc_id % 7 = 0 THEN text || ' ' || chr(195) || chr(169) || ' ' || chr(226) || chr(8364) || chr(157) || ' bad' " +
-        "WHEN doc_id % 11 = 0 THEN text || chr(0) || chr(1) || ' bin ' || chr(65533) " +
-        "ELSE text END AS text FROM documents), " +
-        "c AS (SELECT doc_id, length(text)::BIGINT AS n_chars, " +
-        "len(regexp_extract_all(text, '\\x{FFFD}'))::BIGINT AS n_replacement, " +
-        "len(regexp_extract_all(text, '[\\x00-\\x08\\x0B\\x0C\\x0E-\\x1F]'))::BIGINT AS n_control, " +
-        "len(regexp_extract_all(text, '\\x{C3}[\\x{80}-\\x{BF}]|\\x{E2}\\x{20AC}'))::BIGINT AS n_mojibake FROM planted) " +
+      encodingCountsSql + " " +
         "SELECT doc_id, n_chars, n_replacement, n_control, n_mojibake, " +
         "CASE WHEN n_chars > 0 THEN ((n_replacement + n_control + n_mojibake) * 1000000) // n_chars END::BIGINT AS bad_ppm, " +
         "coalesce(CASE WHEN n_chars > 0 THEN ((n_replacement + n_control + n_mojibake) * 1000000) // n_chars END > 1000, false) AS flagged " +
@@ -487,9 +470,6 @@ object Text {
     // gate before t20's learned classifier
     Entry("t28_code_profile", (s, d) =>
       graft.operators.TextAnalysis.codeProfile(docs(s, d)),
-      // t26: ranks from the naive global row_number (the engine's bucketed
-      // prefix sum must be value-invisible), min-rank-decile first
-      // occurrences, cumulative sums over the decile spine
       // t28: same regexp symbol class, same trailing-empty-keeping line
       // split (DuckDB string_split ≡ Spark split limit -1), same
       // cross-multiplied flag
@@ -527,6 +507,9 @@ object Text {
     // first-occurrence decile = min-rank decile, all exact integers
     Entry("t26_vocab_growth", (s, d) =>
       TextAnalysis.vocabGrowth(docs(s, d)),
+      // t26: ranks from the naive global row_number (the engine's bucketed
+      // prefix sum must be value-invisible), min-rank-decile first
+      // occurrences, cumulative sums over the decile spine
       T + ", r AS (SELECT doc_id, row_number() OVER (ORDER BY doc_id) AS rnk, " +
         "count(*) OVER () AS n FROM documents), " +
         "dd AS (SELECT doc_id, ((rnk - 1) * 10) // n + 1 AS dec FROM r), " +
@@ -661,8 +644,7 @@ object Text {
       TextAnalysis.lengthProfile(docs(s, d)).orderBy("source"),
       // t14: interpolated percentiles share the rank = q·(n−1) rule between
       // Spark's percentile and DuckDB's quantile_cont — values match exactly
-      T + ", dt AS (SELECT t.doc_id, d.source, len(t.t)::BIGINT AS n_tok " +
-        "FROM toks t JOIN documents d ON t.doc_id = d.doc_id) " +
+      sourceTokensCte + " " +
         "SELECT source, count(*)::BIGINT AS n_docs, " +
         "round(quantile_cont(n_tok, 0.25), 6) AS p25, " +
         "round(quantile_cont(n_tok, 0.5), 6) AS p50, " +

@@ -55,30 +55,17 @@ object Vectors {
     // discipline on v24): pinned knob→recall curve behind the same SF
     // fingerprint guard — for range search, loss = in-radius neighbors
     // in unprobed cells, exactly what a caller sizing nprobe pays
-    Entry("v25_range_recall", (s, d) => {
-      import s.implicits._
-      val fp = emb(s, d)
-        .agg((count(lit(1)) * 100000 + sum(col("label"))).cast("long"))
-        .collect()(0).getLong(0)
-      if (fp != 50002270L)
-        Seq(("PIN_STALE_expected_sf0.01", -1L, fp, -1.0))
-          .toDF("method", "hits", "total", "recall")
-      else measuredRangeRecall(s, d)
-    },
+    Entry("v25_range_recall", (s, d) =>
+      pinnedRecall(s, emb(s, d), "label", 50002270L)(measuredRangeRecall(s, d)),
       // v25: the pinned partial-probe range recalls (554 exact in-radius
       // pairs over 50 organic queries at cos >= 0.25) behind the v11
       // fingerprint guard — moderate-cosine neighbors scatter across
       // cells, so range recall tracks probed-cell coverage much more
       // steeply than planted top-k does (0.38/0.55/0.78 at 4/8/16 of 32)
-      "WITH fp AS (SELECT (count(*)*100000 + sum(label))::BIGINT AS v FROM embeddings) " +
-        "SELECT * FROM (VALUES " +
-        "('range_nprobe16', 431::BIGINT, 554::BIGINT, 0.778::DOUBLE), " +
-        "('range_nprobe4', 211::BIGINT, 554::BIGINT, 0.3809::DOUBLE), " +
-        "('range_nprobe8', 305::BIGINT, 554::BIGINT, 0.5505::DOUBLE)" +
-        ") AS t(method, hits, total, recall) WHERE (SELECT v FROM fp) = 50002270 " +
-        "UNION ALL SELECT 'PIN_STALE_expected_sf0.01', -1::BIGINT, " +
-        "(SELECT v FROM fp), -1.0::DOUBLE WHERE (SELECT v FROM fp) <> 50002270 " +
-        "ORDER BY method"),
+      pinnedRecallSql("embeddings", "label", 50002270L, Seq(
+        "('range_nprobe16', 431::BIGINT, 554::BIGINT, 0.778::DOUBLE)",
+        "('range_nprobe4', 211::BIGINT, 554::BIGINT, 0.3809::DOUBLE)",
+        "('range_nprobe8', 305::BIGINT, 554::BIGINT, 0.5505::DOUBLE)"))),
 
     // V24 RANGE (radius) search over the persisted IVF index: every
     // corpus vector with round-6 cosine >= 0.25 of each query — result
@@ -169,6 +156,9 @@ object Vectors {
     // of exact integers round-6 (the j14 cosine discipline)
     Entry("v22_dim_correlation", (s, d) =>
       Similarity.dimensionCorrelation(emb(s, d)),
+      // v22: the same integer-micros moments (parallel unnest zips the
+      // position range with the values), HUGEINT sums ≡ decimal(38,0),
+      // the identical exact-integer variance filter and round-6 ratio
       "WITH q AS (SELECT vec_id, unnest(range(1, len(embedding) + 1))::BIGINT AS j, " +
         "round(unnest(embedding)::DOUBLE * 1000000, 0)::BIGINT AS i FROM embeddings), " +
         "m AS (SELECT a.j AS dim_a, b.j AS dim_b, count(*)::HUGEINT AS n, " +
@@ -188,11 +178,6 @@ object Vectors {
     // detector); one aggregate-HOF pass, no explode, no shuffle
     Entry("v27_norm_profile", (s, d) =>
       graft.operators.Similarity.normProfile(emb(s, d)),
-      // v22: the same integer-micros moments (parallel unnest zips the
-      // position range with the values), HUGEINT sums ≡ decimal(38,0),
-      // the identical exact-integer variance filter and round-6 ratio
-      // v26: same double-cast, same planted derivation, same quantized
-      // sums and sign-factored floor means (o30's portable form)
       // v27: the same quantize-first Σq² per vector (DOUBLE[] before the
       // round — the v26 rule), HUGEINT corpus sum, floor-div mean
       normProfileSql),
@@ -214,6 +199,8 @@ object Vectors {
             .otherwise(e).as("embedding"))
       Similarity.embeddingDrift(base, v2)
     },
+      // v26: same double-cast, same planted derivation, same quantized
+      // sums and sign-factored floor means (o30's portable form)
       "WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings), " +
         "v2 AS (SELECT vec_id, CASE WHEN vec_id % 7 = 0 THEN " +
         "e[1:3] || [e[4] + 0.25] || e[5:] ELSE e END AS e " +
@@ -476,20 +463,12 @@ object Vectors {
     // measurement reproduces bit-for-bit; the oracle pins the sf0.01
     // values — the recall knobs (bands, nprobe, shortlist) carry measured
     // numbers instead of scaladoc claims
-    Entry("v11_ann_recall", (s, d) => {
-      import s.implicits._
-      // SF fingerprint guard on BOTH sides: the pinned recalls describe
-      // sf0.01's organic geometry only — at any other SF the oracle emits
-      // a PIN_STALE marker, and the engine mirrors it (same row, fp in the
-      // total column) instead of measuring against stale pins
-      val fp = emb(s, d)
-        .agg((count(lit(1)) * 100000 + sum(col("label"))).cast("long"))
-        .collect()(0).getLong(0)
-      if (fp != 50002270L)
-        Seq(("PIN_STALE_expected_sf0.01", -1L, fp, -1.0))
-          .toDF("method", "hits", "total", "recall")
-      else measuredRecall(s, d)
-    },
+    // SF fingerprint guard on BOTH sides: the pinned recalls describe
+    // sf0.01's organic geometry only — at any other SF the oracle emits
+    // a PIN_STALE marker, and the engine mirrors it (same row, fp in the
+    // total column) instead of measuring against stale pins
+    Entry("v11_ann_recall", (s, d) =>
+      pinnedRecall(s, emb(s, d), "label", 50002270L)(measuredRecall(s, d)),
       // v11: measured recall@10 pinned at sf0.01 — every path is
       // hash-deterministic, so these integers reproduce bit-for-bit
       // (values measured by running the registered entry; see the entry
@@ -504,30 +483,25 @@ object Vectors {
       // stale branch would otherwise coerce the whole total column to
       // HUGEINT — a schema mismatch against Spark's LongType even when
       // every value matches
-      "WITH fp AS (SELECT (count(*)*100000 + sum(label))::BIGINT AS v FROM embeddings) " +
-        "SELECT * FROM (VALUES " +
-        "('ivf_lloyd_nprobe16', 420::BIGINT, 500::BIGINT, 0.84::DOUBLE), " +
-        "('ivf_lloyd_nprobe8', 329::BIGINT, 500::BIGINT, 0.658::DOUBLE), " +
-        "('ivf_nprobe16', 386::BIGINT, 500::BIGINT, 0.772::DOUBLE), " +
-        "('ivf_nprobe8', 275::BIGINT, 500::BIGINT, 0.55::DOUBLE), " +
-        "('ivfpq_np16_m8x64_sl150', 382::BIGINT, 500::BIGINT, 0.764::DOUBLE), " +
-        "('ivfpq_np20_m8x64_sl150', 427::BIGINT, 500::BIGINT, 0.854::DOUBLE), " +
-        "('lsh_16x4', 192::BIGINT, 500::BIGINT, 0.384::DOUBLE), " +
-        "('lsh_24x8', 425::BIGINT, 500::BIGINT, 0.85::DOUBLE), " +
-        "('pq_m8x32_sl50', 320::BIGINT, 500::BIGINT, 0.64::DOUBLE), " +
-        "('pq_m8x64_sl150', 474::BIGINT, 500::BIGINT, 0.948::DOUBLE), " +
-        "('sq_sl50', 500::BIGINT, 500::BIGINT, 1.0::DOUBLE)" +
-        ") AS t(method, hits, total, recall) WHERE (SELECT v FROM fp) = 50002270 " +
-        "UNION ALL SELECT 'PIN_STALE_expected_sf0.01', -1::BIGINT, " +
-        "(SELECT v FROM fp), -1.0::DOUBLE WHERE (SELECT v FROM fp) <> 50002270 " +
-        "ORDER BY method"),
+      pinnedRecallSql("embeddings", "label", 50002270L, Seq(
+        "('ivf_lloyd_nprobe16', 420::BIGINT, 500::BIGINT, 0.84::DOUBLE)",
+        "('ivf_lloyd_nprobe8', 329::BIGINT, 500::BIGINT, 0.658::DOUBLE)",
+        "('ivf_nprobe16', 386::BIGINT, 500::BIGINT, 0.772::DOUBLE)",
+        "('ivf_nprobe8', 275::BIGINT, 500::BIGINT, 0.55::DOUBLE)",
+        "('ivfpq_np16_m8x64_sl150', 382::BIGINT, 500::BIGINT, 0.764::DOUBLE)",
+        "('ivfpq_np20_m8x64_sl150', 427::BIGINT, 500::BIGINT, 0.854::DOUBLE)",
+        "('lsh_16x4', 192::BIGINT, 500::BIGINT, 0.384::DOUBLE)",
+        "('lsh_24x8', 425::BIGINT, 500::BIGINT, 0.85::DOUBLE)",
+        "('pq_m8x32_sl50', 320::BIGINT, 500::BIGINT, 0.64::DOUBLE)",
+        "('pq_m8x64_sl150', 474::BIGINT, 500::BIGINT, 0.948::DOUBLE)",
+        "('sq_sl50', 500::BIGINT, 500::BIGINT, 1.0::DOUBLE)"))),
 
     // Similarity: embedding-cosine near-dup pairs over the planted corpus —
     // exact answer = the 20 planted pairs, so the SRP-LSH blocking is held
     // to an all-pairs DuckDB oracle (recall must be 100% at cos ≈ 0.995)
     Entry("v3_embedding_neardup", (s, d) =>
       Similarity.cosineNearDupPairs(plantedEmb(s, d)).orderBy("a_id", "b_id"),
-embeddingDupSql),
+      embeddingDupSql),
 
     // Similarity × dedup composition: embedding near-dup pairs → connected-
     // component collapse — the image/audio dedup pipeline shape (detect
